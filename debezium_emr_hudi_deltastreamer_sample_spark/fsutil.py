@@ -33,12 +33,17 @@ atomically) — so there is NO visible-but-unresolved window: an
 incremental publisher that merges from the newest resolved commit can
 never observe a claimed-newer-but-empty tip from a LIVE writer and
 build past it (that was a silent lost update; see pointer_commit).
-Readers still treat an empty/unreadable pointer as burned — legacy
-claims from the old two-step protocol, or external tools, stay
-skipped-for-reads / counted-for-allocation. Stores that can neither
-hard-link nor conditionally create REFUSE the pointer protocol loudly
+An empty or unreadable pointer therefore has one meaning: NEVER
+PUBLISHED (a crashed claim from an older two-step writer, or an external
+tool). Readers skip it, name allocation counts it, retention removes it,
+and nothing waits on it. Stores that can neither hard-link nor
+conditionally create REFUSE the pointer protocol loudly
 (``_require_conditional_create``) instead of silently degrading the
 CAS to exists-check + PUT, where two writers can both "win" a name.
+
+Every versioned directory (schema sidecar, writer lease, snapshots,
+MOR base versions, rollup commits) goes through one ``CommitLog``:
+list, allocate past every claimed name, CAS-publish, verify, retain.
 
 Protocol selection: ``SPARK_GRAFT_COMMIT_PROTOCOL`` env
 (``rename``/``pointer``) overrides for tests and fuzz lanes; otherwise
@@ -47,6 +52,9 @@ object-store URI schemes get pointer, everything else rename."""
 from __future__ import annotations
 
 import os
+import re
+import uuid
+from typing import NamedTuple
 
 #: URI schemes whose directory rename is copy+delete (non-atomic): the
 #: rename-CAS can tear there, so commits go through the pointer protocol.
@@ -63,8 +71,11 @@ def commit_protocol(path: str) -> str:
     env = os.environ.get("SPARK_GRAFT_COMMIT_PROTOCOL")
     if env in ("rename", "pointer"):
         return env
-    scheme = path.split("://", 1)[0].split(":", 1)[0] if ":" in path else ""
-    return "pointer" if scheme.lower() in _OBJECT_STORE_SCHEMES else "rename"
+    return "pointer" if _object_store(path) else "rename"
+
+
+def _object_store(path: str) -> bool:
+    return ":" in path and path.split(":", 1)[0].lower() in _OBJECT_STORE_SCHEMES
 
 
 def rename_commit(
@@ -146,7 +157,7 @@ def rename_commit(
     # already removed it. Either way the name belongs to someone else.
     # Residual window: a crash BETWEEN the rename and this delete leaves
     # the stage nested inside the winner's commit — readers heal that via
-    # heal_nested_dirs on the listing path (commit dirs are flat by
+    # CommitLog.heal on the listing path (commit dirs are flat by
     # protocol, so any directory member is crash garbage).
     try:
         fs.delete(hpath(f"{target}/{base}"), True)
@@ -212,9 +223,9 @@ def _require_conditional_create(fs, hpath, path: str) -> None:
     schemes (HDFS-semantics stores reached via the env override) pass
     unconditionally — their ``create(overwrite=false)`` is an atomic
     namenode operation already."""
-    scheme = path.split("://", 1)[0].split(":", 1)[0] if ":" in path else ""
-    if scheme.lower() not in _OBJECT_STORE_SCHEMES:
+    if not _object_store(path):
         return
+    scheme = path.split(":", 1)[0].lower()
     key = str(fs.getUri())
     ok = _CONDITIONAL_CREATE_OK.get(key)
     if ok is None:
@@ -229,7 +240,7 @@ def _require_conditional_create(fs, hpath, path: str) -> None:
                     break
             except Exception:
                 pass
-        if not ok and scheme.lower() in ("s3", "s3a", "s3n"):
+        if not ok and scheme in ("s3", "s3a", "s3n"):
             try:
                 ok = bool(
                     fs.getConf().getBoolean(
@@ -270,25 +281,24 @@ def pointer_commit(fs, hpath, stage: str, target: str) -> bool:
     fully written or not at all). Object stores: ``create(overwrite=false)``
     + write + close is a single conditional PUT — the object materializes
     with content at close() — guarded by ``_require_conditional_create``.
+    Other stores (HDFS semantics, reached via the env override): content
+    is written to a temp sibling and renamed onto the pointer name — HDFS
+    refuses a rename onto an existing file, so that rename is the CAS.
 
     Readers resolve the pointer through ``list_commits``; an empty pointer
-    (a legacy two-step claim whose filler crashed, or external tooling)
-    resolves to ``content=None`` — skipped for reads, counted for name
-    allocation."""
+    (a crashed claim from an older two-step writer, or external tooling)
+    resolves to ``content=None``: never published."""
     ptr = f"{target}.commit"
     if fs.exists(hpath(target)) or fs.exists(hpath(ptr)):
         return False
     data = stage.encode("utf-8")
     # Hard-link branch requires BOTH a local-shaped path AND a local
     # resolved FileSystem (see _fs_is_local) — a scheme-less path under
-    # hdfs:// defaultFS must fall through to the fs.create CAS below,
-    # which is an atomic namenode op on HDFS-semantics stores.
+    # hdfs:// defaultFS must fall through to the namenode rename CAS below.
     local = _local_os_path(ptr) if _fs_is_local(fs) else None
     if local is not None:
-        import uuid as _uuid
-
         os.makedirs(os.path.dirname(local), exist_ok=True)
-        tmp = f"{local}.fill{_uuid.uuid4().hex}.tmp"
+        tmp = f"{local}.fill{uuid.uuid4().hex}.tmp"
         try:
             with open(tmp, "wb") as fh:
                 fh.write(data)
@@ -318,6 +328,19 @@ def pointer_commit(fs, hpath, stage: str, target: str) -> bool:
                 os.unlink(tmp)
             except OSError:
                 pass
+    if not _object_store(ptr):
+        tmp = f"{ptr}.{uuid.uuid4().hex}.tmp"
+        write_small_file(fs, hpath, tmp, data)
+        try:
+            won = bool(fs.rename(hpath(tmp), hpath(ptr)))
+        except Exception:
+            won = False
+        if not won:
+            try:
+                fs.delete(hpath(tmp), False)
+            except Exception:
+                pass
+        return won
     _require_conditional_create(fs, hpath, ptr)
     try:
         out = fs.create(hpath(ptr), False)
@@ -344,59 +367,14 @@ def publish_commit(fs, hpath, stage: str, target: str) -> bool:
     return rename_commit(fs, hpath, stage, target)
 
 
-def claim_stall_budget() -> float:
-    """Quiescence budget (seconds) before a claimed-but-unresolved commit
-    name may be declared burned. Env-overridable
-    (``SPARK_GRAFT_CLAIM_STALL_SEC``) so fuzz lanes and tests can tighten
-    or stretch it; the default trades ~1 s of publisher latency — paid
-    ONLY when an unresolved claim is actually in the way, never on the
-    hot path — for surviving multi-hundred-ms filler pauses (GC, slow
-    namenode) on the legacy two-step pointer stores."""
-    try:
-        return float(os.environ.get("SPARK_GRAFT_CLAIM_STALL_SEC", "1.0"))
-    except ValueError:
-        return 1.0
-
-
-def claim_is_stalled(
-    fs, hpath, ptr_path: str, seen: dict[str, tuple[object, float]],
-    budget_sec: float | None = None,
-) -> bool:
-    """Stall-based burned-claim arbiter: True only when the claim pointer
-    at ``ptr_path`` has shown NO liveness — (mtime, length) signature
-    unchanged — for ``budget_sec`` of monotonic time. A fixed wait count
-    (the round-11 shape, 4×50 ms) burned any LIVE legacy two-step filler
-    that paused >200 ms between create and close; the stall clock instead
-    resets whenever the claim's signature advances, so only a genuinely
-    quiescent claim ages toward burned. ``seen`` is the caller's
-    observation memory (ptr_path → (signature, first-seen-at)); a missing
-    pointer file (hole from retention, or rename-protocol name) yields a
-    None signature and ages like any other quiescent claim."""
-    import time as _time
-
-    if budget_sec is None:
-        budget_sec = claim_stall_budget()
-    try:
-        st = fs.getFileStatus(hpath(ptr_path))
-        sig: object = (st.getModificationTime(), st.getLen())
-    except Exception:
-        sig = None
-    now = _time.monotonic()
-    prev = seen.get(ptr_path)
-    if prev is None or prev[0] != sig:
-        seen[ptr_path] = (sig, now)
-        return False
-    return (now - prev[1]) >= budget_sec
-
-
 def list_commits(fs, hpath, spark, dir_path: str) -> list[tuple[str, str | None]]:
     """Commits under ``dir_path`` as (name, content_uri) pairs, unsorted —
     callers filter by their name pattern and sort. Directory members are
     rename-protocol commits (content = the directory itself); ``*.commit``
-    files are pointers (content = the staged dir they name, or None while
-    in-flight/burned — callers must skip None for reads but still treat
-    the NAME as allocated). One listing plus one small-file read per
-    pointer; rename-protocol tables pay no extra I/O."""
+    files are pointers (content = the staged dir they name, or None for a
+    pointer that was never published — callers skip None for reads but
+    still treat the NAME as allocated). One listing plus one small-file
+    read per pointer; rename-protocol tables pay no extra I/O."""
     try:
         if not fs.exists(hpath(dir_path)):
             return []
@@ -445,21 +423,130 @@ def delete_commit(fs, hpath, dir_path: str, name: str, content: str | None) -> N
             pass
 
 
-def heal_nested_dirs(fs, hpath, commit_uri: str) -> None:
-    """Delete DIRECTORY members of a published commit dir.
+class Commit(NamedTuple):
+    """One claimed name of a ``CommitLog``. ``uri`` is None for a pointer
+    that was never published (empty or dangling)."""
 
-    Both commit protocols (KeyedTable snapshots, rollup commits) publish
-    FLAT directories — parquet parts, _SUCCESS, provenance markers; never
-    subdirectories. The one way a subdirectory appears is the
-    rename_commit move-INTO undo dying between its rename and its delete
-    (loser's staged uuid dir nested inside the winner's commit), which
-    breaks subsequent parquet reads of that commit with conflicting
-    directory structures. In-flight stages live under ``<path>__stage/``,
-    a sibling tree — never inside a commit — so deleting directory
-    members here can only remove crash garbage."""
-    for st in fs.listStatus(hpath(commit_uri)):
-        if st.isDirectory():
-            fs.delete(st.getPath(), True)
+    seq: int
+    tag: str | None
+    name: str
+    uri: str | None
+
+
+class CommitLog:
+    """A versioned directory of immutable commits named
+    ``<prefix><seq:012d>[_<tag>]`` — the one commit loop behind the schema
+    sidecar (``v``), the writer lease (``e``), KeyedTable snapshots
+    (``s``), MOR base versions (``v…_t<through>``) and rollup commits
+    (``c``, legacy ``c…_b<batch>_<run>``).
+
+    A publish allocates the seq past every CLAIMED name (never-published
+    pointers included), CAS-publishes the stage under it
+    (``publish_commit``), then lists once more. Retention deletes old
+    names, and a deleted name can be claimed again, so a publisher that
+    listed before three rival publishes can win a name BELOW the tip; its
+    content would never reach the newest commit. The post-win listing
+    catches that: any claimed name sorting above the won one makes the
+    entry stale — it is deleted and the publish reports a lost CAS, so
+    the caller rebuilds on the real tip. Published names are therefore
+    monotone. Retention then trims from that same post-win listing. A
+    successor that lists, builds and publishes entirely between the win
+    and that listing also sorts above it, so callers' rebuilds must be
+    idempotent: the schema union, the lease and snapshot re-claims are,
+    and a rollup finds its batch recorded in the successor's markers.
+
+    Every FileSystem call resolves ``hadoop_fs``/``list_commits``/
+    ``publish_commit`` through this module's globals at call time."""
+
+    def __init__(self, spark, dir_path: str, prefix: str) -> None:
+        self.spark = spark
+        self.dir = dir_path
+        self.prefix = prefix
+        self._name_re = re.compile(rf"^{re.escape(prefix)}(\d{{12}})(?:_(.+))?$")
+
+    def fs(self):
+        return hadoop_fs(self.spark, self.dir)
+
+    def entries(self, fs=None, hpath=None) -> list[Commit]:
+        """Every claimed name, oldest first (by seq, then name). Pass
+        ``(fs, hpath)`` when already resolved for this directory."""
+        if fs is None:
+            fs, hpath = self.fs()
+        out = []
+        for name, uri in list_commits(fs, hpath, self.spark, self.dir):
+            m = self._name_re.match(name)
+            if m:
+                out.append(Commit(int(m.group(1)), m.group(2), name, uri))
+        out.sort(key=lambda c: (c.seq, c.name))
+        return out
+
+    def attempts(self):
+        """Fresh listings for a publish loop, until 5 listings in a row
+        show no new claimed name. A lost CAS whose winner moved the tip is
+        progress — the caller rebuilds on it — so only stalled attempts
+        (persistent FS trouble) use up the budget."""
+        stalled, top = 0, -2
+        while stalled < 5:
+            entries = self.entries()
+            new_top = entries[-1].seq if entries else -1
+            stalled = 0 if new_top > top else stalled + 1
+            top = new_top
+            yield entries
+
+    def publish(
+        self,
+        entries: list[Commit],
+        stage: str,
+        tag: str | None = None,
+        keep: int = 2,
+    ) -> bool:
+        """CAS-publish ``stage`` as the next name past ``entries`` (the
+        caller's listing). True: it is the newest claimed name, and
+        retention kept it and the ``keep - 1`` newest published names
+        below it, deleting the rest (never-published pointers included).
+        False: lost — rebuild on a fresh listing; the stage may be gone (a
+        rename consumed it, or the stale entry was deleted with it)."""
+        fs, hpath = self.fs()
+        seq = entries[-1].seq + 1 if entries else 0
+        name = f"{self.prefix}{seq:012d}" + (f"_{tag}" if tag else "")
+        fs.mkdirs(hpath(self.dir))
+        if not publish_commit(fs, hpath, stage, f"{self.dir}/{name}"):
+            return False
+        after = self.entries(fs, hpath)
+        if after and (after[-1].seq, after[-1].name) > (seq, name):
+            mine = next((c.uri for c in after if c.name == name), None)
+            delete_commit(fs, hpath, self.dir, name, mine)
+            return False
+        below = [c for c in after if c.name != name]
+        published = [c.name for c in below if c.uri is not None]
+        kept = set(published[max(0, len(published) - keep + 1):])
+        for c in below:
+            if c.name not in kept:
+                delete_commit(fs, hpath, self.dir, c.name, c.uri)
+        return True
+
+    def heal(self, uri: str) -> list[str] | None:
+        """File names of one published commit, after deleting its
+        DIRECTORY members; None when the commit is gone (retention).
+
+        Commits are FLAT (parquet parts, _SUCCESS, markers). The one way a
+        subdirectory appears is ``rename_commit``'s move-INTO undo dying
+        between its rename and its delete — the loser's stage nested in
+        the winner's commit, which breaks parquet reads of it. In-flight
+        stages live in a sibling tree, never inside a commit, so deleting
+        directory members here only removes crash garbage."""
+        fs, hpath = self.fs()
+        try:
+            members = fs.listStatus(hpath(uri))
+        except Exception:
+            return None
+        names = []
+        for st in members:
+            if st.isDirectory():
+                fs.delete(st.getPath(), True)
+            else:
+                names.append(st.getPath().getName())
+        return names
 
 
 def hadoop_fs(spark, path: str):
@@ -672,11 +759,10 @@ def swap_table_dir(
     ``_test_after_*`` are crash-injection seams for the deterministic
     recovery tests; never passed in production code."""
     import json as _json
-    import uuid as _uuid
 
     recover_table_swap(spark, path)  # clear any stale torn swap first
     fs, hpath = hadoop_fs(spark, path)
-    retire = f"{path}__retire/{_uuid.uuid4().hex}"
+    retire = f"{path}__retire/{uuid.uuid4().hex}"
     journal = table_swap_journal(path)
     write_small_file(
         fs,
@@ -707,12 +793,15 @@ def swap_table_dir(
         # The destination reappeared between retire and publish (an
         # external writer bypassing the lease): LocalFileSystem's rename
         # moved the stage INSIDE it. Undo and fail loudly rather than
-        # serve a nested half-table.
+        # serve a nested half-table. The journal goes (a recovery would
+        # read "swap completed" and delete the retired copy), so the error
+        # is the one record of where the pre-swap table now lives.
         fs.delete(hpath(f"{path}/{base}"), True)
         fs.delete(hpath(journal), False)
         raise RuntimeError(
             f"table swap: {path} was recreated mid-swap by a writer "
-            "outside the lease — publish aborted"
+            f"outside the lease — publish aborted; the pre-swap table is "
+            f"kept at {retire}"
         )
     if _test_after_publish is not None:
         _test_after_publish()

@@ -64,8 +64,8 @@ def build_bloom(
     strings. One execution of the (typically shuffle-heavy distinct-gram)
     plan instead of the historical persist + count + toLocalIterator
     (two passes, driver-serial hashing). ``n`` falls out of the collected
-    length, so sizing needs no separate count; ``max_items`` keeps the
-    same guard-rail contract (16 B × max_items = 80 MB driver ceiling).
+    length, so sizing needs no separate count; ``max_items`` bounds the
+    collect itself (16 B × max_items = 80 MB driver ceiling).
     Bit-identical to the historical build: same hash pairs, same (m, k)
     from the same n, and OR is order-insensitive.
 
@@ -80,16 +80,19 @@ def build_bloom(
                 {"h1": h1.view("int64"), "h2": h2.view("int64")}
             )
 
+    # The limit bounds the collect itself: at most max_items + 1 pairs
+    # reach the driver, and the extra one is what trips the guard.
     pairs = (
         df.filter(F.col(col).isNotNull())
         .select(col)
         .mapInPandas(hash_parts, schema="h1 long, h2 long")
+        .limit(max_items + 1)
         .toPandas()
     )
     n = len(pairs)
     if n > max_items:
         raise ValueError(
-            f"bloom build side has {n} items > max_items={max_items}; "
+            f"bloom build side has more than max_items={max_items} items; "
             "use the exact broadcast semi-join or shard the filter"
         )
     m, k = bloom_params(n, fp_rate)

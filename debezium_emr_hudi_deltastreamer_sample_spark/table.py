@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .fsutil import CommitLog
 from .operators.merge import cdc_meta_columns, merge_upsert
 
 
@@ -60,54 +61,31 @@ class SchemaSidecar:
     upsert's own ``current = self.read()`` then rewrites partitions
     WITHOUT it (permanent loss, no error).
 
-    Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json).
-    Publish is the repo's standard stage + commit-CAS (fsutil.publish_commit)
-    with a monotone-union retry loop, so racing writers can only WIDEN the
-    schema, never clobber each other's columns; retention keeps the two
-    newest versions (in-flight readers of the previous one stay valid).
-    Readers (``KeyedTable.read``, MOR delta reads) apply the sidecar as the
-    explicit parquet read schema — per-file missing columns null-fill,
-    column order is stable, and no footer lottery remains. Missing or
-    unreadable sidecar falls back to today's footer inference (+ the
-    ``merge_schema`` knob), so pre-sidecar tables stay readable."""
-
-    #: Claimed-but-never-resolved sidecar versions already waited out
-    #: (legacy two-step pointer claims whose filler crashed). Process-wide:
-    #: sidecar objects are constructed per micro-batch, and re-paying the
-    #: unresolved-tip wait on every commit would tax the hot path for a
-    #: name that is burned forever.
-    _BURNED_VERSIONS: set[tuple[str, int]] = set()
-
-    #: Claim-pointer observation memory for the stall-based burned arbiter
-    #: (fsutil.claim_is_stalled), process-wide for the same reason as
-    #: _BURNED_VERSIONS. Bounded: entries are (ptr path → signature) pairs
-    #: and a long-lived driver touching many tables must not grow this
-    #: without limit (FIFO eviction, like _LEASE_OWNER_CACHE).
-    _CLAIM_SEEN: dict[str, tuple[object, float]] = {}
+    Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json),
+    one ``fsutil.CommitLog``. Publish is a monotone-union retry loop over
+    it, so racing writers can only WIDEN the schema, never clobber each
+    other's columns; retention keeps the two newest versions (in-flight
+    readers of the previous one stay valid). Readers (``KeyedTable.read``,
+    MOR delta reads) apply the sidecar as the explicit parquet read
+    schema — per-file missing columns null-fill, column order is stable,
+    and no footer lottery remains. Missing or unreadable sidecar falls
+    back to today's footer inference (+ the ``merge_schema`` knob), so
+    pre-sidecar tables stay readable."""
 
     def __init__(self, spark: SparkSession, table_path: str) -> None:
         self.spark = spark
         self.dir = f"{table_path}__schema"
         self.stage_root = f"{table_path}__schema_stage"
+        self._log = CommitLog(spark, self.dir, "v")
 
     def _fs(self):
-        from .fsutil import hadoop_fs
+        return self._log.fs()
 
-        return hadoop_fs(self.spark, self.dir)
-
-    def _versions(self, fs, hpath) -> list[tuple[int, str | None]]:
+    def _versions(self, fs=None, hpath=None) -> list[tuple[int, str | None]]:
         """(seq, content_uri) pairs, seq-ascending. ``content_uri`` is None
-        for an in-flight/burned pointer commit (claim without fill — see
-        fsutil.pointer_commit): unreadable, but its NAME is allocated, so
-        publishers must count it and readers must skip it."""
-        from .fsutil import list_commits
-
-        out = []
-        for name, content in list_commits(fs, hpath, self.spark, self.dir):
-            if name.startswith("v") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
+        for a pointer that was never published: unreadable, but its NAME
+        is allocated."""
+        return [(c.seq, c.uri) for c in self._log.entries(fs, hpath)]
 
     def _parse(self, fs, hpath, uri: str | None) -> T.StructType | None:
         import json as _json
@@ -124,6 +102,13 @@ class SchemaSidecar:
         except Exception:
             return None
 
+    def _newest(self, fs, hpath, uris) -> T.StructType | None:
+        for uri in reversed(uris):
+            schema = self._parse(fs, hpath, uri)
+            if schema is not None:
+                return schema
+        return None
+
     def current(self) -> T.StructType | None:
         """Newest parseable persisted schema, or None (no sidecar — caller
         falls back to footer inference). Tries the previous version when
@@ -138,12 +123,9 @@ class SchemaSidecar:
         fs, hpath = self._fs()
         for _attempt in range(3):
             versions = self._versions(fs, hpath)
-            for _, uri in reversed(versions):
-                schema = self._parse(fs, hpath, uri)
-                if schema is not None:
-                    return schema
-            if not versions:
-                return None
+            schema = self._newest(fs, hpath, [uri for _, uri in versions])
+            if schema is not None or not versions:
+                return schema
         return None
 
     def publish(self, schema: T.StructType, reset: bool = False) -> None:
@@ -153,76 +135,14 @@ class SchemaSidecar:
         and one small-file read per commit."""
         import uuid as _uuid
 
-        from .fsutil import delete_commit, publish_commit, write_small_file
+        from .fsutil import write_small_file
 
         fs, hpath = self._fs()
-        # Retry budget counts only STALLED attempts (no new version landed
-        # since the last look): a lost CAS where the winner's seq moved IS
-        # system progress — the union-only-grows loop converges — and a
-        # fixed attempt count starved publishers under real contention
-        # (found by tests/test_concurrency_hunt.py: 4 racing publishers ×
-        # pointer protocol exhausted 5 attempts while the table was
-        # perfectly healthy).
-        stalled, last_seq = 0, -1
-        while stalled < 5:
-            versions = self._versions(fs, hpath)
-            # Late resolution: a version we once declared burned that now
-            # shows RESOLVED was a live filler after all — drop it so the
-            # union below includes its columns.
-            SchemaSidecar._BURNED_VERSIONS.difference_update(
-                (self.dir, s) for s, uri in versions if uri is not None
-            )
-            # Unresolved-tip guard (same rationale as IncrementalRollup.
-            # apply_batch): a claimed name newer than the newest parseable
-            # version may be an in-flight publisher on a store where claim
-            # and fill are two visible steps — unioning against the OLDER
-            # version and publishing past the in-flight one would reopen
-            # the vanishing-column hole the sidecar exists to close.
-            # Stall-based budget (fsutil.claim_is_stalled): wait while the
-            # claim pointer shows liveness; only a claim quiescent for the
-            # full budget is burned — a fixed 4×50 ms wait burned any LIVE
-            # filler that paused >200 ms between create and close.
-            import time as _time
-
-            from .fsutil import claim_is_stalled
-
-            delay = 0.05
-            while (
-                versions
-                and versions[-1][1] is None
-                and (self.dir, versions[-1][0])
-                not in SchemaSidecar._BURNED_VERSIONS
-            ):
-                while len(SchemaSidecar._CLAIM_SEEN) >= 4096:
-                    SchemaSidecar._CLAIM_SEEN.pop(
-                        next(iter(SchemaSidecar._CLAIM_SEEN))
-                    )
-                if claim_is_stalled(
-                    fs, hpath,
-                    f"{self.dir}/v{versions[-1][0]:012d}.commit",
-                    SchemaSidecar._CLAIM_SEEN,
-                ):
-                    SchemaSidecar._BURNED_VERSIONS.add(
-                        (self.dir, versions[-1][0])
-                    )
-                    break
-                _time.sleep(delay)
-                delay = min(delay * 2, 0.4)
-                versions = self._versions(fs, hpath)
-                SchemaSidecar._BURNED_VERSIONS.difference_update(
-                    (self.dir, s) for s, uri in versions if uri is not None
-                )
-            top_seq = versions[-1][0] if versions else -1
-            stalled = 0 if top_seq > last_seq else stalled + 1
-            last_seq = top_seq
-            # Newest PARSEABLE version — a burned pointer (content=None)
-            # must not masquerade as "no sidecar": with reset=False that
-            # would skip the union and narrow the published schema.
-            cur = None
-            for _, uri in reversed(versions):
-                cur = self._parse(fs, hpath, uri)
-                if cur is not None:
-                    break
+        for entries in self._log.attempts():
+            # Newest PARSEABLE version — a never-published pointer must not
+            # masquerade as "no sidecar": with reset=False that would skip
+            # the union and narrow the published schema.
+            cur = self._newest(fs, hpath, [c.uri for c in entries])
             want = (
                 schema
                 if (reset or cur is None)
@@ -235,54 +155,13 @@ class SchemaSidecar:
             write_small_file(
                 fs, hpath, f"{stage}/schema.json", want.json().encode("utf-8")
             )
-            seq = versions[-1][0] + 1 if versions else 0
-            # Late-resolution recheck: when publishing past a burned tip,
-            # one final listing right before the CAS — if a claim resolved
-            # meanwhile (stalled-but-alive filler finished), the schema we
-            # unioned from is stale and publishing past it could narrow
-            # the sidecar. Rebuild instead. One listing, only on the
-            # burned-tip path — never when the tip was resolved.
-            if versions and versions[-1][1] is None:
-                old_resolved = max(
-                    (s for s, uri in versions if uri is not None), default=-1
-                )
-                fresh = self._versions(fs, hpath)
-                if max(
-                    (s for s, uri in fresh if uri is not None), default=-1
-                ) > old_resolved:
-                    SchemaSidecar._BURNED_VERSIONS.difference_update(
-                        (self.dir, s) for s, uri in fresh if uri is not None
-                    )
-                    try:
-                        fs.delete(hpath(stage), True)
-                    except Exception:
-                        pass
-                    continue
-            if publish_commit(fs, hpath, stage, f"{self.dir}/v{seq:012d}"):
-                # Retention: keep this one + the newest RESOLVED
-                # predecessor (in-flight readers of the previous version
-                # stay valid); drop everything else, burned pointer names
-                # included — this is their GC. Keeping versions[-1]
-                # unconditionally retained a BURNED tip while deleting the
-                # newest parseable predecessor, silently dropping the
-                # keep-one-predecessor guarantee exactly when the tip was
-                # unreadable.
-                keep_prev = max(
-                    (s for s, uri in versions if uri is not None),
-                    default=None,
-                )
-                for s, uri in versions:
-                    if s == keep_prev:
-                        continue
-                    delete_commit(fs, hpath, self.dir, f"v{s:012d}", uri)
-                try:
-                    fs.delete(hpath(self.stage_root), False)
-                except Exception:
-                    pass
+            # The stage root stays: deleting it when empty raced a
+            # concurrent publisher's mkdirs of its own stage below it.
+            if self._log.publish(entries, stage):
                 return
-            # Lost the CAS to a concurrent publisher: drop our stage (if
-            # the move-INTO undo didn't consume it), re-read, re-union —
-            # the loop converges because the union only grows.
+            # Lost the CAS (or won a stale name below the tip): drop our
+            # stage, re-read, re-union — the loop converges because the
+            # union only grows.
             try:
                 fs.delete(hpath(stage), True)
             except Exception:
@@ -418,7 +297,7 @@ class WriterLease:
 
     The lease is a monotone timeline of epoch commits under
     ``{table}__writer/`` (``e{seq:012d}`` dirs carrying an ``owner`` file,
-    published via fsutil.publish_commit). The NEWEST epoch's owner is the
+    published through fsutil.CommitLog). The NEWEST epoch's owner is the
     table's one legitimate writer:
 
     - ``ensure()`` before a data commit: newest epoch is mine → proceed
@@ -449,25 +328,17 @@ class WriterLease:
         self.dir = f"{table_path}__writer"
         self.stage_root = f"{table_path}__writer_stage"
         self.writer_id = writer_id or _default_writer_id()
+        self._log = CommitLog(spark, self.dir, "e")
 
     def _fs(self):
-        from .fsutil import hadoop_fs
+        return self._log.fs()
 
-        return hadoop_fs(self.spark, self.dir)
-
-    def _epochs(self, fs, hpath) -> list[tuple[int, str | None]]:
-        from .fsutil import list_commits
-
-        out = []
-        for name, content in list_commits(fs, hpath, self.spark, self.dir):
-            if name.startswith("e") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
+    def _epochs(self, fs=None, hpath=None) -> list[tuple[int, str | None]]:
+        return [(c.seq, c.uri) for c in self._log.entries(fs, hpath)]
 
     def _owner(self, fs, hpath, uri: str | None) -> str | None:
-        """Owner id recorded in one epoch commit; None while in-flight
-        (pointer claimed but unfilled, or owner file not yet readable)."""
+        """Owner id recorded in one epoch commit; None for a
+        never-published epoch or an unreadable owner file."""
         if uri is None:
             return None
         cached = _LEASE_OWNER_CACHE.get(uri)
@@ -489,15 +360,19 @@ class WriterLease:
         _LEASE_OWNER_CACHE[uri] = owner
         return owner
 
-    def _claim(self, fs, hpath, seq: int) -> bool:
+    def _claim(self, fs, hpath, epochs) -> bool:
+        """Publish the epoch after ``epochs`` with this writer as owner;
+        retention keeps it plus its newest published predecessor (an
+        in-flight check against the old epoch resolves, then fails loudly
+        on the newer one at its next ensure)."""
         import uuid as _uuid
 
-        from .fsutil import publish_commit, write_small_file
+        from .fsutil import write_small_file
 
         stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
         fs.mkdirs(hpath(stage))
         write_small_file(fs, hpath, f"{stage}/owner", self.writer_id.encode())
-        if publish_commit(fs, hpath, stage, f"{self.dir}/e{seq:012d}"):
+        if self._log.publish(epochs, stage):
             return True
         try:
             fs.delete(hpath(stage), True)
@@ -583,8 +458,6 @@ class WriterLease:
         STALE owner, so a live owner is never displaced. The fenced
         writer's own next ensure()/check() still raises — same fencing
         residual as a manual takeover."""
-        from .fsutil import delete_commit
-
         fs, hpath = self._fs()
         if take_over_if_stale is not None:
             floor = 2 * _heartbeat_interval()
@@ -597,75 +470,53 @@ class WriterLease:
                     "between touches. Raise the TTL (or lower "
                     "SPARK_GRAFT_HEARTBEAT_SEC)."
                 )
-        # Stall-based retry budget, like SchemaSidecar.publish: a lost
-        # claim race where the epoch seq moved is progress (another
-        # claimant landed — ownership gets re-evaluated against it), not a
-        # failure; only attempts where NOTHING moved count toward giving
-        # up (persistent FS trouble).
-        stalled, last_seq = 0, -2
-        while stalled < 5:
-            epochs = self._epochs(fs, hpath)
-            top_seq = epochs[-1][0] if epochs else -1
-            stalled = 0 if top_seq > last_seq else stalled + 1
-            last_seq = top_seq
+        # A lost claim race where the epoch seq moved is progress (another
+        # claimant landed — ownership gets re-evaluated against it), so only
+        # attempts where NOTHING moved count toward giving up.
+        for epochs in self._log.attempts():
             if epochs:
-                seq, uri = epochs[-1]
-                owner = self._owner(fs, hpath, uri)
+                newest = epochs[-1]
+                owner = self._owner(fs, hpath, newest.uri)
                 if owner == self.writer_id:
                     self._touch_heartbeat(fs, hpath)
                     return
-                if owner is not None and not take_over:
-                    if take_over_if_stale is not None and self._owner_stale(
-                        fs, hpath, owner, uri, take_over_if_stale
-                    ):
-                        # Stale-owner self-heal: fall through to claim the
-                        # next epoch, fencing the dead writer exactly like
-                        # a manual take_over.
-                        pass
-                    else:
-                        raise ConcurrentWriterError(
-                            f"table at {self.dir.removesuffix('__writer')} "
-                            f"is owned by writer {owner!r} (epoch {seq}); "
-                            f"this writer is {self.writer_id!r}. A "
-                            "concurrent read-merge-overwrite would "
-                            "interleave as silent lost updates — if the "
-                            "other writer is dead (crashed pipeline), "
-                            "construct the table with take_over=True to "
-                            "fence it and claim a new epoch, or pass "
-                            "take_over_if_stale=<seconds> to self-heal "
-                            "from owners with no recent heartbeat."
-                        )
-                elif owner is None and not take_over:
-                    # Unresolved newest claim: either a concurrent acquire
-                    # mid-fill (resolves in milliseconds) or a BURNED claim
-                    # from a crashed takeover (never resolves). Don't race
-                    # it and don't lock the legitimate owner out on first
-                    # sight either — spin through the stall budget so an
-                    # in-flight fill passes on the next listing, and only a
-                    # provably stuck claim raises (below, with take_over
-                    # guidance).
-                    import time as _time
-
-                    _time.sleep(0.05)
-                    continue
-                next_seq = seq + 1
-            else:
-                next_seq = 0
-            if self._claim(fs, hpath, next_seq):
-                # Retention: keep the new epoch + its predecessor (an
-                # in-flight check against the old epoch resolves, then
-                # fails loudly on the newer one at its next ensure).
-                for s, uri in epochs[:-1]:
-                    delete_commit(fs, hpath, self.dir, f"e{s:012d}", uri)
+                if take_over:
+                    pass  # claim past whatever holds the newest epoch
+                elif newest.uri is None:
+                    raise ConcurrentWriterError(
+                        f"the newest writer epoch at {self.dir} "
+                        f"({newest.name}) was never published — a takeover "
+                        "that crashed mid-claim. If no other writer is "
+                        "alive, construct the table with take_over=True to "
+                        "claim past it."
+                    )
+                elif owner is None:
+                    continue  # retention retired it mid-read: re-list
+                # take_over_if_stale: a stale owner falls through to the
+                # claim below, fenced exactly like a manual take_over.
+                elif take_over_if_stale is None or not self._owner_stale(
+                    fs, hpath, owner, newest.uri, take_over_if_stale
+                ):
+                    raise ConcurrentWriterError(
+                        f"table at {self.dir.removesuffix('__writer')} "
+                        f"is owned by writer {owner!r} (epoch {newest.seq}); "
+                        f"this writer is {self.writer_id!r}. A "
+                        "concurrent read-merge-overwrite would "
+                        "interleave as silent lost updates — if the "
+                        "other writer is dead (crashed pipeline), "
+                        "construct the table with take_over=True to "
+                        "fence it and claim a new epoch, or pass "
+                        "take_over_if_stale=<seconds> to self-heal "
+                        "from owners with no recent heartbeat."
+                    )
+            if self._claim(fs, hpath, epochs):
                 self._touch_heartbeat(fs, hpath)
                 return
-            # Lost the claim race — re-list and re-evaluate ownership.
         raise ConcurrentWriterError(
             f"could not acquire the writer lease at {self.dir}: persistent "
-            "claim races, or the newest epoch is an unresolved claim that "
-            "never fills — a takeover that crashed between claim and fill. "
-            "If no other writer is alive, construct the table with "
-            "take_over=True to claim past it."
+            "claim races or an unreadable newest epoch. If no other writer "
+            "is alive, construct the table with take_over=True to claim "
+            "past it."
         )
 
     def check(self) -> None:
@@ -777,6 +628,7 @@ class KeyedTable:
         #: file-version retention Hudi pays too), and ``read(as_of=n)``
         #: time-travels to commit n. 0 = current behavior, no extra writes.
         self.keep_history = max(0, keep_history)
+        self._snapshot_log = CommitLog(spark, f"{path}__snapshots", "s")
 
     def _ensure_lease(self) -> None:
         """Assert single-writer ownership, CONSUMING any takeover on the
@@ -861,38 +713,17 @@ class KeyedTable:
             f"the last {self.keep_history})"
         )
 
-    def _snapshot_commits(self) -> list[tuple[int, str | None]]:
-        """(seq, content_uri) for every CLAIMED snapshot name, oldest
-        first — content is None for an in-flight/burned pointer commit
-        (see fsutil.pointer_commit), which publishers must count for seq
-        allocation and readers must skip."""
-        from .fsutil import hadoop_fs, list_commits
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        out = []
-        for name, content in list_commits(
-            fs, hpath, self.spark, f"{self.path}__snapshots"
-        ):
-            if name.startswith("s") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
-
     def snapshots(self) -> list[tuple[int, str]]:
-        """Available (commit_seq, uri) snapshots, oldest first. Snapshot
-        commits are FLAT parquet dirs, so any directory member is crash
-        garbage from a torn rename_commit undo — healed here (one member
-        listing per retained snapshot; keep_history bounds the count)
-        before a time-travel read trips on conflicting structures."""
-        from .fsutil import hadoop_fs, heal_nested_dirs
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        out = []
-        for seq, uri in self._snapshot_commits():
-            if uri is not None:
-                heal_nested_dirs(fs, hpath, uri)
-                out.append((seq, uri))
-        return out
+        """Available (commit_seq, uri) snapshots, oldest first. Each one's
+        nested crash garbage is healed first (``CommitLog.heal``; one
+        member listing per retained snapshot, keep_history bounds the
+        count) before a time-travel read trips on it."""
+        log = self._snapshot_log
+        return [
+            (c.seq, c.uri)
+            for c in log.entries()
+            if c.uri is not None and log.heal(c.uri) is not None
+        ]
 
     def _publish_snapshot(self, df: DataFrame) -> None:
         """One immutable snapshot commit per write (only when
@@ -928,7 +759,7 @@ class KeyedTable:
         the old bytes alive, and retention's recursive delete only drops
         link counts. Only reached via ``_staged_swap`` (non-partitioned →
         the table dir is flat, matching the flat-snapshot contract that
-        ``heal_nested_dirs`` enforces). Stores without link(2) fall back
+        ``CommitLog.heal`` enforces). Stores without link(2) fall back
         to an FS-level copy — still no plan re-execution."""
         import os as _os
 
@@ -958,10 +789,11 @@ class KeyedTable:
 
     def _publish_snapshot_commit(self, populate, schema) -> None:
         """The snapshot commit engine: stage (via ``populate``), embed the
-        schema-as-of, CAS-publish into the timeline, trim retention."""
+        schema-as-of, publish into the timeline keeping the newest
+        ``keep_history`` snapshots."""
         import uuid as _uuid
 
-        from .fsutil import delete_commit, hadoop_fs, publish_commit
+        from .fsutil import hadoop_fs
 
         fs, hpath = hadoop_fs(self.spark, self.path)
         stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
@@ -970,49 +802,23 @@ class KeyedTable:
         # overwrite staging clears the dir): read(as_of=n) serves commit n
         # with commit n's own schema, not the current sidecar's.
         _embed_commit_schema(self.spark, stage, schema)
-        fs.mkdirs(hpath(f"{self.path}__snapshots"))
-        # Allocation counts BURNED pointer names too (content=None) — a
-        # crash between claim and fill wastes a seq forever; reallocating
-        # it would fail the CAS on every retry.
-        existing = self._snapshot_commits()
-        for _attempt in range(5):
-            seq = existing[-1][0] + 1 if existing else 0
-            if publish_commit(
-                fs, hpath, stage, f"{self.path}__snapshots/s{seq:012d}"
+        for existing in self._snapshot_log.attempts():
+            if self._snapshot_log.publish(
+                existing, stage, keep=self.keep_history
             ):
                 break
-            # A concurrent writer took this seq (or the rename failed
-            # transiently): re-stage if the attempt consumed the stage
-            # (move-INTO undo), re-list, and retry with a fresh number
-            # rather than silently losing the commit.
+            # A concurrent writer took this seq: re-stage if the attempt
+            # consumed the stage, and retry on a fresh listing rather than
+            # silently losing the commit.
             if not fs.exists(hpath(stage)):
                 populate(stage)
                 _embed_commit_schema(self.spark, stage, schema)
-            existing = self._snapshot_commits()
         else:
             fs.delete(hpath(stage), True)
             raise RuntimeError(
                 f"could not publish snapshot commit at {self.path}__snapshots "
-                "after 5 rename attempts"
+                "after 5 attempts"
             )
-        # Retention windows over RESOLVED (readable) snapshots only — a
-        # burned pointer name counted in the window would permanently
-        # displace one readable historical snapshot (keep_history=2 with a
-        # burned newest claim retained the burned name plus the new commit:
-        # ONE readable snapshot instead of two). Burned names are GC'd
-        # unconditionally, as compact() does for base versions; their seq
-        # then frees for reallocation, which is safe — a burned claim was
-        # never readable, so no as_of reader ever bound to it.
-        resolved = [(s, uri) for s, uri in existing if uri is not None]
-        keep = (
-            {s for s, _ in resolved[-(self.keep_history - 1):]}
-            if self.keep_history > 1
-            else set()
-        )
-        for s, uri in existing:
-            if s in keep:
-                continue
-            delete_commit(fs, hpath, f"{self.path}__snapshots", f"s{s:012d}", uri)
         # The staged dir was renamed away; drop its (now empty) parent.
         # Non-recursive delete refuses a non-empty dir, so a concurrent
         # writer's in-flight stage is never touched.
@@ -1421,6 +1227,8 @@ class DeltaLogTable:
         #: it explicitly, so drifted columns survive with the knob off.
         self.merge_schema = merge_schema
         self.delta_schema_sidecar = SchemaSidecar(spark, f"{path}/delta")
+        #: Base versions ``v<seq>_t<through + 1>``, one CommitLog.
+        self._base_log = CommitLog(spark, f"{path}/base__commits", "v")
 
     def _ensure_lease(self) -> None:
         """Single-writer assert with one-shot takeover consumption — same
@@ -1432,41 +1240,26 @@ class DeltaLogTable:
         # Legacy (pre-MVCC) single-dir base layout; still readable.
         return f"{self.path}/base"
 
-    def _base_commits_dir(self) -> str:
-        return f"{self.path}/base__commits"
-
     def _delta(self) -> str:
         return f"{self.path}/delta"
 
-    def _base_commits(self) -> list[tuple[int, int, str | None]]:
-        """Every CLAIMED base-version name as (seq, compacted_through,
-        content_uri), seq-ascending; content is None for an in-flight or
-        burned pointer commit (fsutil.pointer_commit) — such a version was
-        never published (its deltas were never retired), so readers skip it
-        and only seq ALLOCATION counts it. One directory listing plus one
-        small-file read per pointer."""
-        import re as _re
+    @staticmethod
+    def _through(c) -> int | None:
+        """Compacted-through batch id from a ``t<through + 1>`` tag."""
+        tag = c.tag or ""
+        return int(tag[1:]) - 1 if tag[:1] == "t" and tag[1:].isdigit() else None
 
-        from .fsutil import list_commits
-
-        fs, hpath = self._fs()
-        out = []
-        for name, content in list_commits(
-            fs, hpath, self.spark, self._base_commits_dir()
-        ):
-            m = _re.match(r"^v(\d{12})_t(\d{12})$", name)
-            if m:
-                out.append((int(m.group(1)), int(m.group(2)) - 1, content))
-        out.sort()
-        return out
-
-    def _base_versions(self) -> list[tuple[int, int, str]]:
+    def _base_versions(self, commits=None) -> list[tuple[int, int, str]]:
         """Published (readable) base versions as (seq, compacted_through,
-        uri), seq-ascending."""
+        uri), seq-ascending, from ``commits`` or a fresh listing. A
+        never-published name never retired its deltas, so only seq
+        ALLOCATION counts it."""
+        if commits is None:
+            commits = self._base_log.entries()
         return [
-            (seq, through, uri)
-            for seq, through, uri in self._base_commits()
-            if uri is not None
+            (c.seq, self._through(c), c.uri)
+            for c in commits
+            if c.uri is not None and self._through(c) is not None
         ]
 
     def _latest_base(self) -> tuple[int, int, str] | None:
@@ -1883,8 +1676,6 @@ class DeltaLogTable:
         """One compaction attempt — see ``compact`` for the contract."""
         import uuid as _uuid
 
-        from .fsutil import publish_commit
-
         # The fail-safe story below leans on strict scans RAISING when a
         # racing (out-of-process) compaction retires a file between this
         # listing and the stage write. spark.sql.files.ignoreMissingFiles
@@ -1910,22 +1701,16 @@ class DeltaLogTable:
         if not batches:
             return
         through = max(batches)
-        versions = self._base_versions()
-        # Heal crash garbage (a torn rename_commit undo nests the loser's
-        # stage inside the winner's version dir — see
-        # fsutil.heal_nested_dirs). Done here, not in _base_versions: reads
-        # are hot and pin a one-listing contract; compaction is rare and
-        # already walking the timeline.
-        from .fsutil import heal_nested_dirs
-
+        log = self._base_log
+        commits = log.entries()
+        versions = self._base_versions(commits)
+        # Heal crash garbage (CommitLog.heal). Done here, not in
+        # _base_versions: reads are hot and pin a one-listing contract;
+        # compaction is rare and already walking the timeline.
         for _, _, uri in versions:
-            heal_nested_dirs(fs, hpath, uri)
+            log.heal(uri)
         if versions and through <= versions[-1][1]:
             return  # every live delta dir is already folded — nothing to do
-        # Allocate past every CLAIMED name, burned pointers included — a
-        # crash between pointer claim and fill wastes that seq forever.
-        commits = self._base_commits()
-        seq = commits[-1][0] + 1 if commits else 0
         # read() applies exactly the deltas newer than the current base
         # version, UPPER-BOUNDED at the listing this compaction records as
         # compacted-through — a batch appended while the merge runs stays
@@ -1951,9 +1736,11 @@ class DeltaLogTable:
             # Schema-as-of rides inside the version commit (read_version
             # applies it; see _embedded_commit_schema).
             _embed_commit_schema(self.spark, stage, merged.schema)
-            fs.mkdirs(hpath(self._base_commits_dir()))
-            target = f"{self._base_commits_dir()}/v{seq:012d}_t{through + 1:012d}"
-            published = publish_commit(fs, hpath, stage, target)
+            # Name = seq + compacted-through: allocation passes every
+            # claimed name; retention keeps the two newest versions
+            # (in-flight readers of the previous one finish on immutable
+            # files).
+            published = log.publish(commits, stage, tag=f"t{through + 1:012d}")
         except BaseException:
             # A failed stage write is a full-table snapshot of garbage —
             # without this cleanup a deterministically-failing ASYNC
@@ -1980,30 +1767,7 @@ class DeltaLogTable:
                 fs.delete(hpath(f"{self._delta()}/ingest_batch={b}"), True)
             except Exception:
                 pass
-        # Retention: keep the two newest versions (in-flight readers of the
-        # previous one finish on immutable files) + drop the legacy dir.
-        # Walk the CLAIMED list so burned pointer names get GC'd too; the
-        # previous newest RESOLVED version is the one retained.
-        from .fsutil import delete_commit
-
-        # keep_uri from the COMMITS listing (the freshest one we hold), not
-        # the earlier `versions` listing: a concurrent compaction's version
-        # published between the two listings is in `commits` but not in
-        # `versions` — keying retention off the stale list would delete it
-        # moments after it was published, failing an in-flight reader that
-        # just resolved it (violating the keep-two-newest rule).
-        resolved_commits = [u for _, _, u in commits if u is not None]
-        keep_uri = resolved_commits[-1] if resolved_commits else None
-        for s, t, uri in commits:
-            if uri is not None and uri == keep_uri:
-                continue
-            delete_commit(
-                fs,
-                hpath,
-                self._base_commits_dir(),
-                f"v{s:012d}_t{t + 1:012d}",
-                uri,
-            )
+        # Drop the legacy single-dir base.
         try:
             fs.delete(hpath(self._base()), True)
         except Exception:

@@ -339,3 +339,139 @@ def test_rename_cas_plain_win_leaves_no_witness(spark, tmp_path):
         st.getPath().getName() for st in fs.listStatus(hpath(target))
     )
     assert names == ["data"], names
+
+
+def _touch_commit(fs, hpath, root, name):
+    """A commit named ``name`` under ``root``: a directory, or with a
+    ``.commit`` suffix a pointer file (empty unless it names content)."""
+    if name.endswith(".commit"):
+        fs.createNewFile(hpath(f"{root}/{name}"))
+    else:
+        fs.mkdirs(hpath(f"{root}/{name}"))
+
+
+@pytest.mark.parametrize(
+    "prefix,names,expected",
+    [
+        ("v", ["v000000000003", "v000000000000"], [(0, None), (3, None)]),
+        ("e", ["e000000000001", "e000000000002.commit"], [(1, None), (2, None)]),
+        ("s", ["s000000000002", "s12", "x000000000001"], [(2, None)]),
+        (
+            "v",
+            ["v000000000002_t000000000005", "v000000000001_t000000000003"],
+            [(1, "t000000000003"), (2, "t000000000005")],
+        ),
+        (
+            "c",
+            ["c000000000004", "c000000000050_b000000000007_oldrun"],
+            [(4, None), (50, "b000000000007_oldrun")],
+        ),
+        ("c", ["c000000000004", "c000000000004.commit"], [(4, None)]),
+    ],
+    ids=["sidecar", "lease", "snapshot", "mor-base", "rollup+legacy", "dual-claim"],
+)
+def test_commit_log_name_grammar(spark, tmp_path, prefix, names, expected):
+    """``<prefix><seq:012d>[_<tag>]`` covers every versioned directory;
+    other names are ignored. An empty pointer is listed (its name is
+    allocated) with no content; a pointer beside a directory of the same
+    name resolves to the directory."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import CommitLog
+
+    fs, hpath = hadoop_fs(spark, str(tmp_path))
+    root = str(tmp_path / "log")
+    fs.mkdirs(hpath(root))
+    for name in names:
+        _touch_commit(fs, hpath, root, name)
+    got = CommitLog(spark, root, prefix).entries()
+    assert [(c.seq, c.tag) for c in got] == expected
+    for c in got:
+        if fs.exists(hpath(f"{root}/{c.name}")):
+            assert c.uri.rstrip("/").endswith(f"/{c.name}")
+        else:
+            assert c.uri is None  # empty pointer: never published
+
+
+def _run_rival_first(log, rival):
+    """Make ``log``'s next publish call run ``rival()`` first: the caller
+    has already taken its listing, so the rival's commits land between
+    that listing and the CAS."""
+    real = log.publish
+
+    def publish(*args, **kwargs):
+        del log.publish
+        rival()
+        return real(*args, **kwargs)
+
+    log.publish = publish
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_stale_sidecar_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, protocol):
+    """Name reuse after retention, pinned without threads: A lists [v0];
+    B publishes v1..v3, and retention frees v1; A's CAS then wins the free
+    v1 BELOW the tip. A must drop that entry and re-publish on top, so its
+    column reaches the newest version."""
+    from pyspark.sql import types as T
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import SchemaSidecar
+
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    field = lambda n: T.StructField(n, T.IntegerType())  # noqa: E731
+    path = str(tmp_path / "t")
+    a, b = SchemaSidecar(spark, path), SchemaSidecar(spark, path)
+    a.publish(T.StructType([field("id")]))  # v0
+
+    def rival():
+        for col in ("b1", "b2", "b3"):
+            b.publish(T.StructType([field("id"), field(col)]))
+        assert [s for s, _ in b._versions()] == [2, 3]  # v1 is free again
+
+    _run_rival_first(a._log, rival)
+    a.publish(T.StructType([field("id"), field("a1")]))
+    versions = a._versions()
+    assert [s for s, _ in versions] == [3, 4]  # A's stale v1 is gone
+    assert set(a.current().names) == {"id", "b1", "b2", "b3", "a1"}
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_stale_rollup_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, protocol):
+    """Rollup twin: run A lists [c0]; run B commits c1..c3, and retention
+    frees c1; A's CAS wins c1 below the tip. A's batch must land on top
+    exactly once — not lost under B's newer commits, not double-counted."""
+    import datetime as dt
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
+        IncrementalRollup,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    path = str(tmp_path / "rollup")
+    roll = lambda: IncrementalRollup(  # noqa: E731
+        spark, path, ts_col="ts", bucket="1 hour", keys=["k"], value_col="v"
+    )
+    ts = dt.datetime(2024, 1, 1, 0, 30)
+    ev = lambda v: spark.createDataFrame(  # noqa: E731
+        [(ts, "k", v)], "ts timestamp, k string, v double"
+    )
+    a, b = roll(), roll()
+    b.apply_batch(ev(1.0), batch_id=0, run_id="b")  # c0
+
+    def rival():
+        for i, v in enumerate((2.0, 4.0, 8.0), start=1):
+            b.apply_batch(ev(v), batch_id=i, run_id="b")
+        assert [s for s, *_ in b._commits()] == [2, 3]  # c1 is free again
+
+    _run_rival_first(a._log, rival)
+    a.apply_batch(ev(16.0), batch_id=0, run_id="a")
+    commits = a._commits()
+    assert 1 not in [s for s, *_ in commits]  # A's stale c1 is gone
+    # The tip is A's commit, carrying both runs' high-water markers.
+    assert {(s, r, b) for s, b, r, _, _ in commits if s == 4} == {
+        (4, "a", 0),
+        (4, "b", 3),
+    }
+    [row] = a.read().collect()
+    assert (row.n, row.total) == (5, 31.0)
+    a.apply_batch(ev(16.0), batch_id=0, run_id="a")  # replay: deduplicated
+    [row] = a.read().collect()
+    assert (row.n, row.total) == (5, 31.0)

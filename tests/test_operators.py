@@ -1438,6 +1438,30 @@ def test_bloom_decontaminate_no_false_negatives(spark, sf_tiny):
     assert bloom_params(1000, 0.01)[0] >= 9000  # ~9.6 bits/elem at 1%
 
 
+def test_bloom_max_items_guard_trips_before_collect(spark, monkeypatch):
+    """The size guard bounds what reaches the driver: an oversized build
+    side collects at most max_items + 1 hash pairs, then raises."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.operators.bloom import (
+        build_bloom,
+    )
+
+    grams = spark.range(500).selectExpr("concat('g', id) AS ng")
+    collected: list[int] = []
+    real = type(grams).toPandas
+
+    def spy(self):
+        out = real(self)
+        collected.append(len(out))
+        return out
+
+    monkeypatch.setattr(type(grams), "toPandas", spy)
+    with pytest.raises(ValueError, match="max_items=10"):
+        build_bloom(grams, "ng", max_items=10)
+    assert collected and max(collected) <= 11, collected
+    words, m, k = build_bloom(grams.limit(10), "ng", max_items=10)
+    assert collected[-1] == 10 and words.any()
+
+
 def test_python_datasource_partitions_and_pushdown(spark):
     """Spark 4 Python Data Source: partition planning yields one task per
     planned range, pushFilters consumes the op-equality filter (source

@@ -5,10 +5,9 @@
    visible-but-unresolved pointer window for live writers.
 2. Stores that cannot do an atomic pointer CAS are REFUSED loudly
    (``_require_conditional_create``), never silently degraded.
-3. Incremental publishers (rollup, schema sidecar) spin on an unresolved
-   newest claim before merging from the resolved tip — a live in-flight
-   commit is never excluded from its successor (the silent-lost-update /
-   vanishing-column regression unique to two-step pointer claims).
+3. A never-published claim (empty pointer) is skipped for merges and
+   counted for allocation — the rollup keeps building on the published
+   tip.
 4. ``take_over`` is consumed once — two live take_over writers fence each
    other loudly instead of ping-ponging epochs with silent lost updates.
 5. Snapshot retention windows over RESOLVED snapshots; burned pointer
@@ -23,7 +22,6 @@ from __future__ import annotations
 
 import os
 import threading
-import time
 
 import pytest
 
@@ -38,7 +36,6 @@ from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
 from debezium_emr_hudi_deltastreamer_sample_spark.table import (
     ConcurrentWriterError,
     KeyedTable,
-    SchemaSidecar,
     WriterLease,
     pipeline_writer_scope,
 )
@@ -165,13 +162,13 @@ def test_require_conditional_create_refuses_and_accepts():
         hp,
         "s3a://bucket-c/t/c0.commit",
     )
-    # Non-object-store schemes pass unconditionally (namenode create is
-    # already an atomic claim; the spin guards cover the fill window).
+    # Non-object-store schemes pass unconditionally (their claim is an
+    # atomic namenode rename of an already-filled file).
     _require_conditional_create(_FakeFS("hdfs://nn"), hp, "hdfs://nn/t/c0.commit")
     fsutil._CONDITIONAL_CREATE_OK.clear()
 
 
-# ------------------------------------- 3. unresolved-tip guards (publishers)
+# --------------------------------------- 3. never-published claims (rollup)
 
 
 def _rollup(spark, path):
@@ -188,77 +185,11 @@ def _events(spark, rows):
     return spark.createDataFrame(rows, "ts timestamp, k string, v double")
 
 
-def test_rollup_waits_for_inflight_claim_no_lost_update(
-    spark, tmp_path, monkeypatch
-):
-    """A claimed-but-not-yet-resolved newest commit that RESOLVES while the
-    publisher waits: the publisher must merge from it, not from the stale
-    resolved tip — otherwise the in-flight commit's batch is excluded from
-    every successor and its (run, batch) marker blocks replay forever (the
-    ADVICE-high lost-update scenario, on stores where claim and fill are
-    still two steps)."""
-    import datetime as dt
-
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    path = str(tmp_path / "rollup")
-    r = _rollup(spark, path)
-    ts = dt.datetime(2024, 1, 1, 0, 30)
-    df0 = _events(spark, [(ts, "k1", 1.0)])
-    r.apply_batch(df0, batch_id=0, run_id="default")  # publishes c0
-
-    fs, hpath = r._hadoop()
-    [(_, c0_uri)] = [
-        (n, u)
-        for n, u in list_commits(fs, hpath, spark, r._commits_dir())
-        if u is not None
-    ]
-    # Simulate an in-flight OTHER-run publisher on a two-step store: claim
-    # c1 empty now, fill it (valid merged commit: c0 ∪ other-run batch 0)
-    # from a thread shortly after.
-    # Claim via raw OS IO, as a two-step-store writer would (going through
-    # fs.createNewFile would leave a Hadoop LocalFileSystem .crc sidecar
-    # for the EMPTY file, and the later raw fill would then fail checksum
-    # on read — an artifact of the local test double, not the protocol).
-    ptr = f"{r._commits_dir()}/c000000000001.commit"
-    open(ptr, "wb").close()
-    other_stage = f"{path}__stage/manualfill"
-    import pyspark.sql.functions as F
-
-    merged = (
-        spark.read.parquet(c0_uri)
-        .unionByName(r._partials(_events(spark, [(ts, "k2", 5.0)])))
-        .groupBy("bucket_start", "k")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("total").alias("total"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(other_stage)
-    fs.createNewFile(hpath(f"{other_stage}/_applied_b000000000000_other"))
-
-    def fill():
-        time.sleep(0.02)
-        with open(ptr, "wb") as fh:
-            fh.write(other_stage.encode())
-
-    filler = threading.Thread(target=fill)
-    filler.start()
-    # Publishes c2 — MUST build on c1 (the wait), not c0.
-    r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1, run_id="default")
-    filler.join()
-    got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
-    assert got == {("k1", 3.0), ("k2", 5.0)}  # k2 (in-flight commit) survived
-
-
 def test_rollup_burned_claim_waited_out_once_then_skipped(
     spark, tmp_path, monkeypatch
 ):
     """A claim that never resolves (crashed legacy filler) must not wedge
-    the publisher: after the bounded wait it is declared burned, skipped
-    for merges, counted for allocation — and remembered, so the next batch
-    does not re-pay the wait."""
+    the publisher: it is skipped for merges and counted for allocation."""
     import datetime as dt
 
     monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
@@ -269,7 +200,6 @@ def test_rollup_burned_claim_waited_out_once_then_skipped(
     fs, hpath = r._hadoop()
     fs.createNewFile(hpath(f"{r._commits_dir()}/c000000000001.commit"))  # burned
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 in r._burned_seqs
     # Allocation skipped the burned name: c2 is the new tip.
     names = sorted(
         n for n, u in list_commits(fs, hpath, spark, r._commits_dir()) if u
@@ -277,56 +207,9 @@ def test_rollup_burned_claim_waited_out_once_then_skipped(
     assert names[-1] == "c000000000002"
     got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
     assert got == {("k1", 3.0)}
-    # Remembered: the next apply must not wait again (bounded-time check).
-    t0 = time.perf_counter()
     r.apply_batch(_events(spark, [(ts, "k1", 4.0)]), batch_id=2)
-    assert time.perf_counter() - t0 < 30  # sanity only; no sleep-loop wedge
-
-
-def test_sidecar_waits_for_inflight_claim_no_narrowing(
-    spark, tmp_path, monkeypatch
-):
-    """Sidecar twin of the rollup wait: an in-flight WIDER version that
-    resolves during the wait must be unioned against — merging from the
-    older parseable version would publish past it and re-open the
-    vanishing-column hole."""
-    from pyspark.sql import types as T
-
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    side = SchemaSidecar(spark, str(tmp_path / "t"))
-    side.publish(
-        T.StructType(
-            [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
-        )
-    )  # v0: {a, b}
-    fs, hpath = side._fs()
-    ptr = f"{side.dir}/v000000000001.commit"
-    open(ptr, "wb").close()  # in-flight claim (raw OS IO: no .crc sidecar)
-    wider_stage = f"{side.stage_root}/manualfill"
-    fs.mkdirs(hpath(wider_stage))
-    wider = T.StructType(
-        [
-            T.StructField("a", T.IntegerType()),
-            T.StructField("b", T.StringType()),
-            T.StructField("c", T.DoubleType()),
-        ]
-    )
-    from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import write_small_file
-
-    write_small_file(
-        fs, hpath, f"{wider_stage}/schema.json", wider.json().encode("utf-8")
-    )
-
-    def fill():
-        time.sleep(0.02)
-        with open(ptr, "wb") as fh:
-            fh.write(wider_stage.encode())
-
-    filler = threading.Thread(target=fill)
-    filler.start()
-    side.publish(T.StructType([T.StructField("a", T.IntegerType())]))
-    filler.join()
-    assert {f.name for f in side.current().fields} == {"a", "b", "c"}
+    got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
+    assert got == {("k1", 7.0)}
 
 
 # -------------------------------------------- 4. take_over consumed once

@@ -1,26 +1,19 @@
 """Round-12 durability fixes, pinned.
 
-1. Stall-based burned-claim budgets (fsutil.claim_is_stalled): a LIVE
-   legacy two-step filler that pauses >200 ms between claim and fill is
-   no longer declared burned by the rollup / schema-sidecar publishers —
-   the stall clock resets whenever the claim pointer shows liveness, and
-   a late resolution is re-merged (un-burned) instead of being excluded
-   forever (ADVICE r11 #2; VERDICT r11 "What's wrong" #1).
-2. Pre-publish late-resolution recheck: a publisher building past burned
-   names takes one final listing before its CAS and rebuilds if any of
-   them resolved meanwhile.
+1. An empty pointer means never published: the rollup skips it for
+   merges and reads, allocates past it, and never waits on it.
+2. The schema sidecar's retention keeps the newest published predecessor
+   and removes never-published pointer names.
 3. ``pointer_commit``'s hard-link branch is gated on the RESOLVED
    FileSystem being local (``_fs_is_local``), not on path shape — a
    scheme-less path under a non-local fs.defaultFS falls through to the
    fs.create CAS (ADVICE r11 #1, the silent-lost-commit shape).
 4. ``os.link`` failures other than EEXIST are re-raised loudly naming the
    non-linkable store, not mistaken for a lost CAS (ADVICE r11 #5).
-5. SchemaSidecar retention keeps the newest RESOLVED predecessor and GCs
-   burned pointer names (ADVICE r11 #4).
-6. ``take_over_if_stale``: opt-in heartbeat/staleness lease self-heal —
+5. ``take_over_if_stale``: opt-in heartbeat/staleness lease self-heal —
    a live (heartbeating) owner is never displaced; a stale one is, under
    both commit protocols (round-11 VERDICT task 3).
-7. ``start_pipeline`` records a pid/host owner marker beside the
+6. ``start_pipeline`` records a pid/host owner marker beside the
    checkpoint and warns loudly on a foreign marker (shared-checkpoint
    detection, ADVICE r11 #3).
 """
@@ -30,16 +23,13 @@ from __future__ import annotations
 import datetime as dt
 import errno
 import os
-import threading
 import time
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
     _fs_is_local,
-    claim_is_stalled,
     hadoop_fs,
     list_commits,
     pointer_commit,
@@ -67,193 +57,39 @@ def _mk(spark, rows):
     return spark.createDataFrame(rows, "id int, v string, op string, _lsn long")
 
 
-# ------------------------------------------- 1+2. stall-based burned budget
-
-
-def test_rollup_survives_filler_stalled_past_old_budget(
-    spark, tmp_path, monkeypatch
-):
-    """THE round-12 'done' criterion: a legacy two-step filler stalled
-    >200 ms (beyond the round-11 fixed 4x50 ms budget) under the
-    env-override pointer path is NOT burned — the publisher waits out the
-    stall (liveness via the pointer's mtime/len signature) and its next
-    commit still includes the filler's data. No lost update."""
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    path = str(tmp_path / "rollup")
-    r = _rollup(spark, path)
-    ts = dt.datetime(2024, 1, 1, 0, 30)
-    r.apply_batch(_events(spark, [(ts, "k1", 1.0)]), batch_id=0)  # c0
-    fs, hpath = r._hadoop()
-    [(_, c0_uri)] = [
-        (n, u)
-        for n, u in list_commits(fs, hpath, spark, r._commits_dir())
-        if u is not None
-    ]
-    # Legacy two-step claim of c1 via raw OS IO (empty now, filled late).
-    ptr = f"{r._commits_dir()}/c000000000001.commit"
-    open(ptr, "wb").close()
-    other_stage = f"{path}__stage/manualfill"
-    merged = (
-        spark.read.parquet(c0_uri)
-        .unionByName(r._partials(_events(spark, [(ts, "k2", 5.0)])))
-        .groupBy("bucket_start", "k")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("total").alias("total"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(other_stage)
-    fs.createNewFile(hpath(f"{other_stage}/_applied_b000000000000_other"))
-
-    def fill():
-        time.sleep(0.45)  # > the old 4x50 ms budget, < the stall budget
-        with open(ptr, "wb") as fh:
-            fh.write(other_stage.encode())
-
-    filler = threading.Thread(target=fill)
-    filler.start()
-    r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    filler.join()
-    assert 1 not in r._burned_seqs
-    got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
-    # k2 (the stalled filler's commit) survived into the successor chain.
-    assert got == {("k1", 3.0), ("k2", 5.0)}
-
-
-def test_rollup_unburns_late_resolved_seq(spark, tmp_path, monkeypatch):
-    """A seq remembered as burned that later shows RESOLVED leaves the
-    burned set and the next merge builds from it — the memo must not
-    outlive the claim's late fill."""
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    path = str(tmp_path / "rollup")
-    r = _rollup(spark, path)
-    ts = dt.datetime(2024, 1, 1, 0, 30)
-    r.apply_batch(_events(spark, [(ts, "k1", 1.0)]), batch_id=0)  # c0
-    fs, hpath = r._hadoop()
-    [(_, c0_uri)] = [
-        (n, u)
-        for n, u in list_commits(fs, hpath, spark, r._commits_dir())
-        if u is not None
-    ]
-    # Resolved c1 on disk, but this instance remembers seq 1 as burned
-    # (the shape left behind if the fill landed after a burn decision).
-    other_stage = f"{path}__stage/manualfill"
-    merged = (
-        spark.read.parquet(c0_uri)
-        .unionByName(r._partials(_events(spark, [(ts, "k2", 7.0)])))
-        .groupBy("bucket_start", "k")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("total").alias("total"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
-    )
-    merged.write.mode("overwrite").parquet(other_stage)
-    fs.createNewFile(hpath(f"{other_stage}/_applied_b000000000000_other"))
-    with open(f"{r._commits_dir()}/c000000000001.commit", "wb") as fh:
-        fh.write(other_stage.encode())
-    r._burned_seqs.add(1)
-    r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 not in r._burned_seqs
-    got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
-    assert got == {("k1", 3.0), ("k2", 7.0)}
+# -------------------------------------------- 1+2. never-published pointers
 
 
 def test_rollup_truly_burned_claim_still_skipped_and_remembered(
     spark, tmp_path, monkeypatch
 ):
-    """The crashed-filler path still terminates: a claim that never shows
-    liveness is burned after the stall budget, skipped for merges, counted
-    for allocation — and the NEXT batch does not re-pay the wait."""
+    """A never-published claim (crashed filler) does not stop the rollup:
+    it is skipped for merges and counted for allocation, and later
+    batches keep building on the published tip."""
     monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    monkeypatch.setenv("SPARK_GRAFT_CLAIM_STALL_SEC", "0.3")
     path = str(tmp_path / "rollup")
     r = _rollup(spark, path)
     ts = dt.datetime(2024, 1, 1, 0, 30)
     r.apply_batch(_events(spark, [(ts, "k1", 1.0)]), batch_id=0)
     fs, hpath = r._hadoop()
-    fs.createNewFile(hpath(f"{r._commits_dir()}/c000000000001.commit"))
+    empty = f"{r._commits_dir()}/c000000000001.commit"
+    fs.createNewFile(hpath(empty))
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 in r._burned_seqs
-    t0 = time.perf_counter()
+    assert [s for s, _, _, _, _ in r._commits()][-1] == 2
+    assert not fs.exists(hpath(empty))  # retention removed the empty name
     r.apply_batch(_events(spark, [(ts, "k1", 4.0)]), batch_id=2)
-    # Remembered: no second stall wait (generous bound; the wait was 0.3s).
-    assert time.perf_counter() - t0 < 30
     got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
     assert got == {("k1", 7.0)}
-
-
-def test_claim_is_stalled_resets_on_liveness(spark, tmp_path, monkeypatch):
-    """Unit pin of the arbiter: signature change resets the stall clock;
-    quiescence for the budget trips it; a missing pointer ages too."""
-    fs, hpath = hadoop_fs(spark, str(tmp_path))
-    ptr = str(tmp_path / "x.commit")
-    open(ptr, "wb").close()
-    seen: dict = {}
-    assert claim_is_stalled(fs, hpath, ptr, seen, budget_sec=0.2) is False
-    time.sleep(0.1)
-    with open(ptr, "wb") as fh:  # liveness: len 0 -> 4 resets the clock
-        fh.write(b"live")
-    assert claim_is_stalled(fs, hpath, ptr, seen, budget_sec=0.2) is False
-    time.sleep(0.25)
-    assert claim_is_stalled(fs, hpath, ptr, seen, budget_sec=0.2) is True
-    missing: dict = {}
-    gone = str(tmp_path / "never.commit")
-    assert claim_is_stalled(fs, hpath, gone, missing, budget_sec=0.1) is False
-    time.sleep(0.15)
-    assert claim_is_stalled(fs, hpath, gone, missing, budget_sec=0.1) is True
-
-
-def test_sidecar_survives_filler_stalled_past_old_budget(
-    spark, tmp_path, monkeypatch
-):
-    """Sidecar twin of the rollup pin: a two-step filler stalled >200 ms
-    publishing a WIDER schema is waited out — the racing publish unions
-    WITH it instead of narrowing past it."""
-    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    side = SchemaSidecar(spark, str(tmp_path / "t"))
-    side.publish(T.StructType([T.StructField("a", T.IntegerType())]))
-    fs, hpath = side._fs()
-    # Two-step claim of v1, filled late with schema {a, extra}.
-    stage = f"{side.stage_root}/manualfill"
-    fs.mkdirs(hpath(stage))
-    wider = T.StructType(
-        [T.StructField("a", T.IntegerType()), T.StructField("extra", T.DoubleType())]
-    )
-    with open(f"{stage}/schema.json", "w") as fh:
-        fh.write(wider.json())
-    ptr = f"{side.dir}/v000000000001.commit"
-    open(ptr, "wb").close()
-
-    def fill():
-        time.sleep(0.45)
-        with open(ptr, "wb") as fh:
-            fh.write(stage.encode())
-
-    filler = threading.Thread(target=fill)
-    filler.start()
-    side.publish(
-        T.StructType(
-            [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
-        )
-    )
-    filler.join()
-    names = set(SchemaSidecar(spark, str(tmp_path / "t")).current().names)
-    assert names == {"a", "extra", "b"}  # the stalled filler's column survived
 
 
 def test_sidecar_retention_keeps_newest_resolved_predecessor(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r11 #4: with a BURNED tip, retention after the next publish
-    must keep the newest RESOLVED predecessor (in-flight readers stay
-    valid) and GC the burned pointer name — not retain the unreadable tip
-    while deleting the readable predecessor."""
+    """ADVICE r11 #4: with a never-published tip, retention after the next
+    publish must keep the newest RESOLVED predecessor (in-flight readers
+    stay valid) and remove the empty pointer name — not retain the
+    unreadable tip while deleting the readable predecessor."""
     monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", "pointer")
-    monkeypatch.setenv("SPARK_GRAFT_CLAIM_STALL_SEC", "0.2")
     side = SchemaSidecar(spark, str(tmp_path / "t"))
     s0 = T.StructType([T.StructField("a", T.IntegerType())])
     side.publish(s0)  # v0 (resolved)

@@ -163,10 +163,15 @@ def test_swap_refuses_externally_recreated_target(spark, tmp_path):
         with open(os.path.join(path, "intruder.parquet"), "w") as fh:
             fh.write("x")
 
-    with pytest.raises(RuntimeError, match="outside the lease|could not publish"):
+    with pytest.raises(RuntimeError, match="outside the lease") as err:
         swap_table_dir(spark, path, stage, _test_after_retire=recreate)
     # The recreated dir must not contain the nested stage.
     assert not os.path.exists(f"{path}/abc123")
+    # The journal is gone, so the error is the only pointer to the retired
+    # pre-swap table — which must still exist and hold the pre-swap rows.
+    retire = str(err.value).rsplit("kept at ", 1)[1]
+    assert retire.startswith(f"{path}__retire/") and os.path.isdir(retire)
+    assert sorted(r.id for r in spark.read.parquet(retire).collect()) == [0, 1]
 
 
 def test_linked_snapshots_survive_rewrites_and_retention(spark, tmp_path):

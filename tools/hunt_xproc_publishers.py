@@ -7,7 +7,7 @@ axes, each driven by independent child driver processes
 ``rollup``  — two processes drive ``IncrementalRollup.apply_batch`` on ONE
     rollup dir under different run ids (two pipelines feeding one
     continuous aggregate — legal multi-writer by design, safety rests
-    entirely on the commit-name CAS + unresolved-tip guard).
+    entirely on the commit-name CAS + the post-win tip check).
     Invariant: every batch both children reported COMMIT is folded into
     the final rollup EXACTLY once — per-key totals equal the additive sum
     over all committed batches (no lost update, no double count).
