@@ -282,8 +282,11 @@ def pointer_commit(fs, hpath, stage: str, target: str) -> bool:
     + write + close is a single conditional PUT — the object materializes
     with content at close() — guarded by ``_require_conditional_create``.
     Other stores (HDFS semantics, reached via the env override): content
-    is written to a temp sibling and renamed onto the pointer name — HDFS
-    refuses a rename onto an existing file, so that rename is the CAS.
+    is written to a dot-file inside the stage and renamed onto the pointer
+    name — HDFS refuses a rename onto an existing file, so that rename is
+    the CAS, and a claim that crashes before it leaves the temp file in
+    the stage (crash garbage of the stage tree), never in the commit
+    directory.
 
     Readers resolve the pointer through ``list_commits``; an empty pointer
     (a crashed claim from an older two-step writer, or external tooling)
@@ -329,7 +332,7 @@ def pointer_commit(fs, hpath, stage: str, target: str) -> bool:
             except OSError:
                 pass
     if not _object_store(ptr):
-        tmp = f"{ptr}.{uuid.uuid4().hex}.tmp"
+        tmp = f"{stage}/._ptr_{uuid.uuid4().hex}.tmp"
         write_small_file(fs, hpath, tmp, data)
         try:
             won = bool(fs.rename(hpath(tmp), hpath(ptr)))
@@ -447,13 +450,22 @@ class CommitLog:
     listed before three rival publishes can win a name BELOW the tip; its
     content would never reach the newest commit. The post-win listing
     catches that: any claimed name sorting above the won one makes the
-    entry stale — it is deleted and the publish reports a lost CAS, so
-    the caller rebuilds on the real tip. Published names are therefore
-    monotone. Retention then trims from that same post-win listing. A
-    successor that lists, builds and publishes entirely between the win
-    and that listing also sorts above it, so callers' rebuilds must be
-    idempotent: the schema union, the lease and snapshot re-claims are,
-    and a rollup finds its batch recorded in the successor's markers.
+    publish a lost CAS, so the caller rebuilds on the real tip.
+    Publishers only ever build on the newest published name, so a stale
+    entry is never built on. Retention trims from that same post-win
+    listing.
+
+    The check cannot tell a stale entry from one that a successor listed,
+    built on and published above inside the window between the win and
+    that listing. So a lost entry is only deleted when it falls outside
+    the ``keep`` newest published names. A stale entry lies there when
+    retention freed its name as a published commit (it did so under
+    ``keep`` newer ones); one freed as a never-published pointer may not,
+    and stays as an orphan below the tip until retention trims it. An
+    entry a successor built on stays inside, so readers bound to it keep
+    the documented window. Callers' rebuilds after such a false loss must
+    be idempotent: the schema union, the lease and snapshot re-claims
+    are, and a rollup finds its batch in the successor's manifest.
 
     Every FileSystem call resolves ``hadoop_fs``/``list_commits``/
     ``publish_commit`` through this module's globals at call time."""
@@ -504,23 +516,28 @@ class CommitLog:
         caller's listing). True: it is the newest claimed name, and
         retention kept it and the ``keep - 1`` newest published names
         below it, deleting the rest (never-published pointers included).
-        False: lost — rebuild on a fresh listing; the stage may be gone (a
-        rename consumed it, or the stale entry was deleted with it)."""
+        False: lost — rebuild on a fresh listing with a fresh stage. The
+        stage is no longer the caller's: it was deleted, or it is the
+        content of an entry kept inside the ``keep`` window."""
         fs, hpath = self.fs()
         seq = entries[-1].seq + 1 if entries else 0
         name = f"{self.prefix}{seq:012d}" + (f"_{tag}" if tag else "")
         fs.mkdirs(hpath(self.dir))
         if not publish_commit(fs, hpath, stage, f"{self.dir}/{name}"):
+            try:
+                fs.delete(hpath(stage), True)
+            except Exception:
+                pass
             return False
         after = self.entries(fs, hpath)
+        published = [c.name for c in after if c.uri is not None]
         if after and (after[-1].seq, after[-1].name) > (seq, name):
-            mine = next((c.uri for c in after if c.name == name), None)
-            delete_commit(fs, hpath, self.dir, name, mine)
+            if name not in published[-keep:]:
+                mine = next((c.uri for c in after if c.name == name), None)
+                delete_commit(fs, hpath, self.dir, name, mine)
             return False
-        below = [c for c in after if c.name != name]
-        published = [c.name for c in below if c.uri is not None]
-        kept = set(published[max(0, len(published) - keep + 1):])
-        for c in below:
+        kept = set(published[-keep:])
+        for c in after:
             if c.name not in kept:
                 delete_commit(fs, hpath, self.dir, c.name, c.uri)
         return True

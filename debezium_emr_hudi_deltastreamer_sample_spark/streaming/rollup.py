@@ -15,15 +15,16 @@ batch becomes ONE immutable commit directory published with a single
 filesystem rename. The commit NAME is the sequence number alone — the
 compare-and-swap property requires that any two writers publishing at the
 same seq collide on the name, whatever batch/run they carry — and the
-(batch id, run id) provenance rides INSIDE the directory as an empty
-marker file written into the stage BEFORE the rename, so there is still
-no separate marker write that could diverge from the data. A
-crash before the publish leaves only staging garbage (never visible to
-readers); after it the batch is durably applied. The publish goes through
-fsutil.CommitLog: atomic directory rename on local/HDFS, and on object
-stores (where directory rename is a torn copy+delete) the commit-POINTER
-protocol — stage immutably, CAS one tiny pointer file via conditional
-create — so the single-rename guarantee holds there too.
+applied-batch record rides INSIDE the directory as a small manifest
+(``_applied.json``: every run's high-water batch id) written into the
+stage BEFORE the rename, so there is no separate marker write that could
+diverge from the data. A crash before the publish leaves only staging
+garbage (never visible to readers); after it the batch is durably
+applied. The publish goes through fsutil.CommitLog: atomic directory
+rename on local/HDFS, and on object stores (where directory rename is a
+torn copy+delete) the commit-POINTER protocol — stage immutably, CAS one
+tiny pointer file via conditional create — so the single-rename
+guarantee holds there too.
 
 Replay/restart semantics: Structured Streaming batch ids are monotone PER
 CHECKPOINT, so dedup is keyed by (run_id, batch_id) where ``run_id``
@@ -39,6 +40,7 @@ standalone on batch appends.
 
 from __future__ import annotations
 
+import json
 import re
 import uuid
 from collections.abc import Sequence
@@ -46,17 +48,17 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import CommitLog
+from ..fsutil import CommitLog, read_small_file, write_small_file
 
-# Current commit naming: seq-only name ``c<seq>`` (true CAS — two writers
-# at the same seq MUST collide on the name, whatever batch/run they carry)
-# with the (batch, run) provenance as an empty marker FILE inside the
-# commit. The pre-round-6 naming carried (seq, batch, run) in the name
-# itself (``c<seq>_b<batch>_<run>``), which broke the compare-and-swap:
-# two concurrent writers of different batches built DIFFERENT names at the
-# SAME seq, both renames succeeded, and the next tip folded only one of
-# them — permanent undercount. Old-style names are still parsed for
-# in-place upgrades.
+# Commit naming: seq-only name ``c<seq>`` (true CAS — two writers at the
+# same seq MUST collide on the name, whatever batch/run they carry) with
+# the applied-batch record as a manifest FILE inside the commit. Older
+# commits recorded ONE run each: pre-round-6 in the name itself
+# (``c<seq>_b<batch>_<run>``, which broke the compare-and-swap — two
+# writers of different batches built DIFFERENT names at the SAME seq),
+# later as an empty ``_applied_b<batch>_<run>`` marker file. Both still
+# parse for in-place upgrades.
+_MANIFEST = "_applied.json"
 _LEGACY_TAG_RE = re.compile(r"^b(\d{12})_(.+)$")
 _META_RE = re.compile(r"^_applied_b(\d{12})_(.+)$")
 
@@ -136,43 +138,73 @@ class IncrementalRollup:
     def _commits_dir(self) -> str:
         return f"{self.path}__commits"
 
-    def _scan(self, entries=None) -> list[tuple[int, int, str, str, str]]:
-        """Applied-batch markers as (seq, batch_id, run_id, content_uri,
-        commit_name), seq-ascending, from ``entries`` or a fresh listing —
-        one per (commit, run) marker.
-        One listing for the commit entries plus one per RETAINED commit for
-        its provenance marker (retention keeps only keep_commits entries,
-        so this stays O(keep_commits) namenode calls — no data files are
-        opened). Never-published pointers carry no batch and are skipped."""
+    def _marks(self, c) -> tuple[dict[str, int], bool] | None:
+        """(run → high-water batch id, from a manifest?) recorded in one
+        published commit: its manifest, or the one run of an older marker
+        file or legacy name. Nested crash garbage is healed first
+        (``CommitLog.heal``) before a read or merge trips on it. None when
+        retention retired the commit after the listing."""
+        legacy = _LEGACY_TAG_RE.match(c.tag or "")
+        if legacy:
+            return {legacy.group(2): int(legacy.group(1))}, False
+        members = self._log.heal(c.uri)
+        if members is None:
+            return None
+        if _MANIFEST in members:
+            fs, hpath = self._hadoop()
+            data = read_small_file(fs, hpath, self.spark, f"{c.uri}/{_MANIFEST}")
+            if data is None:
+                return None
+            return {r: int(b) for r, b in json.loads(data).items()}, True
+        markers = map(_META_RE.match, members)
+        return {m.group(2): int(m.group(1)) for m in markers if m}, False
+
+    def _state(self, entries=None) -> tuple[str | None, dict[str, int]] | None:
+        """(tip content uri, run → applied high-water) for ``entries`` or
+        a fresh listing; (None, {}) before the first commit, None when the
+        tip was retired after the listing (list again).
+
+        Only the tip's manifest counts: every manifest commit was merged
+        from the tip its writer saw and records that tip's marks plus its
+        own batch, so an entry that lost its CAS below the tip (see
+        ``CommitLog``) can never vouch for a batch the tip lacks. Commits
+        without a manifest come from before it, when retention kept each
+        run's newest commit: their marks are unioned over the listing."""
         if entries is None:
             entries = self._log.entries()
-        out = []
-        for c in entries:
-            if c.uri is None:
-                continue
-            if c.tag is not None:
-                legacy = _LEGACY_TAG_RE.match(c.tag)
-                if legacy:
-                    out.append(
-                        (c.seq, int(legacy.group(1)), legacy.group(2), c.uri, c.name)
-                    )
-                continue
-            # Retention may retire this commit between the listing and the
-            # member walk (heal → None). Safe to skip: retention only runs
-            # under a newer tip, which carries every run's high-water.
-            for member in self._log.heal(c.uri) or ():
-                meta = _META_RE.match(member)
-                if meta:
-                    out.append(
-                        (c.seq, int(meta.group(1)), meta.group(2), c.uri, c.name)
-                    )
-            # A seq-named commit with no marker would be a torn commit —
-            # the marker is written into the STAGE before the publish, so
-            # it cannot happen; ignore rather than guess provenance.
-        return out
+        published = [c for c in entries if c.uri is not None]
+        if not published:
+            return None, {}
+        tip = published[-1]
+        state = self._marks(tip)
+        if state is None:
+            return None
+        if state[1]:
+            return tip.uri, state[0]
+        applied: dict[str, int] = {}
+        for c in published:
+            marks, _ = self._marks(c) or ({}, False)
+            for r, b in marks.items():
+                applied[r] = max(applied.get(r, -1), b)
+        return tip.uri, applied
 
-    def _commits(self) -> list[tuple[int, int, str, str, str]]:
-        return self._scan()
+    def _current(self) -> tuple[str | None, dict[str, int]]:
+        """``_state`` of a fresh listing, listing again while retention
+        retires the tip under it."""
+        for _attempt in range(3):
+            state = self._state()
+            if state is not None:
+                return state
+        raise RuntimeError(
+            f"rollup tip at {self._commits_dir()} retired under 3 listings"
+        )
+
+    def _tip(self) -> str:
+        """Content uri of the newest published commit, for reads."""
+        tip = self._current()[0]
+        if tip is None:
+            raise FileNotFoundError(f"no rollup commits at {self._commits_dir()}")
+        return tip
 
     @staticmethod
     def _safe_run(run_id: str) -> str:
@@ -190,10 +222,7 @@ class IncrementalRollup:
         return safe
 
     def last_applied_batch(self, run_id: str = "default") -> int:
-        run = self._safe_run(run_id)
-        return max(
-            (b for _, b, r, _, _ in self._commits() if r == run), default=-1
-        )
+        return self._current()[1].get(self._safe_run(run_id), -1)
 
     def apply_batch(self, df: DataFrame, batch_id: int = 0, run_id: str = "default") -> None:
         """Fold one append batch into the rollup, atomically.
@@ -201,8 +230,8 @@ class IncrementalRollup:
         Idempotent under foreachBatch's at-least-once replay: a batch id at
         or below the last committed one FOR THIS RUN is skipped (the
         additive merge would double-count it). The merged rollup is staged
-        and published with one rename whose target name IS the applied-batch
-        record — data and marker cannot diverge (see module docstring)."""
+        with its applied-batch manifest and published as one commit — data
+        and record cannot diverge (see module docstring)."""
         run = self._safe_run(run_id)
         fs, hpath = self._hadoop()
         # A lost CAS where the commit seq MOVED is another run making
@@ -210,16 +239,16 @@ class IncrementalRollup:
         # no-progress attempts (persistent FS failures) count toward
         # giving up (CommitLog.attempts).
         for entries in self._log.attempts():
-            commits = self._scan(entries)
-            applied: dict[str, int] = {}
-            for _, b, r, _, _ in commits:
-                applied[r] = max(applied.get(r, -1), b)
+            state = self._state(entries)
+            if state is None:
+                continue  # the tip was retired after the listing
+            tip, applied = state
             if batch_id <= applied.get(run, -1):
                 return
             applied[run] = batch_id
             partial = self._partials(df)
-            if commits:
-                current = self.spark.read.parquet(commits[-1][3])
+            if tip is not None:
+                current = self.spark.read.parquet(tip)
                 merged = (
                     current.unionByName(partial)
                     .groupBy("bucket_start", *self.keys)
@@ -244,16 +273,15 @@ class IncrementalRollup:
             # per foreachBatch retry forever.
             try:
                 merged.write.mode("overwrite").parquet(stage)
-                # Provenance markers INSIDE the stage, before the atomic
+                # The manifest goes INSIDE the stage, before the atomic
                 # publish — data and applied-batch record publish together
-                # (underscore-prefixed: parquet readers ignore them). Every
-                # run's high-water rides along, so the new tip alone
-                # records what each run has applied: retention may trim
-                # any older commit, and a publisher whose entry a
-                # successor already built on (then found stale by
-                # CommitLog.publish) sees its batch recorded on retry.
-                for r, b in applied.items():
-                    fs.createNewFile(hpath(f"{stage}/_applied_b{b:012d}_{r}"))
+                # (underscore-prefixed: parquet readers ignore it). It
+                # holds the merged tip's marks plus this batch: one write
+                # per commit however many runs have fed the rollup.
+                write_small_file(
+                    fs, hpath, f"{stage}/{_MANIFEST}",
+                    json.dumps(applied, sort_keys=True).encode("utf-8"),
+                )
                 committed = self._log.publish(
                     entries, stage, keep=self.keep_commits
                 )
@@ -269,7 +297,6 @@ class IncrementalRollup:
             # the new tip rather than publishing a merge that would drop
             # the other batch's data. With seq-only names this detection
             # is total: ANY same-seq publication collides on the name.
-            fs.delete(hpath(stage), True)
         raise RuntimeError(
             f"could not publish rollup commit for batch {batch_id} (run {run}) "
             f"after 5 attempts — persistent rename failures at {self._commits_dir()}"
@@ -287,10 +314,7 @@ class IncrementalRollup:
 
     def read(self) -> DataFrame:
         """Rollup with derived metrics (avg from the additive partials)."""
-        commits = self._commits()
-        if not commits:
-            raise FileNotFoundError(f"no rollup commits at {self._commits_dir()}")
-        r = self.spark.read.parquet(commits[-1][3])
+        r = self.spark.read.parquet(self._tip())
         return r.withColumn("mean", F.col("total") / F.col("n"))
 
     def reaggregate(self, coarser_bucket: str) -> DataFrame:
@@ -302,10 +326,7 @@ class IncrementalRollup:
         100 TB: one fine rollup feeds every coarser resolution. Requires
         ``coarser_bucket`` to be a multiple of the fine bucket (window()
         aligns both to the epoch, so fine buckets nest exactly)."""
-        commits = self._commits()
-        if not commits:
-            raise FileNotFoundError(f"no rollup commits at {self._commits_dir()}")
-        fine = self.spark.read.parquet(commits[-1][3])
+        fine = self.spark.read.parquet(self._tip())
         coarse = (
             fine.groupBy(
                 F.window("bucket_start", coarser_bucket).alias("w"), *self.keys

@@ -78,15 +78,6 @@ class SchemaSidecar:
         self.stage_root = f"{table_path}__schema_stage"
         self._log = CommitLog(spark, self.dir, "v")
 
-    def _fs(self):
-        return self._log.fs()
-
-    def _versions(self, fs=None, hpath=None) -> list[tuple[int, str | None]]:
-        """(seq, content_uri) pairs, seq-ascending. ``content_uri`` is None
-        for a pointer that was never published: unreadable, but its NAME
-        is allocated."""
-        return [(c.seq, c.uri) for c in self._log.entries(fs, hpath)]
-
     def _parse(self, fs, hpath, uri: str | None) -> T.StructType | None:
         import json as _json
 
@@ -120,10 +111,10 @@ class SchemaSidecar:
         listing and its reads, so retention consumed the whole list), the
         listing is retried — a table that HAS a sidecar must not
         transiently read as if it never did."""
-        fs, hpath = self._fs()
+        fs, hpath = self._log.fs()
         for _attempt in range(3):
-            versions = self._versions(fs, hpath)
-            schema = self._newest(fs, hpath, [uri for _, uri in versions])
+            versions = self._log.entries(fs, hpath)
+            schema = self._newest(fs, hpath, [c.uri for c in versions])
             if schema is not None or not versions:
                 return schema
         return None
@@ -137,7 +128,7 @@ class SchemaSidecar:
 
         from .fsutil import write_small_file
 
-        fs, hpath = self._fs()
+        fs, hpath = self._log.fs()
         for entries in self._log.attempts():
             # Newest PARSEABLE version — a never-published pointer must not
             # masquerade as "no sidecar": with reset=False that would skip
@@ -159,13 +150,8 @@ class SchemaSidecar:
             # concurrent publisher's mkdirs of its own stage below it.
             if self._log.publish(entries, stage):
                 return
-            # Lost the CAS (or won a stale name below the tip): drop our
-            # stage, re-read, re-union — the loop converges because the
-            # union only grows.
-            try:
-                fs.delete(hpath(stage), True)
-            except Exception:
-                pass
+            # Lost the CAS (or won a stale name below the tip): re-read,
+            # re-union — the loop converges because the union only grows.
         raise RuntimeError(
             f"could not publish table schema at {self.dir} after 5 attempts"
         )
@@ -330,12 +316,6 @@ class WriterLease:
         self.writer_id = writer_id or _default_writer_id()
         self._log = CommitLog(spark, self.dir, "e")
 
-    def _fs(self):
-        return self._log.fs()
-
-    def _epochs(self, fs=None, hpath=None) -> list[tuple[int, str | None]]:
-        return [(c.seq, c.uri) for c in self._log.entries(fs, hpath)]
-
     def _owner(self, fs, hpath, uri: str | None) -> str | None:
         """Owner id recorded in one epoch commit; None for a
         never-published epoch or an unreadable owner file."""
@@ -372,13 +352,7 @@ class WriterLease:
         stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
         fs.mkdirs(hpath(stage))
         write_small_file(fs, hpath, f"{stage}/owner", self.writer_id.encode())
-        if self._log.publish(epochs, stage):
-            return True
-        try:
-            fs.delete(hpath(stage), True)
-        except Exception:
-            pass
-        return False
+        return self._log.publish(epochs, stage)
 
     def _touch_heartbeat(self, fs, hpath) -> None:
         """Owner liveness signal: overwrite ``{dir}/heartbeat`` (content =
@@ -458,7 +432,7 @@ class WriterLease:
         STALE owner, so a live owner is never displaced. The fenced
         writer's own next ensure()/check() still raises — same fencing
         residual as a manual takeover."""
-        fs, hpath = self._fs()
+        fs, hpath = self._log.fs()
         if take_over_if_stale is not None:
             floor = 2 * _heartbeat_interval()
             if take_over_if_stale < floor:
@@ -523,16 +497,16 @@ class WriterLease:
         """Post-write fencing probe: raise if a takeover landed while this
         writer's commit was in flight, so the fenced writer's pipeline
         dies loudly instead of continuing to publish over the new owner."""
-        fs, hpath = self._fs()
-        epochs = self._epochs(fs, hpath)
+        fs, hpath = self._log.fs()
+        epochs = self._log.entries(fs, hpath)
         if not epochs:
             return
-        owner = self._owner(fs, hpath, epochs[-1][1])
+        owner = self._owner(fs, hpath, epochs[-1].uri)
         if owner is not None and owner != self.writer_id:
             raise ConcurrentWriterError(
                 f"writer {self.writer_id!r} was fenced during a commit to "
                 f"{self.dir.removesuffix('__writer')}: epoch "
-                f"{epochs[-1][0]} now belongs to {owner!r}. This writer "
+                f"{epochs[-1].seq} now belongs to {owner!r}. This writer "
                 "must stop; the in-flight commit may race the new owner's "
                 "first write — re-run that writer's next batch."
             )
@@ -796,25 +770,22 @@ class KeyedTable:
         from .fsutil import hadoop_fs
 
         fs, hpath = hadoop_fs(self.spark, self.path)
-        stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
-        populate(stage)
-        # Schema-as-of rides INSIDE the commit (after the populate —
-        # overwrite staging clears the dir): read(as_of=n) serves commit n
-        # with commit n's own schema, not the current sidecar's.
-        _embed_commit_schema(self.spark, stage, schema)
         for existing in self._snapshot_log.attempts():
+            stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
+            populate(stage)
+            # Schema-as-of rides INSIDE the commit (after the populate —
+            # overwrite staging clears the dir): read(as_of=n) serves
+            # commit n with commit n's own schema, not the current
+            # sidecar's.
+            _embed_commit_schema(self.spark, stage, schema)
             if self._snapshot_log.publish(
                 existing, stage, keep=self.keep_history
             ):
                 break
-            # A concurrent writer took this seq: re-stage if the attempt
-            # consumed the stage, and retry on a fresh listing rather than
+            # A concurrent writer took this seq: the publish released the
+            # stage, so re-stage and retry on a fresh listing rather than
             # silently losing the commit.
-            if not fs.exists(hpath(stage)):
-                populate(stage)
-                _embed_commit_schema(self.spark, stage, schema)
         else:
-            fs.delete(hpath(stage), True)
             raise RuntimeError(
                 f"could not publish snapshot commit at {self.path}__snapshots "
                 "after 5 attempts"
@@ -1752,8 +1723,7 @@ class DeltaLogTable:
             raise
         if not published:
             # Lost the race to a concurrent compaction; its snapshot folds
-            # the same (or more) deltas. Drop ours and do not retire.
-            fs.delete(hpath(stage), True)
+            # the same (or more) deltas. Do not retire.
             return
         prev_through = versions[-1][1] if versions else -1
         # Retire from the RAW listing: any dir ≤ prev_through was folded

@@ -138,7 +138,7 @@ def test_sidecar_burned_newest_does_not_narrow(spark, tmp_path, monkeypatch):
     )
     side.publish(wide)
     # Burn the next name: claim without fill.
-    fs, hpath = side._fs()
+    fs, hpath = side._log.fs()
     fs.createNewFile(hpath(f"{side.dir}/v000000000001.commit"))
     narrow = T.StructType([T.StructField("a", T.IntegerType())])
     side.publish(narrow)  # must UNION with v0, not replace
@@ -405,6 +405,23 @@ def _run_rival_first(log, rival):
     log.publish = publish
 
 
+def _after_next_win(monkeypatch, hook):
+    """Run ``hook()`` once, right after the next won ``publish_commit``
+    and before that publisher's post-win listing."""
+    from debezium_emr_hudi_deltastreamer_sample_spark import fsutil
+
+    real = fsutil.publish_commit
+    pending = [hook]
+
+    def publish_commit(*args):
+        won = real(*args)
+        if won and pending:
+            pending.pop()()
+        return won
+
+    monkeypatch.setattr(fsutil, "publish_commit", publish_commit)
+
+
 @pytest.mark.parametrize("protocol", ["rename", "pointer"])
 def test_stale_sidecar_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, protocol):
     """Name reuse after retention, pinned without threads: A lists [v0];
@@ -424,20 +441,16 @@ def test_stale_sidecar_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, pro
     def rival():
         for col in ("b1", "b2", "b3"):
             b.publish(T.StructType([field("id"), field(col)]))
-        assert [s for s, _ in b._versions()] == [2, 3]  # v1 is free again
+        assert [c.seq for c in b._log.entries()] == [2, 3]  # v1 is free again
 
     _run_rival_first(a._log, rival)
     a.publish(T.StructType([field("id"), field("a1")]))
-    versions = a._versions()
-    assert [s for s, _ in versions] == [3, 4]  # A's stale v1 is gone
+    assert [c.seq for c in a._log.entries()] == [3, 4]  # A's stale v1 is gone
     assert set(a.current().names) == {"id", "b1", "b2", "b3", "a1"}
 
 
-@pytest.mark.parametrize("protocol", ["rename", "pointer"])
-def test_stale_rollup_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, protocol):
-    """Rollup twin: run A lists [c0]; run B commits c1..c3, and retention
-    frees c1; A's CAS wins c1 below the tip. A's batch must land on top
-    exactly once — not lost under B's newer commits, not double-counted."""
+def _rollups(spark, tmp_path, monkeypatch, protocol):
+    """(new rollup handle on one shared path, one-event batch of value v)."""
     import datetime as dt
 
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
@@ -453,25 +466,78 @@ def test_stale_rollup_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, prot
     ev = lambda v: spark.createDataFrame(  # noqa: E731
         [(ts, "k", v)], "ts timestamp, k string, v double"
     )
+    return roll, ev
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_stale_rollup_publish_rebuilds_on_tip(spark, tmp_path, monkeypatch, protocol):
+    """Rollup twin: run A lists [c0]; run B commits c1..c3, and retention
+    frees c1; A's CAS wins c1 below the tip. A's batch must land on top
+    exactly once — not lost under B's newer commits, not double-counted."""
+    roll, ev = _rollups(spark, tmp_path, monkeypatch, protocol)
     a, b = roll(), roll()
     b.apply_batch(ev(1.0), batch_id=0, run_id="b")  # c0
 
     def rival():
         for i, v in enumerate((2.0, 4.0, 8.0), start=1):
             b.apply_batch(ev(v), batch_id=i, run_id="b")
-        assert [s for s, *_ in b._commits()] == [2, 3]  # c1 is free again
+        assert [c.seq for c in b._log.entries()] == [2, 3]  # c1 is free again
 
     _run_rival_first(a._log, rival)
     a.apply_batch(ev(16.0), batch_id=0, run_id="a")
-    commits = a._commits()
-    assert 1 not in [s for s, *_ in commits]  # A's stale c1 is gone
-    # The tip is A's commit, carrying both runs' high-water markers.
-    assert {(s, r, b) for s, b, r, _, _ in commits if s == 4} == {
-        (4, "a", 0),
-        (4, "b", 3),
-    }
+    assert [c.seq for c in a._log.entries()] == [3, 4]  # A's stale c1 is gone
+    # The tip is A's commit, its manifest carrying both runs' high-waters.
+    assert a._state()[1] == {"a": 0, "b": 3}
     [row] = a.read().collect()
     assert (row.n, row.total) == (5, 31.0)
     a.apply_batch(ev(16.0), batch_id=0, run_id="a")  # replay: deduplicated
     [row] = a.read().collect()
     assert (row.n, row.total) == (5, 31.0)
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_stale_rollup_entry_vouches_for_nothing(spark, tmp_path, monkeypatch, protocol):
+    """A's CAS wins the freed c1 below tip c3 (as above), and run C applies
+    a batch between A's win and A's post-win listing. C lists A's stale
+    c1 but merges from c3, so C's commit must not record A's batch as
+    applied — else A's retry would skip it and the batch would be lost."""
+    roll, ev = _rollups(spark, tmp_path, monkeypatch, protocol)
+    a, b, c = roll(), roll(), roll()
+    b.apply_batch(ev(1.0), batch_id=0, run_id="b")  # c0
+
+    def rival():
+        for i, v in enumerate((2.0, 4.0, 8.0), start=1):
+            b.apply_batch(ev(v), batch_id=i, run_id="b")
+        _after_next_win(
+            monkeypatch, lambda: c.apply_batch(ev(32.0), batch_id=0, run_id="c")
+        )
+
+    _run_rival_first(a._log, rival)
+    a.apply_batch(ev(16.0), batch_id=0, run_id="a")  # wins c1; C then lands c4
+    assert a._log.entries()[-1].seq == 5  # A rebuilt on C's c4
+    assert a._state()[1] == {"a": 0, "b": 3, "c": 0}
+    [row] = a.read().collect()
+    assert (row.n, row.total) == (6, 63.0)
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_rollup_false_loss_keeps_entry_and_applies_once(
+    spark, tmp_path, monkeypatch, protocol
+):
+    """A wins c1 at the real tip, and run D lists, merges from c1 and
+    publishes c2 before A's post-win listing. A reports a lost CAS, but
+    c1 is D's parent inside the keep window: it stays readable, and A's
+    retry finds its batch in D's manifest instead of applying it twice."""
+    roll, ev = _rollups(spark, tmp_path, monkeypatch, protocol)
+    a, d = roll(), roll()
+    a.apply_batch(ev(1.0), batch_id=0, run_id="b")  # c0
+    _after_next_win(
+        monkeypatch, lambda: d.apply_batch(ev(4.0), batch_id=0, run_id="d")
+    )
+    a.apply_batch(ev(2.0), batch_id=0, run_id="a")
+    entries = a._log.entries()
+    assert [c.seq for c in entries] == [1, 2]  # D's parent c1 was kept
+    assert a.spark.read.parquet(entries[0].uri).count() == 1
+    assert a._state()[1] == {"a": 0, "b": 0, "d": 0}
+    [row] = a.read().collect()
+    assert (row.n, row.total) == (3, 7.0)

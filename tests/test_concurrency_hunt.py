@@ -103,16 +103,16 @@ def test_lease_threaded_takeover_storm(spark, tmp_path):
         t.join(120)
     assert not errors, errors[:5]
     probe = lease_of("probe")
-    fs, hpath = probe._fs()
-    epochs = probe._epochs(fs, hpath)
+    fs, hpath = probe._log.fs()
+    epochs = probe._log.entries(fs, hpath)
     assert epochs, "no epoch ever published"
-    seqs = [s for s, _ in epochs]
+    seqs = [c.seq for c in epochs]
     assert seqs == sorted(set(seqs)), "duplicate/unsorted epoch seqs"
     # Retention keeps ≤ 2; each resolved epoch has exactly one owner file.
     assert len(epochs) <= 2
-    for _, uri in epochs:
-        if uri is not None:
-            owner = probe._owner(fs, hpath, uri)
+    for c in epochs:
+        if c.uri is not None:
+            owner = probe._owner(fs, hpath, c.uri)
             assert owner is not None and owner.startswith("w")
 
 
@@ -135,10 +135,10 @@ def test_lease_same_writer_many_threads_single_epoch(spark, tmp_path):
         t.join(60)
     assert not errors, errors[:5]
     probe = WriterLease(spark, str(tmp_path / "t"), "probe")
-    fs, hpath = probe._fs()
-    epochs = probe._epochs(fs, hpath)
-    assert [s for s, _ in epochs] == [0]
-    assert probe._owner(fs, hpath, epochs[0][1]) == "pipe"
+    fs, hpath = probe._log.fs()
+    epochs = probe._log.entries(fs, hpath)
+    assert [c.seq for c in epochs] == [0]
+    assert probe._owner(fs, hpath, epochs[0].uri) == "pipe"
 
 
 @pytest.mark.slow

@@ -7,7 +7,8 @@
 3. ``pointer_commit``'s hard-link branch is gated on the RESOLVED
    FileSystem being local (``_fs_is_local``), not on path shape — a
    scheme-less path under a non-local fs.defaultFS falls through to the
-   fs.create CAS (ADVICE r11 #1, the silent-lost-commit shape).
+   rename CAS of a filled temp file (ADVICE r11 #1, the
+   silent-lost-commit shape).
 4. ``os.link`` failures other than EEXIST are re-raised loudly naming the
    non-linkable store, not mistaken for a lost CAS (ADVICE r11 #5).
 5. ``take_over_if_stale``: opt-in heartbeat/staleness lease self-heal —
@@ -75,7 +76,7 @@ def test_rollup_truly_burned_claim_still_skipped_and_remembered(
     empty = f"{r._commits_dir()}/c000000000001.commit"
     fs.createNewFile(hpath(empty))
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert [s for s, _, _, _, _ in r._commits()][-1] == 2
+    assert r._log.entries()[-1].seq == 2
     assert not fs.exists(hpath(empty))  # retention removed the empty name
     r.apply_batch(_events(spark, [(ts, "k1", 4.0)]), batch_id=2)
     got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
@@ -93,7 +94,7 @@ def test_sidecar_retention_keeps_newest_resolved_predecessor(
     side = SchemaSidecar(spark, str(tmp_path / "t"))
     s0 = T.StructType([T.StructField("a", T.IntegerType())])
     side.publish(s0)  # v0 (resolved)
-    fs, hpath = side._fs()
+    fs, hpath = side._log.fs()
     burned = f"{side.dir}/v000000000001.commit"
     fs.createNewFile(hpath(burned))  # v1: claim that never resolves
     side.publish(
@@ -101,7 +102,7 @@ def test_sidecar_retention_keeps_newest_resolved_predecessor(
             [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
         )
     )  # v2
-    versions = dict(side._versions(fs, hpath))
+    versions = {c.seq: c.uri for c in side._log.entries(fs, hpath)}
     assert 2 in versions and versions[2] is not None
     assert 0 in versions and versions[0] is not None  # resolved predecessor kept
     assert not fs.exists(hpath(burned))  # burned name GC'd
@@ -133,7 +134,7 @@ def test_fs_is_local_gates_on_resolved_client(spark, tmp_path):
 
 def test_pointer_commit_foreign_fs_skips_hard_link(spark, tmp_path):
     """A scheme-less path with a NON-local resolved FileSystem must go
-    through the fs.create CAS, not link(2) on the driver's local disk —
+    through the rename CAS, not link(2) on the driver's local disk —
     and the commit must be visible through the same client that readers
     use (the ADVICE r11 #1 silent-lost-commit shape)."""
     real_fs, hpath = hadoop_fs(spark, str(tmp_path))
@@ -152,6 +153,31 @@ def test_pointer_commit_foreign_fs_skips_hard_link(spark, tmp_path):
     ]
     # Same name again: lost CAS.
     assert pointer_commit(fs, hpath, str(tmp_path / "stage2"), target) is False
+
+
+def test_pointer_commit_foreign_fs_rename_refusal_is_lost_cas(spark, tmp_path):
+    """The non-local claim's CAS is the rename of a filled temp file onto
+    the pointer name. A rival claiming the name after the exists precheck
+    makes HDFS refuse that rename: a lost CAS. The temp file lives in the
+    stage, never in the commit directory, and is removed on the loss."""
+    real_fs, hpath = hadoop_fs(spark, str(tmp_path))
+    renamed = []
+
+    class RefusingFs(_ForeignFs):
+        def rename(self, src, dst):
+            renamed.append(str(src))
+            return False
+
+    stage = str(tmp_path / "stage")
+    real_fs.mkdirs(hpath(stage))
+    commits = str(tmp_path / "commits")
+    real_fs.mkdirs(hpath(commits))
+    target = f"{commits}/c000000000000"
+    assert pointer_commit(RefusingFs(real_fs), hpath, stage, target) is False
+    [src] = renamed
+    assert src.removeprefix("file:").startswith(f"{stage}/")
+    assert os.listdir(commits) == []
+    assert os.listdir(stage) == []
 
 
 def test_pointer_commit_link_refusal_is_loud(spark, tmp_path, monkeypatch):
@@ -230,7 +256,7 @@ def test_stale_takeover_falls_back_to_epoch_mtime(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "t")
     a = KeyedTable(spark, path, keys=["id"], writer_id="old-layout")
     a.upsert(_mk(spark, [(1, "x", "c", 1)]))
-    fs, hpath = a._lease._fs()
+    fs, hpath = a._lease._log.fs()
     fs.delete(hpath(f"{a._lease.dir}/heartbeat"), False)
     time.sleep(0.6)
     b = KeyedTable(
@@ -246,7 +272,7 @@ def test_stale_takeover_unjudgeable_fails_closed(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_HEARTBEAT_SEC", "0.1")
     lease = WriterLease(spark, str(tmp_path / "t"), "healer")
     assert (
-        lease._owner_stale(*lease._fs(), "ghost", None, 0.5) is False
+        lease._owner_stale(*lease._log.fs(), "ghost", None, 0.5) is False
     )
 
 

@@ -673,7 +673,8 @@ def test_rollup_heals_nested_crash_garbage(spark, tmp_path):
     # member is a pointer FILE; the content lives in __stage).
     import pathlib
 
-    [(_, _, _, uri, _)] = roll._commits()
+    [commit] = roll._log.entries()
+    uri = commit.uri
     garbage = pathlib.Path(uri.removeprefix("file:")) / "deadbeefcafe"
     garbage.mkdir()
     (garbage / "part-00000.parquet").write_bytes(b"not a parquet file")
@@ -1386,10 +1387,10 @@ def test_scd2_null_attr_versions(spark, tmp_path):
 def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     """Round-6 review fix for the rollup commit CAS: commit names are
     seq-only (two writers at the same seq MUST collide on the name,
-    whatever batch/run they carry) with (batch, run) provenance as a
-    marker file inside the commit; pre-fix full-token names still parse
-    (in-place upgrade). A same-seq squatter forces the retry path and no
-    batch is lost."""
+    whatever batch/run they carry) with the applied-batch manifest inside
+    the commit; pre-fix full-token names and one-run marker files still
+    parse (in-place upgrade). A same-seq squatter forces the retry path
+    and no batch is lost."""
     from pyspark.sql import functions as F
 
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
@@ -1404,11 +1405,11 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     path = str(tmp_path / "roll")
     roll = IncrementalRollup(spark, path, "ts", "1 minute", ["k"], "v")
     roll.apply_batch(mk([("a", "2024-01-01 00:00:05", 1.0)]), 0, run_id="r1")
-    commits = roll._commits()
-    assert [(s, b, r) for s, b, r, _, _ in commits] == [(0, 0, "r1")]
+    commits = roll._log.entries()
     # The commit NAME is seq-only under both protocols (the content uri is
     # the name itself under rename, a staged uuid dir under pointer).
-    assert commits[0][4] == "c000000000000"
+    assert [c.name for c in commits] == ["c000000000000"]
+    assert roll._state() == (commits[0].uri, {"r1": 0})
 
     # Simulate a concurrent writer landing at the NEXT seq first: squat
     # the seq-1 name, apply a batch (must retry past the squat), then
@@ -1417,7 +1418,7 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     squat = f"{roll._commits_dir()}/c000000000001"
     # The racing writer's commit: batch 99 of another run, folded onto the
     # same tip — real parquet content, as a genuine winner would publish.
-    squat_rows = spark.read.parquet(commits[0][3]).unionByName(
+    squat_rows = spark.read.parquet(commits[0].uri).unionByName(
         roll._partials(mk([("b", "2024-01-01 00:01:10", 5.0)]))
     )
     squat_rows.write.parquet(squat)
@@ -1427,15 +1428,18 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     # writer's rows are in the new tip — nothing lost.
     got = {r.k: (r.n, r.total) for r in roll.read().collect()}
     assert got == {"a": (2, 3.0), "b": (1, 5.0)}
-    assert max(s for s, _, _, _, _ in roll._commits()) == 2
+    assert roll._log.entries()[-1].seq == 2
+    # The squat recorded its run the pre-manifest way (one marker file);
+    # the new tip's manifest carries both runs forward.
+    assert roll._state()[1] == {"r1": 1, "other": 99}
     fs.delete(hpath(squat), True)
 
     # Legacy full-token name parses alongside (upgrade path).
     legacy = f"{roll._commits_dir()}/c000000000050_b000000000007_oldrun"
     fs.mkdirs(hpath(legacy))
-    seqs = {(s, b, r) for s, b, r, _, _ in roll._commits()}
-    assert (50, 7, "oldrun") in seqs
+    assert roll._log.entries()[-1].seq == 50
     assert roll.last_applied_batch("oldrun") == 7
+    assert roll.last_applied_batch("r1") == 1
     fs.delete(hpath(legacy), True)
 
     # Reserved partials-schema names are refused at the boundary.

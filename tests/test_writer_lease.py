@@ -48,8 +48,7 @@ def test_same_writer_id_many_instances_share_the_lease(spark, tmp_path):
     t = KeyedTable(spark, path, keys=["id"], writer_id="pipe")
     assert {r.id for r in t.read().collect()} == {0, 1, 2}
     # One epoch claimed, ever: no churn on the stable hot path.
-    fs, hpath = t._lease._fs()
-    assert len(t._lease._epochs(fs, hpath)) == 1
+    assert len(t._lease._log.entries()) == 1
 
 
 def test_take_over_fences_the_old_writer(spark, tmp_path):
@@ -168,12 +167,11 @@ def test_burned_epoch_claim_raises_then_take_over_recovers(
     w1 = KeyedTable(spark, path, keys=["id"], writer_id="w1")
     w1.upsert(_mk(spark, [(1, "a", "c", 1)]))
     # Burn the next epoch name: claim without fill (the crash window).
-    fs, hpath = w1._lease._fs()
+    fs, hpath = w1._lease._log.fs()
     fs.createNewFile(hpath(f"{w1._lease.dir}/e000000000001.commit"))
     with pytest.raises(ConcurrentWriterError, match="take_over=True"):
         w1.upsert(_mk(spark, [(2, "b", "c", 2)]))
     w2 = KeyedTable(spark, path, keys=["id"], writer_id="w1", take_over=True)
     w2.upsert(_mk(spark, [(2, "b", "c", 2)]))
     assert {r.id for r in w2.read().collect()} == {1, 2}
-    fs, hpath = w2._lease._fs()
-    assert [s for s, _ in w2._lease._epochs(fs, hpath)][-1] == 2
+    assert w2._lease._log.entries()[-1].seq == 2
