@@ -671,8 +671,45 @@ def table_swap_journal(path: str) -> str:
     return f"{path}__swap.journal"
 
 
+def _swap_journal_entry(fs, hpath, spark, journal: str):
+    """(stage, retire) recorded in a swap journal, or (None, None) when it
+    is unreadable (a crash during the journal write itself)."""
+    import json as _json
+
+    try:
+        data = read_small_file(fs, hpath, spark, journal)
+        if data:
+            j = _json.loads(data.decode("utf-8"))
+            return j["stage"], j["retire"]
+    except Exception:
+        pass
+    return None, None
+
+
+def resolve_table_swap(spark, path: str) -> str:
+    """The directory a READER of table ``path`` should scan, resolved
+    without repairing anything: readers never mutate table state, because
+    a journal is also present during a healthy, in-flight swap, and a
+    reader that healed it would delete or move the writer's stage under
+    it. Between the swap's two renames the table dir is missing and the
+    staged table is complete, so the reader is served the stage (the
+    state the publish, or a writer's heal, rolls forward to); with the
+    stage gone too it is served the retired copy. Every other shape reads
+    ``path`` itself. One fs.exists when no journal is present."""
+    fs, hpath = hadoop_fs(spark, path)
+    journal = table_swap_journal(path)
+    if not fs.exists(hpath(journal)) or fs.exists(hpath(path)):
+        return path
+    for candidate in _swap_journal_entry(fs, hpath, spark, journal):
+        if candidate and fs.exists(hpath(candidate)):
+            return candidate
+    return path
+
+
 def recover_table_swap(spark, path: str) -> None:
-    """Heal a torn stage-and-swap publish left by a process kill.
+    """Heal a torn stage-and-swap publish left by a process kill. Only
+    the table's writer (the lease holder) may call this; readers use
+    ``resolve_table_swap``.
 
     Invariant the journal protocol guarantees: the journal is written
     only AFTER the staged table directory is fully written, and deleted
@@ -698,21 +735,12 @@ def recover_table_swap(spark, path: str) -> None:
     bootstrap-overwrite branch and wipe the table down to one batch.
 
     No-op (one fs.exists) when no journal is present — the steady state
-    every read/exists probe pays."""
-    import json as _json
-
+    every write pays."""
     fs, hpath = hadoop_fs(spark, path)
     journal = table_swap_journal(path)
     if not fs.exists(hpath(journal)):
         return
-    stage = retire = None
-    try:
-        data = read_small_file(fs, hpath, spark, journal)
-        if data:
-            j = _json.loads(data.decode("utf-8"))
-            stage, retire = j["stage"], j["retire"]
-    except Exception:
-        stage = retire = None
+    stage, retire = _swap_journal_entry(fs, hpath, spark, journal)
     if stage is None:
         if fs.exists(hpath(path)):
             fs.delete(hpath(journal), False)

@@ -34,7 +34,7 @@ def cdc_meta_columns(
 ) -> set[str]:
     """The CDC metadata column set a change batch carries but a TABLE must
     not promote to data columns — the single definition shared by
-    KeyedTable._row_columns, DeltaLogTable.read and streaming.ivm (which
+    KeyedTable._empty_snapshot, DeltaLogTable.read and streaming.ivm (which
     previously each hand-copied it and could drift)."""
     return {op_col, "_lsn", "_ts_ms", *ordering} - {None}
 

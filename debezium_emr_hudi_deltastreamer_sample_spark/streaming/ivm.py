@@ -14,16 +14,18 @@ affected —
   (one semi-join of the stored fact against the batch's dim keys — the
   batch side broadcasts).
 
-Affected keys are re-derived from current state (post-merge fact rows ⋈
-current dim) and upserted into the view; affected keys with no surviving
-join row become view deletes. Cost per batch is O(|Δ| + affected rows) —
-independent of table size — except that a batch which actually RETRACTS
-rows additionally semi-joins the view to fetch the stale rows' partition
-values (insert/update-only batches, the steady state, skip it). The view
-write is a KeyedTable COW merge, partition-prunable the same way (pass
-``partition_by``). At 100 TB this
-is the difference between a nightly full re-join and a seconds-latency
-denormalized serving table.
+Each refresh is ONE plan handed to the view's KeyedTable upsert: the
+desired rows of the affected keys (post-merge fact rows ⋈ current dim)
+as upserts ranked ``_ivm_seq`` = 2, and every affected key as a delete
+ranked 1. The view merge's own precombine keeps the upsert wherever one
+exists, so exactly the affected keys with no surviving join row are
+retracted — no eager checkpoints, no separate gone-keys anti-join. Cost
+per batch is O(|Δ| + affected rows), independent of table size, except
+that a PARTITIONED view also semi-joins itself to give its retractions
+the stale rows' partition values. The view write is a KeyedTable COW
+merge, partition-prunable the same way (pass ``partition_by``). At
+100 TB this is the difference between a nightly full re-join and a
+seconds-latency denormalized serving table.
 
 Restart/replay: every refresh recomputes affected rows FROM CURRENT
 STATE (never from the delta alone), so re-delivering the LATEST batch
@@ -32,9 +34,8 @@ incoming batch priority over the stored snapshot, so replaying an
 EARLIER batch regresses the fact table (and therefore the view) —
 at-least-once delivery must be guarded upstream by batch-id dedup,
 exactly as streaming.rollup does with its (run_id, batch_id) commit
-names. The `_ivm_seq` ordering column exists only to satisfy the
-precombine contract; each refresh emits at most one row per fact key,
-so its value never breaks a tie.
+names. Within one refresh each fact key has at most one desired row,
+so the two ``_ivm_seq`` ranks never tie.
 
 Contract: fact and dim column names must be disjoint (star-schema
 prefixes — o_*, c_* — satisfy this); a fact row's FK may change between
@@ -156,7 +157,10 @@ class IncrementalJoinView:
             )
         changes = changes.localCheckpoint(eager=True)
         self.fact.upsert(changes)
-        self._refresh(changes.select(*self.fact_keys).distinct())
+        # At most |Δ| keys: broadcast them into the refresh's semi-joins.
+        # Duplicates are harmless there and in the retractions (the view
+        # merge precombines), so no distinct shuffle.
+        self._refresh(F.broadcast(changes.select(*self.fact_keys)))
 
     def apply_dim_batch(self, changes: DataFrame) -> None:
         """Land one dim-side CDC batch, then refresh the view rows of
@@ -179,20 +183,29 @@ class IncrementalJoinView:
         affected = (
             self.fact.read()
             .join(F.broadcast(dkeys), F.col(self.fk) == F.col("__ivm_dkey"), "left_semi")
-            .select(*self.fact_keys)
-            .distinct()
+            .select(*self.fact_keys)  # unique: the fact table is keyed
         )
         self._refresh(affected)
 
     # -- maintenance core ---------------------------------------------------
 
-    def _refresh(self, affected_keys: DataFrame) -> None:
-        """Recompute the view rows for ``affected_keys`` from current
-        fact/dim state: desired rows upsert; affected keys with no
-        surviving join row (fact deleted, or inner join lost its dim
-        match) become view deletes. Everything is keyed work — no
-        full-table recomputation."""
-        keys = affected_keys.localCheckpoint(eager=True)
+    def _refresh(self, keys: DataFrame) -> None:
+        """Recompute the view rows of the affected fact ``keys`` from
+        current fact/dim state as ONE plan handed to ``view.upsert``:
+        every desired join row is an upsert with ``_ivm_seq`` = 2, every
+        affected key is a delete with ``_ivm_seq`` = 1, and the view
+        merge's own precombine keeps the upsert where one exists — so
+        exactly the keys with no surviving join row (fact deleted, or an
+        inner join that lost its dim match) are retracted. Everything is
+        keyed work, with one emptiness probe and no full-table
+        recomputation.
+
+        A partitioned view's retractions carry the CURRENT view row, not
+        null-filled keys: a delete whose partition columns are NULL lands
+        in the wrong partition, the partition-pruned merge never reaches
+        the stale row, and the retraction is silently dropped. That costs
+        one semi-join of the view per refresh; a non-partitioned view
+        needs only the keys."""
         if keys.isEmpty():
             return
         fact_rows = self.fact.read().join(keys, self.fact_keys, "left_semi")
@@ -207,28 +220,12 @@ class IncrementalJoinView:
             desired = fact_rows
         else:
             desired = fact_rows.limit(0)
-        desired = desired.localCheckpoint(eager=True)
-        gone_keys = keys.join(
-            desired.select(*self.fact_keys).distinct(), self.fact_keys, "left_anti"
-        ).localCheckpoint(eager=True)
-        # Retractions carry the CURRENT stale view row, not null-filled
-        # keys: with a partitioned view, a delete row whose partition
-        # columns are NULL lands in the wrong partition and the
-        # partition-pruned merge never reaches the stale row — the
-        # retraction would be silently dropped. The view semi-join scan is
-        # paid ONLY on batches that actually retract (gone_keys empty is
-        # the steady insert/update case), keeping per-batch cost
-        # O(|Δ| + affected rows) outside retractions.
-        if gone_keys.isEmpty() or not self.view.exists():
-            stale = desired.limit(0)
-        else:
-            stale = self.view.read().join(gone_keys, self.fact_keys, "left_semi")
-        batch = (
-            desired.withColumn("_op", F.lit("u"))
-            .unionByName(stale.withColumn("_op", F.lit("d")), allowMissingColumns=True)
-            .withColumn(_SEQ, F.lit(1))
-        )
-        self.view.upsert(batch)
+        retract = keys
+        if self.view.partition_by and self.view.exists():
+            retract = self.view.read().join(keys, self.fact_keys, "left_semi")
+        upserts = desired.select("*", F.lit("u").alias("_op"), F.lit(2).alias(_SEQ))
+        deletes = retract.select("*", F.lit("d").alias("_op"), F.lit(1).alias(_SEQ))
+        self.view.upsert(upserts.unionByName(deletes, allowMissingColumns=True))
 
     # -- read ---------------------------------------------------------------
 

@@ -395,9 +395,14 @@ def scd2_batch_processor(
         # would replace the whole versioned history with it. Heal any
         # torn stage-and-swap publish from a killed predecessor FIRST —
         # a torn swap reads as MISSING and would likewise fold this batch
-        # against nothing (one fs.exists in the steady state).
+        # against nothing — and only as the table's writer: the lease
+        # (pipeline-scoped id, see start_pipeline) fences a second writer
+        # whose heal would tear this one's in-flight swap.
         from ..fsutil import read_parquet_if_present, recover_table_swap
+        from ..table import WriterLease
 
+        lease = WriterLease(spark, table_path, None)
+        lease.ensure()
         recover_table_swap(spark, table_path)
         hist = read_parquet_if_present(spark, table_path)
         if hist is not None:
@@ -491,10 +496,12 @@ def scd2_batch_processor(
 
             stage = f"{table_path}__stage/{_uuid.uuid4().hex}"
             out.write.mode("overwrite").parquet(stage)
+            lease.check()
             swap_table_dir(spark, table_path, stage)
         else:
             out.localCheckpoint(eager=True).write.mode("overwrite").parquet(
                 table_path
             )
+        lease.check()
 
     return process

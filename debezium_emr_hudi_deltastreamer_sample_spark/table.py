@@ -10,11 +10,24 @@ Semantics owned here (reference tier B):
 - B12 catalog sync: ``register`` ≡ hive_sync (temp view locally; on a real
   cluster ``saveAsTable`` against the metastore)
 
-COW strategy at scale: with ``partition_by`` set and the session's
-``partitionOverwriteMode=dynamic`` (session.py), an upsert rewrites ONLY
-the partitions containing changed keys — the Hudi file-group analogue. The
-merge shuffles once on the key; the unchanged-partition data is never read
-or written.
+Every KeyedTable data commit goes through ONE path, ``_commit``: take
+the writer lease, widen the schema sidecar, write, reset the sidecar,
+publish the snapshot — Hudi's precombine → upsert → table replace
+lifecycle (reference README.md:295-313). ``init``, the first ``upsert``
+(a merge into an empty snapshot) and ``compact_history`` are table
+replaces through it. Its one write, ``_write``, decides the only
+materialization: an in-place overwrite checkpoints its input once; the
+stage-and-swap publish (non-partitioned tables on rename-protocol
+stores) writes the stage straight from the plan.
+
+COW strategy at scale: with ``partition_by`` set an upsert rewrites ONLY
+the partitions containing changed keys (a per-write dynamic partition
+overwrite) — the Hudi file-group analogue. The merge shuffles once on the
+key; the unchanged-partition data is never read or written. Replaces
+overwrite statically.
+
+Readers never mutate table state: a torn or in-flight swap is resolved
+read-only (``fsutil.resolve_table_swap``); only the writer heals it.
 
 A real Hudi writer is used if the jar happens to be present
 (``format("hudi")``, README.md:337 intent); this container ships none, so
@@ -629,44 +642,43 @@ class KeyedTable:
         one short-circuited FS listing (fsutil.parquet_data_exists) — a
         corrupt FOOTER therefore surfaces loudly at the subsequent
         read/merge rather than here, which still can never route a caller
-        to the bootstrap-overwrite branch."""
-        from .fsutil import parquet_data_exists, recover_table_swap
+        to the bootstrap-overwrite branch.
 
-        # Heal a torn stage-and-swap publish FIRST: a crash between the
-        # swap's two renames leaves the table dir missing with the staged
-        # table complete — without the roll-forward this probe would say
-        # False and route the next upsert to bootstrap-overwrite, the
-        # exact wipe hazard the narrow contract guards. One fs.exists in
-        # the steady state.
-        recover_table_swap(self.spark, self.path)
-        return parquet_data_exists(self.spark, self.path)
+        Read-only, like ``read``: a torn or in-flight stage-and-swap
+        publish resolves to the directory that holds the table
+        (fsutil.resolve_table_swap), so a crash between the swap's two
+        renames still probes True. Only the writer heals, inside its
+        swap."""
+        from .fsutil import parquet_data_exists, resolve_table_swap
+
+        return parquet_data_exists(
+            self.spark, resolve_table_swap(self.spark, self.path)
+        )
 
     def read(self, as_of: int | None = None) -> DataFrame:
         """Current snapshot, or — with ``keep_history`` and ``as_of=n`` —
-        the table exactly as of commit ``n`` (0 = init, then one commit
-        per upsert), Hudi time-travel style.
+        the table exactly as of commit ``n`` (0 = the first commit, then
+        one per upsert or replace), Hudi time-travel style.
 
         The current read applies the persisted sidecar schema when present
         (authoritative — stable column set/order regardless of which
-        partitions were last rewritten); time-travel reads apply the
+        partitions were last rewritten) and resolves a torn swap without
+        repairing it (see ``exists``); time-travel reads apply the
         schema-as-of EMBEDDED in the snapshot commit (``_schema.json``,
         written into the stage so commit and schema publish atomically) —
         pre-embed commits fall back to footer inference, which is safe
         for them because snapshot dirs are flat single-job writes."""
-        from .fsutil import recover_table_swap
+        from .fsutil import resolve_table_swap
 
-        # Same torn-swap heal as exists() (one fs.exists steady-state):
-        # a reader of a crashed writer's table must see the rolled-forward
-        # (or rolled-back) state, never a missing dir.
-        recover_table_swap(self.spark, self.path)
         reader = self.spark.read
         if as_of is None:
+            path = resolve_table_swap(self.spark, self.path)
             persisted = self.schema_sidecar.current()
             if persisted is not None:
-                return reader.schema(persisted).parquet(self.path)
+                return reader.schema(persisted).parquet(path)
             if self.merge_schema:
                 reader = reader.option("mergeSchema", "true")
-            return reader.parquet(self.path)
+            return reader.parquet(path)
         if self.merge_schema:
             reader = reader.option("mergeSchema", "true")
         for seq, uri in self.snapshots():
@@ -699,31 +711,61 @@ class KeyedTable:
             if c.uri is not None and log.heal(c.uri) is not None
         ]
 
-    def _publish_snapshot(self, df: DataFrame) -> None:
-        """One immutable snapshot commit per write (only when
-        ``keep_history`` > 0): stage, rename into the timeline, trim to the
-        newest ``keep_history`` commits — same protocol as
-        streaming.rollup, same object-store-rename caveat.
+    def _publish_snapshot(self, df: DataFrame | None) -> None:
+        """One immutable snapshot commit per table commit (only when
+        ``keep_history`` > 0): stage, embed the schema-as-of, publish into
+        the timeline keeping the newest ``keep_history`` commits — same
+        CommitLog protocol as streaming.rollup.
 
-        Contract (unchanged): every call site passes the table's CURRENT
-        full content. On the staged-swap path that lets the stage be
-        built by HARD-LINKING the just-published table's immutable parquet
-        files — O(file count) metadata ops instead of a second full write
-        per commit (the Hudi-timeline cost this used to pay); ``df`` then
-        contributes only its schema (the embedded schema-as-of). Elsewhere
-        (partitioned tables, object stores) the stage is written from
-        ``df`` exactly as before."""
+        ``df`` is the table's CURRENT full content as just written, or
+        None after a partition-pruned write (it holds only the touched
+        partitions), which re-reads the table. On the staged-swap path the
+        stage is HARD-LINKED from the just-published table's immutable
+        parquet files — O(file count) metadata ops instead of a second
+        full write per commit — and ``df`` contributes only its schema.
+        Elsewhere (partitioned tables, object stores) the stage is written
+        from ``df``, which ``_write`` materialized, so the snapshot holds
+        exactly the rows the table does."""
         if not self.keep_history:
             return
-        if self._staged_swap():
-            self._publish_snapshot_commit(
-                self._stage_snapshot_links, df.schema
-            )
+        import uuid as _uuid
+
+        from .fsutil import hadoop_fs
+
+        if df is None:
+            df = self.read()
+        linked = self._staged_swap()
+        fs, hpath = hadoop_fs(self.spark, self.path)
+        for existing in self._snapshot_log.attempts():
+            stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
+            if linked:
+                self._stage_snapshot_links(stage)
+            else:
+                df.write.mode("overwrite").parquet(stage)
+            # Schema-as-of rides INSIDE the commit (after the populate —
+            # overwrite staging clears the dir): read(as_of=n) serves
+            # commit n with commit n's own schema, not the current
+            # sidecar's.
+            _embed_commit_schema(self.spark, stage, df.schema)
+            if self._snapshot_log.publish(
+                existing, stage, keep=self.keep_history
+            ):
+                break
+            # A concurrent writer took this seq: the publish released the
+            # stage, so re-stage and retry on a fresh listing rather than
+            # silently losing the commit.
         else:
-            self._publish_snapshot_commit(
-                lambda stage: df.write.mode("overwrite").parquet(stage),
-                df.schema,
+            raise RuntimeError(
+                f"could not publish snapshot commit at {self.path}__snapshots "
+                "after 5 attempts"
             )
+        # The staged dir was renamed away; drop its (now empty) parent.
+        # Non-recursive delete refuses a non-empty dir, so a concurrent
+        # writer's in-flight stage is never touched.
+        try:
+            fs.delete(hpath(f"{self.path}__stage"), False)
+        except Exception:
+            pass
 
     def _stage_snapshot_links(self, stage: str) -> None:
         """Populate one snapshot stage with hard links to the table's
@@ -761,43 +803,6 @@ class KeyedTable:
                     self.spark._jsc.hadoopConfiguration(),
                 )
 
-    def _publish_snapshot_commit(self, populate, schema) -> None:
-        """The snapshot commit engine: stage (via ``populate``), embed the
-        schema-as-of, publish into the timeline keeping the newest
-        ``keep_history`` snapshots."""
-        import uuid as _uuid
-
-        from .fsutil import hadoop_fs
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        for existing in self._snapshot_log.attempts():
-            stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
-            populate(stage)
-            # Schema-as-of rides INSIDE the commit (after the populate —
-            # overwrite staging clears the dir): read(as_of=n) serves
-            # commit n with commit n's own schema, not the current
-            # sidecar's.
-            _embed_commit_schema(self.spark, stage, schema)
-            if self._snapshot_log.publish(
-                existing, stage, keep=self.keep_history
-            ):
-                break
-            # A concurrent writer took this seq: the publish released the
-            # stage, so re-stage and retry on a fresh listing rather than
-            # silently losing the commit.
-        else:
-            raise RuntimeError(
-                f"could not publish snapshot commit at {self.path}__snapshots "
-                "after 5 attempts"
-            )
-        # The staged dir was renamed away; drop its (now empty) parent.
-        # Non-recursive delete refuses a non-empty dir, so a concurrent
-        # writer's in-flight stage is never touched.
-        try:
-            fs.delete(hpath(f"{self.path}__stage"), False)
-        except Exception:
-            pass
-
     def register(self, name: str) -> None:
         """Catalog sync (B12). Locally a temp view; on a cluster this is
         where saveAsTable/Glue registration goes."""
@@ -822,87 +827,121 @@ class KeyedTable:
 
         return not self.partition_by and commit_protocol(self.path) == "rename"
 
-    def _write(self, df: DataFrame, mode: str) -> None:
-        # The one COW data-commit choke point (init/upsert/compact/
-        # compact_history all land here): assert single-writer ownership
-        # BEFORE touching data — a concurrent writer raises instead of
-        # interleaving read-merge-overwrite lost updates — and re-check
-        # after, so a takeover that lands mid-write fences this writer
-        # loudly rather than letting it keep publishing.
-        self._ensure_lease()
-        if mode == "overwrite" and self._staged_swap():
+    def _write(self, df: DataFrame, parts: DataFrame | None = None) -> DataFrame | None:
+        """The one COW data write (``_commit`` and ``compact`` land here):
+        make ``df`` the table, or — with ``parts``, the partitions a
+        partition-pruned upsert touched — those partitions of it. Returns
+        the table's full content as written, or None when only ``parts``
+        were replaced. The lease is re-checked after the materialization
+        (before anything becomes visible) and after the write, so a
+        takeover that lands mid-write fences this writer loudly instead of
+        letting it keep publishing."""
+        if self._staged_swap():
             # Stage-and-swap: compute df straight into a staged dir (ONE
-            # materialization — no localCheckpoint pass, and df may read
-            # the very files the swap replaces, since they are untouched
-            # until the rename), then publish with two atomic renames
-            # (fsutil.swap_table_dir; crash windows journaled + healed by
-            # recover_table_swap). Halves the per-batch full-table work.
+            # materialization — df may read the very files the swap
+            # replaces, since they are untouched until the rename), then
+            # publish with two atomic renames (fsutil.swap_table_dir;
+            # crash windows journaled, and a torn swap left by a killed
+            # writer is healed there, by the lease holder, before the new
+            # one starts).
             import uuid as _uuid
 
             from .fsutil import swap_table_dir
 
             stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
             df.write.mode("overwrite").parquet(stage)
-            # Fenced writers must not PUBLISH: re-check between the
-            # (invisible) stage write and the swap, so a takeover landing
-            # mid-write raises with the table still on the old state.
             self._lease.check()
             swap_table_dir(self.spark, self.path, stage)
         else:
-            writer = df.write.mode(mode)
+            # In-place overwrite, the one place that decides to
+            # materialize: df may read the files the write deletes (a
+            # merge, a compaction), and the snapshot publish re-executes
+            # the plan (a nondeterministic input — rand(), an unordered
+            # limit, an equal-ordering precombine tie — must not publish
+            # a snapshot that diverges from the table).
+            df = df.localCheckpoint(eager=True)
+            mode = "static"
+            if parts is not None:
+                # Dynamic overwrite only replaces partitions PRESENT in
+                # the output: a touched partition whose rows were all
+                # deleted would survive as stale files. Detect with ONE
+                # distributed anti-join over the materialized batch and
+                # rewrite the whole table for that (rare) batch.
+                vanished = parts.join(
+                    df.select(*self.partition_by).distinct(),
+                    self.partition_by,
+                    "left_anti",
+                )
+                if vanished.isEmpty():
+                    mode = "dynamic"
+                else:
+                    untouched = self.read().join(
+                        F.broadcast(parts), self.partition_by, "left_anti"
+                    )
+                    # allowMissingColumns: when the batch that emptied a
+                    # partition ALSO carries schema drift, df has the new
+                    # column but the untouched partitions do not (found
+                    # by tools/fuzz_cdc.py); old rows null-fill, matching
+                    # merge_upsert's own B11 reconciliation.
+                    df = untouched.unionByName(
+                        df, allowMissingColumns=True
+                    ).localCheckpoint(eager=True)
+                    parts = None
+            writer = df.write.mode("overwrite")
             if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
+                writer = writer.partitionBy(*self.partition_by).option(
+                    "partitionOverwriteMode", mode
+                )
+            self._lease.check()
             writer.parquet(self.path)
         self._lease.check()
+        return df if parts is None else None
 
-    def _row_columns(self, changes: DataFrame) -> list[str]:
-        """Data columns = change columns minus CDC metadata (op/ordering)."""
-        from .operators.merge import cdc_meta_columns
+    def _commit(self, df: DataFrame, parts: DataFrame | None = None) -> None:
+        """The one table commit: take the lease, widen the schema sidecar,
+        write, reset the sidecar, publish the snapshot. Without ``parts``
+        it is a table REPLACE — ``init``, the first ``upsert``,
+        ``compact_history`` and every non-partitioned upsert; with it, a
+        partition-pruned upsert of the ``parts`` partitions.
 
+        Two-phase schema commit: widen the sidecar to union(old, new)
+        BEFORE the write, then RESET it to exactly the written schema
+        after a full write. Both crash windows are then harmless-wide
+        (phantom columns null-fill): a crash before the write leaves the
+        old data under a wider sidecar; a crash after it leaves the new
+        data under the union. A single reset-after-write had a
+        stale-NARROW window — a crash between write and publish on a
+        WIDENING replace served the new data through the old sidecar,
+        projecting the new column out, and the next rewrite made the loss
+        permanent. The reset also retires phantom-wide columns a crashed
+        NARROWING replace left behind. A partition-pruned write cannot
+        reset (untouched partitions keep their columns, and narrowing the
+        sidecar would reopen the vanishing-column hole), so on a
+        PARTITIONED table a crashed narrowing replace leaves its dropped
+        column as a permanent all-NULL phantom: accepted, over silent
+        data loss."""
+        # Refuse up front (single-writer): a fenced writer must not even
+        # widen the sidecar.
+        self._ensure_lease()
+        self.schema_sidecar.publish(df.schema)
+        full = self._write(df, parts)
+        if full is not None:
+            self.schema_sidecar.publish(full.schema, reset=True)
+        # Publish what was written, never a re-read of a full write: an
+        # EMPTY partitioned write leaves a footer-less dir that read()
+        # cannot infer a schema from (found by tools/fuzz_cdc.py).
+        self._publish_snapshot(full)
+
+    def _empty_snapshot(self, changes: DataFrame) -> DataFrame:
+        """An empty table with the data columns of ``changes`` (CDC
+        metadata — op/ordering — stripped): the snapshot a bootstrap
+        merges into."""
         meta = cdc_meta_columns(self.op_col, self.ordering)
-        return [c for c in changes.columns if c not in meta]
+        return changes.select(*[c for c in changes.columns if c not in meta]).limit(0)
 
     def init(self, df: DataFrame) -> None:
         """Create/replace the table from a snapshot."""
-        # Refuse up front (single-writer): a fenced writer must not even
-        # widen the sidecar; _write re-checks as the last-line defense.
-        self._ensure_lease()
-        if self.keep_history and not self._staged_swap():
-            # The snapshot publish re-executes this plan; materialize it
-            # so a nondeterministic input (rand(), unordered limit,
-            # equal-ordering precombine ties upstream) cannot publish a
-            # snapshot that diverges from the table just written. On the
-            # staged-swap path the snapshot is hard-linked from the files
-            # the stage write materialized, so the plan never re-executes
-            # — no checkpoint needed.
-            df = df.localCheckpoint(eager=True)
-        # Two-phase schema commit for a table REPLACE: widen the sidecar
-        # to union(old, new) BEFORE the write, then RESET it to exactly
-        # the new schema after the data lands. Both crash windows are then
-        # harmless-wide (phantom columns null-fill): crash before the
-        # write leaves the old data under a wider sidecar; crash after it
-        # leaves the new data under the union — on a NARROWING replace
-        # that union still holds the dropped column, and on a PARTITIONED
-        # table the next upsert re-unions it and physically rewrites it
-        # (all-NULL) into touched partitions: the dropped column is
-        # resurrected permanently. Accepted tradeoff — a phantom all-NULL
-        # column over silent data loss; non-partitioned tables self-heal
-        # at their next upsert (full rewrite → reset, see upsert). The
-        # earlier single
-        # reset-after-write ordering had a stale-NARROW window — a crash
-        # between write and publish on a WIDENING replace served the new
-        # data through the old sidecar, projecting the new column out
-        # (and the next upsert's rewrite made the loss permanent).
-        self.schema_sidecar.publish(df.schema)
-        self._write(df, "overwrite")
-        self.schema_sidecar.publish(df.schema, reset=True)
-        # Publish from the DF just written, NOT a re-read: an EMPTY
-        # partitioned write leaves a footer-less dir that read() cannot
-        # infer a schema from — the re-read crashed the write path on any
-        # batch that emptied the table (found by tools/fuzz_cdc.py), and
-        # eagerly evaluating read() as the argument crashed even with
-        # keep_history=0 where the publish is a no-op.
-        self._publish_snapshot(df)
+        self._commit(df)
 
     def upsert(self, changes: DataFrame) -> None:
         """Apply a CDC change batch (B5/B6/B8/B11).
@@ -912,139 +951,24 @@ class KeyedTable:
         (dynamic partition overwrite) — the rest of the table is untouched,
         which is the property that makes this viable at 100 TB. Like Hudi's
         non-global index, a key's partition value is assumed immutable.
+        The first batch merges into an empty snapshot and replaces the
+        table: the merge's precombine runs BEFORE deletes drop, so a key
+        whose newest change in that batch is a delete cannot resurrect
+        through an older insert.
         """
-        from .operators.merge import latest_by_key
-
-        # Refuse up front: no sidecar widening, no wasted merge compute,
-        # for a commit the lease would reject at _write anyway.
-        self._ensure_lease()
+        parts = None
         if not self.exists():
-            # Precombine BEFORE dropping deletes: a key whose newest change
-            # in this first batch is a delete must not resurrect through an
-            # older insert that the delete superseded (mixed-op initial
-            # batches are normal when a whole change feed replays in one
-            # micro-batch).
-            latest = latest_by_key(changes, self.keys, self.ordering)
-            if self.op_col and self.op_col in changes.columns:
-                latest = latest.filter(F.col(self.op_col) != "d")
-            bootstrap = latest.select(*self._row_columns(changes))
-            if self.keep_history and not self._staged_swap():
-                # Same materialize-before-publish contract as init(): the
-                # publish re-executes the plan, and a precombine with
-                # equal-ordering ties picks nondeterministically per
-                # execution — the snapshot must be the rows the table
-                # actually holds. (Staged swap: snapshot = hard links to
-                # the written files; the plan never re-executes.)
-                bootstrap = bootstrap.localCheckpoint(eager=True)
-            # Bootstrap ≡ table replace: same two-phase schema commit as
-            # init (widen before the write, reset after), so a crash on a
-            # re-bootstrap of a previously-emptied table whose new feed is
-            # WIDER than the old sidecar cannot serve the new data through
-            # the stale-narrow schema. The reset matters for the narrowing
-            # direction: the re-bootstrapped table reads on its new feed's
-            # schema, not the dead table's.
-            self.schema_sidecar.publish(bootstrap.schema)
-            self._write(bootstrap, "overwrite")
-            self.schema_sidecar.publish(bootstrap.schema, reset=True)
-            # `bootstrap` IS the full table here — publish it directly
-            # (see init: a re-read crashes when a first batch whose newest
-            # changes are all deletes writes an empty, footer-less table).
-            self._publish_snapshot(bootstrap)
-            return
-
-        current = self.read()
-        if self.partition_by:
-            # Partition-pruned COW: merge only partitions holding changed
-            # keys. The semi-join broadcast is small (distinct partition
-            # values of the change batch).
-            parts = changes.select(*self.partition_by).distinct()
-            current = current.join(F.broadcast(parts), self.partition_by, "left_semi")
-        merged = merge_upsert(
-            current, changes, self.keys, self.ordering, op_col=self.op_col
-        )
-        if not self._staged_swap():
-            # In-place overwrite: the merge reads the files the write
-            # replaces — break the lineage with a full materialization.
-            # The staged swap needs neither: the merge computes straight
-            # into the stage while its input files sit untouched, and the
-            # snapshot (keep_history) hard-links the staged files instead
-            # of re-executing the plan.
-            merged = merged.localCheckpoint(eager=True)
-        # WIDEN the sidecar before any data write: if the write fails
-        # mid-way the sidecar is at worst wider than the files (null-fill,
-        # harmless); writing drifted files first and crashing before the
-        # publish would leave a stale-narrow sidecar that drops the new
-        # column — the exact loss class this closes.
-        self.schema_sidecar.publish(merged.schema)
-        if self.partition_by:
-            # Dynamic overwrite only replaces partitions PRESENT in the
-            # output: a touched partition whose rows were all deleted would
-            # survive as stale files. Detect with ONE distributed anti-join
-            # over the (tiny, checkpointed) merged batch — not driver-side
-            # collects — and fall back to a full rewrite for that (rare)
-            # batch.
-            vanished = parts.join(
-                merged.select(*self.partition_by).distinct(),
-                self.partition_by,
-                "left_anti",
-            )
-            if not vanished.isEmpty():
-                untouched = self.read().join(
-                    F.broadcast(parts), self.partition_by, "left_anti"
-                )
-                # allowMissingColumns: when the batch that emptied a
-                # partition ALSO carries schema drift, `merged` has the
-                # new column but the untouched partitions (all still on
-                # the old schema — nothing is rewritten yet) do not; a
-                # strict unionByName crashed this fallback with
-                # NUM_COLUMNS_MISMATCH (found by tools/fuzz_cdc.py).
-                # Old rows null-fill, matching merge_upsert's own B11
-                # reconciliation.
-                merged = untouched.unionByName(
-                    merged, allowMissingColumns=True
-                ).localCheckpoint(eager=True)
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                try:
-                    self._write(merged, "overwrite")
-                finally:
-                    self.spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                    )
-                # The static rewrite's `merged` is untouched ∪ merged —
-                # the full table; publishing it directly survives the
-                # all-rows-deleted batch (empty write = no footers to
-                # re-read) that crashed the re-read form.
-                self._publish_snapshot(merged)
-                return
-        self._write(merged, "overwrite")
-        if not self.partition_by:
-            # Opportunistic reconcile: this was a FULL rewrite, so the
-            # files' schema is provably exactly `merged.schema` — reset the
-            # sidecar to it, retiring any phantom-wide columns left by a
-            # crashed NARROWING replace (crash between init's _write and
-            # its reset leaves the union sidecar holding the dropped
-            # column; without this, the next upsert re-unions and rewrites
-            # it as all-NULL forever). PARTITIONED tables cannot do this —
-            # untouched partitions were not rewritten, so narrowing the
-            # sidecar to the merge output would reopen the vanishing-column
-            # hole; there the wide-over-narrow outcome is permanent by
-            # design (documented tradeoff: a phantom all-NULL column over
-            # silent data loss).
-            self.schema_sidecar.publish(merged.schema, reset=True)
-        if self.partition_by:
-            # Dynamic partial overwrite: `merged` holds only the touched
-            # partitions, so the snapshot must re-read the full table.
-            # Safe here by construction: this branch requires merged to
-            # cover every touched partition (the vanished check above), so
-            # the table has at least merged's footers. keep_history guard
-            # keeps the read()'s footer-inference off the keep_history=0
-            # hot path.
-            if self.keep_history:
-                self._publish_snapshot(self.read())
+            current = self._empty_snapshot(changes)
         else:
-            self._publish_snapshot(merged)
+            current = self.read()
+            if self.partition_by:
+                # Partition-pruned COW: merge only partitions holding
+                # changed keys. The semi-join broadcast is small (distinct
+                # partition values of the change batch).
+                parts = changes.select(*self.partition_by).distinct()
+                current = current.join(F.broadcast(parts), self.partition_by, "left_semi")
+        merged = merge_upsert(current, changes, self.keys, self.ordering, self.op_col)
+        self._commit(merged, parts)
 
     def compact(
         self,
@@ -1062,12 +986,8 @@ class KeyedTable:
         row-group min/max stats in BOTH dimensions at once. Bits are
         sized from the column maxima so large keys keep their locality
         (fixed-width slices silently collapse the curve)."""
+        self._ensure_lease()
         current = self.read()
-        if not self._staged_swap():
-            # In-place overwrite reads the files it replaces — break the
-            # lineage. The staged swap leaves them untouched until the
-            # rename, so the compaction is one pass, not two.
-            current = current.localCheckpoint(eager=True)
         n_out = target_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions")
         )
@@ -1092,21 +1012,14 @@ class KeyedTable:
                 raise ValueError("cluster_by supports 1 (sort) or 2 (Z-order) columns")
         else:
             out = current.repartition(n_out)
-        self._write(out, "overwrite")
+        self._write(out)
 
     def compact_history(self, history: DataFrame) -> None:
         """Bootstrap from a full change history (B13 earliest replay):
-        one global latest-wins pass instead of per-batch merges."""
-        self._ensure_lease()
-        empty = self.spark.createDataFrame(
-            [], history.select(*self._row_columns(history)).schema
-        )
-        merged = merge_upsert(empty, history, self.keys, self.ordering, self.op_col)
-        # Table replace: two-phase schema commit (see init) — widen first
-        # so no crash window serves WIDE data under a NARROW sidecar.
-        self.schema_sidecar.publish(merged.schema)
-        self._write(merged, "overwrite")
-        self.schema_sidecar.publish(merged.schema, reset=True)
+        one global latest-wins pass instead of per-batch merges; a table
+        replace like ``init``."""
+        empty = self._empty_snapshot(history)
+        self._commit(merge_upsert(empty, history, self.keys, self.ordering, self.op_col))
 
 
 class DeltaLogTable:
@@ -1557,7 +1470,7 @@ class DeltaLogTable:
             if base is None:
                 raise FileNotFoundError(f"empty MOR table at {self.path}")
             return base
-        # Strip the same CDC metadata set as KeyedTable._row_columns (plus
+        # Strip the same CDC metadata set as KeyedTable._empty_snapshot (plus
         # the MOR-only ingest_batch) so the COW and MOR variants of one feed
         # agree on the table schema — with ordering=("_lsn",) a batch that
         # happens to carry _ts_ms must not promote it to a data column.

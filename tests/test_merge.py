@@ -18,9 +18,10 @@ from debezium_emr_hudi_deltastreamer_sample_spark.operators.merge import (
 SCHEMA = "id int, name string, salary int, op string, lsn long"
 
 
-def replay(events):
-    """Independent oracle: dict replay of latest-wins CDC semantics."""
-    state = {}
+def replay(events, snapshot=()):
+    """Independent oracle: dict replay of latest-wins CDC semantics over
+    a keyed starting snapshot of (id, name, salary) rows."""
+    state = {row[0]: tuple(row) for row in snapshot}
     for id_, name, salary, op, _lsn in sorted(events, key=lambda e: e[4]):
         if op == "d":
             state.pop(id_, None)
@@ -78,8 +79,14 @@ def test_randomized_replay_equivalence(spark, seed):
         else:
             changes.append((id_, f"n{lsn}", rng.randrange(1000), op, lsn))
     rng.shuffle(changes)  # arrival order ≠ LSN order
-    got = engine_result(spark, [], changes)
-    assert got == replay(changes)
+    # A keyed starting snapshot: some keys the changes touch, some they
+    # never do (ids 12-15), or none at all.
+    snapshot = [
+        (id_, f"s{id_}", rng.randrange(1000))
+        for id_ in rng.sample(range(16), rng.randrange(9))
+    ]
+    got = engine_result(spark, snapshot, changes)
+    assert got == replay(changes, snapshot)
 
 
 def test_latest_by_key_deterministic(spark):
@@ -135,18 +142,26 @@ _event = st.tuples(
 )
 
 
-@given(events=st.lists(_event, min_size=1, max_size=30))
+@given(
+    events=st.lists(_event, min_size=1, max_size=30),
+    snapshot=st.dictionaries(
+        st.integers(0, 7),  # overlaps the event ids, and some beyond them
+        st.tuples(st.text("ab", min_size=1, max_size=3), st.integers(0, 99)),
+        max_size=6,
+    ),
+)
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_merge_property_replay(spark, events):
-    """Property: for ANY insert/update/delete sequence, the distributed
-    merge equals the sequential dict replay (hypothesis shrinks failures
-    to a minimal event sequence)."""
+def test_merge_property_replay(spark, events, snapshot):
+    """Property: for ANY keyed snapshot and insert/update/delete sequence,
+    the distributed merge equals the sequential dict replay (hypothesis
+    shrinks failures to a minimal snapshot and event sequence)."""
     changes = [
         (id_, None if op == "d" else name, None if op == "d" else sal, op, lsn)
         for lsn, (id_, name, sal, op) in enumerate(events, start=1)
     ]
-    assert engine_result(spark, [], changes) == replay(changes)
+    rows = [(id_, name, sal) for id_, (name, sal) in snapshot.items()]
+    assert engine_result(spark, rows, changes) == replay(changes, rows)

@@ -56,4 +56,12 @@ def test_hostile_toy_query_exits_1(spark, sf_tiny, monkeypatch):
     )
     monkeypatch.setenv("SPARK_GRAFT_PARITY_SF_DIR", sf_tiny)
     monkeypatch.setattr(parity, "SF_DIR", sf_tiny)
-    assert parity.main(["toy_hostile"]) == 1
+    # main() builds its session with session.get_spark(), whose
+    # getOrCreate re-applies the factory's confs to this shared session —
+    # its shuffle fan-out (the host's core count) would leak into every
+    # later test (it broke test_plans' shuffle-count audit).
+    fan_out = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert parity.main(["toy_hostile"]) == 1
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", fan_out)

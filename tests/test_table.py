@@ -111,6 +111,29 @@ def test_compact_history_equals_incremental(spark, tmp_path):
     assert state(inc) == state(boot) == {1: ("eu", 11)}
 
 
+@pytest.mark.parametrize("partition_by", [[], ["region"]])
+def test_compact_history_publishes_snapshot(spark, tmp_path, partition_by):
+    """compact_history is a table replace: on a keep_history table it
+    publishes a snapshot like init, so the newest as-of read is the
+    current table, not the rows from before the replace. A partitioned
+    replace overwrites statically: the partition the new history lacks
+    (us) is gone, not left behind by a dynamic overwrite."""
+    t = KeyedTable(
+        spark, str(tmp_path / "t"), keys=["id"], ordering=["_lsn"],
+        partition_by=partition_by, keep_history=3,
+    )
+    t.init(
+        spark.createDataFrame(
+            [(1, "eu", 10), (2, "us", 20)], "id int, region string, v int"
+        )
+    )
+    t.compact_history(spark.createDataFrame([(3, "eu", 30, "c", 5)], CH_SCHEMA))
+    newest = t.snapshots()[-1][0]
+    assert state(t) == {3: ("eu", 30)}
+    as_of = {r.id: (r.region, r.v) for r in t.read(as_of=newest).collect()}
+    assert as_of == state(t)
+
+
 def test_register_makes_table_queryable(spark, tmp_path):
     t = make_table(spark, tmp_path)
     t.upsert(spark.createDataFrame([(1, "eu", 10, "c", 1)], CH_SCHEMA))
@@ -832,6 +855,39 @@ def test_ivm_fact_and_dim_batches_build_join(spark, tmp_path):
     )
     # fid 12 references a missing dim key — absent under inner join.
     assert view_state(v) == {10: (1, 100, "a"), 11: (2, 200, "b")}
+
+
+def test_ivm_repeated_refresh_compiles_no_new_classes(spark, tmp_path):
+    """The generated-class cache (session.CODEGEN_CACHE_ENTRIES) holds a
+    whole refresh: once the view's plans have settled (the first merges
+    after the bootstrap still change the tables' file layout), a fact
+    batch of the same shape compiles no new class. Spark's default
+    100-entry cache evicted them: 21-29 recompilations per warm refresh."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compilations():
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    v = make_view(spark, tmp_path)
+    v.apply_dim_batch(
+        spark.createDataFrame([(1, "a", "u", 1), (2, "b", "u", 1)], DIM_SCHEMA)
+    )
+
+    def fact_batch(lsn):
+        rows = [(10, 1, lsn, "u", lsn), (11, 2, lsn, "u", lsn), (12, 1, lsn, "d", lsn)]
+        v.apply_fact_batch(spark.createDataFrame(rows, FACT_SCHEMA))
+
+    for lsn in (1, 2, 3):  # bootstrap, then two merges
+        fact_batch(lsn)
+    added = []
+    for lsn in (4, 5, 6):
+        before = compilations()
+        fact_batch(lsn)
+        added.append(compilations() - before)
+    # The counter is JVM-wide: the least of three repeats discounts a
+    # stray compilation by another test's background thread.
+    assert min(added) == 0, added
+    assert view_state(v) == {10: (1, 6, "a"), 11: (2, 6, "b")}
 
 
 def test_ivm_dim_delete_retracts_inner_join_rows(spark, tmp_path):

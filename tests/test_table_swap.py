@@ -79,17 +79,18 @@ def test_swap_crash_heals_and_redelivery_converges(
         t.upsert(b2)
     monkeypatch.undo()
 
-    # A fresh process (new KeyedTable) must heal through exists()/read()
-    # with no torn state: after-journal rolls back to the OLD table,
-    # after-retire rolls the complete stage FORWARD, after-publish just
-    # clears the journal — in every case the table is readable and
-    # redelivery converges on the no-crash state.
+    # A fresh process (new KeyedTable) reads the torn state READ-ONLY:
+    # after-journal serves the OLD table, after-retire the complete stage,
+    # after-publish the new table — in every case the table is readable,
+    # and the journal is left for the writer. Redelivery (the writer)
+    # heals it and converges on the no-crash state.
     t2 = _table(spark, path)
     assert t2.exists()
     healed = _state(t2)
     assert healed in (before, [(1, "a"), (2, "B"), (3, "c")])
-    assert not os.path.exists(table_swap_journal(str(path)))
+    assert os.path.exists(table_swap_journal(str(path)))
     t2.upsert(b2)  # at-least-once redelivery
+    assert not os.path.exists(table_swap_journal(str(path)))
     assert _state(t2) == [(1, "a"), (2, "B"), (3, "c")]
     # No retired copies or orphan stages leak past recovery + next publish.
     retire = f"{path}__retire"
@@ -111,6 +112,46 @@ def test_swap_crash_between_renames_rolls_forward(spark, tmp_path, monkeypatch):
     t2 = _table(spark, path)
     assert t2.exists() is True
     assert _state(t2) == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_reader_between_swap_renames_never_mutates(
+    spark, tmp_path, monkeypatch, protocol
+):
+    """Readers never mutate table state: a reader that runs between a
+    healthy swap's two renames (table dir retired, stage complete,
+    journal present) reads the staged table and leaves the writer's
+    stage and journal alone. The writer's publish then completes with no
+    nested dir and exactly the staged rows. The swap is driven directly
+    so the pointer protocol (whose tables never swap) still proves its
+    readers resolve a torn swap without repairing it."""
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    path = str(tmp_path / "t")
+    t = _table(spark, path)
+    t.init(spark.createDataFrame([(1, "a")], "id int, v string"))
+    stage = f"{path}__stage/feedface"
+    spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string").write.parquet(
+        stage
+    )
+    journal = table_swap_journal(path)
+    seen = {}
+
+    def reader():
+        r = _table(spark, path)
+        seen["exists"] = r.exists()
+        seen["rows"] = _state(r)
+        seen["stage"] = os.path.isdir(stage)
+        seen["journal"] = os.path.exists(journal)
+        seen["table"] = os.path.exists(path)
+
+    swap_table_dir(spark, path, stage, _test_after_retire=reader)
+    assert seen == {
+        "exists": True, "rows": [(1, "a"), (2, "b")], "stage": True,
+        "journal": True, "table": False,
+    }
+    assert not os.path.exists(journal)
+    assert not [d for d in os.listdir(path) if os.path.isdir(f"{path}/{d}")]
+    assert _state(_table(spark, path)) == [(1, "a"), (2, "b")]
 
 
 def test_recover_rolls_back_when_only_retire_survives(spark, tmp_path):

@@ -91,9 +91,9 @@ def test_post_write_check_detects_mid_commit_takeover(spark, tmp_path):
     w1.upsert(_mk(spark, [(1, "a", "c", 1)]))
 
     class MidCommitTakeover(KeyedTable):
-        def _write(self, df, mode):
+        def _write(self, df, parts=None):
             self._lease.ensure(self.take_over)
-            df_writer = df.write.mode(mode)
+            df_writer = df.write.mode("overwrite")
             df_writer.parquet(self.path)
             # Takeover lands between the data write and the post-check.
             WriterLease(self.spark, self.path, "usurper").ensure(take_over=True)
