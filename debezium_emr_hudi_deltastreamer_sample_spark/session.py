@@ -63,10 +63,6 @@ def get_spark(
         # refuses by default; read as long and convert in catalog.load_table
         # (values are µs-resolution, so the conversion is lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Dynamic partition overwrite: the COPY_ON_WRITE-style upsert
-        # (operators/merge.py) rewrites only touched partitions, mirroring
-        # Hudi's file-group rewrite (README.md:300).
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )

@@ -19,13 +19,17 @@ desired rows of the affected keys (post-merge fact rows ⋈ current dim)
 as upserts ranked ``_ivm_seq`` = 2, and every affected key as a delete
 ranked 1. The view merge's own precombine keeps the upsert wherever one
 exists, so exactly the affected keys with no surviving join row are
-retracted — no eager checkpoints, no separate gone-keys anti-join. Cost
-per batch is O(|Δ| + affected rows), independent of table size, except
-that a PARTITIONED view also semi-joins itself to give its retractions
-the stale rows' partition values. The view write is a KeyedTable COW
-merge, partition-prunable the same way (pass ``partition_by``). At
-100 TB this is the difference between a nightly full re-join and a
-seconds-latency denormalized serving table.
+retracted — no separate gone-keys anti-join. The affected keys are
+materialized once (the fact batch's own keys, or the dim side's
+semi-join result), so the fact table is scanned once for keys. Cost per
+batch is O(|Δ| + affected rows), independent of table size. A
+PARTITIONED view needs its retractions to carry the stale rows'
+partition values: it materializes the desired rows and the affected
+keys left without one, and semi-joins itself only for those keys, so
+only batches that retract rows scan the view. The view write is a
+KeyedTable COW merge, partition-prunable the same way (pass
+``partition_by``). At 100 TB this is the difference between a nightly
+full re-join and a seconds-latency denormalized serving table.
 
 Restart/replay: every refresh recomputes affected rows FROM CURRENT
 STATE (never from the delta alone), so re-delivering the LATEST batch
@@ -180,32 +184,38 @@ class IncrementalJoinView:
         dkeys = changes.select(
             F.col(self.dim_key).alias("__ivm_dkey")
         ).distinct()
+        # Materialized once: the refresh's probe and semi-join and both
+        # branches of the view merge read these keys, and each would
+        # otherwise rescan the fact table. A key set, small next to it.
         affected = (
             self.fact.read()
             .join(F.broadcast(dkeys), F.col(self.fk) == F.col("__ivm_dkey"), "left_semi")
             .select(*self.fact_keys)  # unique: the fact table is keyed
+            .localCheckpoint(eager=True)
         )
         self._refresh(affected)
 
     # -- maintenance core ---------------------------------------------------
 
     def _refresh(self, keys: DataFrame) -> None:
-        """Recompute the view rows of the affected fact ``keys`` from
-        current fact/dim state as ONE plan handed to ``view.upsert``:
-        every desired join row is an upsert with ``_ivm_seq`` = 2, every
-        affected key is a delete with ``_ivm_seq`` = 1, and the view
-        merge's own precombine keeps the upsert where one exists — so
-        exactly the keys with no surviving join row (fact deleted, or an
-        inner join that lost its dim match) are retracted. Everything is
-        keyed work, with one emptiness probe and no full-table
-        recomputation.
+        """Recompute the view rows of the affected fact ``keys`` (already
+        materialized by the caller) from current fact/dim state as ONE
+        plan handed to ``view.upsert``: every desired join row is an
+        upsert with ``_ivm_seq`` = 2, every affected key is a delete with
+        ``_ivm_seq`` = 1, and the view merge's own precombine keeps the
+        upsert where one exists — so exactly the keys with no surviving
+        join row (fact deleted, or an inner join that lost its dim match)
+        are retracted. Everything is keyed work, with one emptiness probe
+        and no full-table recomputation.
 
-        A partitioned view's retractions carry the CURRENT view row, not
-        null-filled keys: a delete whose partition columns are NULL lands
-        in the wrong partition, the partition-pruned merge never reaches
-        the stale row, and the retraction is silently dropped. That costs
-        one semi-join of the view per refresh; a non-partitioned view
-        needs only the keys."""
+        A partitioned view's retractions must carry the CURRENT view row,
+        not null-filled keys: a delete whose partition columns are NULL
+        lands in the wrong partition, the partition-pruned merge never
+        reaches the stale row, and the retraction is silently dropped.
+        There the desired rows and the keys left without one are
+        materialized (the view merge reads both several times), and the
+        view is semi-joined only for those keys, behind a second emptiness
+        probe, so insert/update batches never scan the view."""
         if keys.isEmpty():
             return
         fact_rows = self.fact.read().join(keys, self.fact_keys, "left_semi")
@@ -221,8 +231,14 @@ class IncrementalJoinView:
         else:
             desired = fact_rows.limit(0)
         retract = keys
-        if self.view.partition_by and self.view.exists():
-            retract = self.view.read().join(keys, self.fact_keys, "left_semi")
+        if self.view.partition_by:
+            desired = desired.localCheckpoint(eager=True)
+            gone = keys.join(
+                desired.select(*self.fact_keys), self.fact_keys, "left_anti"
+            ).localCheckpoint(eager=True)
+            retract = gone.limit(0)
+            if self.view.exists() and not gone.isEmpty():
+                retract = self.view.read().join(gone, self.fact_keys, "left_semi")
         upserts = desired.select("*", F.lit("u").alias("_op"), F.lit(2).alias(_SEQ))
         deletes = retract.select("*", F.lit("d").alias("_op"), F.lit(1).alias(_SEQ))
         self.view.upsert(upserts.unionByName(deletes, allowMissingColumns=True))

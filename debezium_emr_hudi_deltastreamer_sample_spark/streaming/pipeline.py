@@ -366,7 +366,15 @@ def scd2_batch_processor(
     batch-plus-open-rows, never the full history re-sorted; the rewrite is
     the same portable COW as upsert_batch_processor (a real table format's
     atomic commit replaces the overwrite; with the table partitioned by
-    key-bucket only touched buckets rewrite)."""
+    key-bucket only touched buckets rewrite).
+
+    Each batch runs as the table's single writer (``WriterLease``). Run
+    the processor under ``start_pipeline`` (or ``table.
+    pipeline_writer_scope`` with a stable id) so a restart after a crash
+    re-owns the lease: called directly, the writer id is per process,
+    and a restarted process gets ``ConcurrentWriterError`` on every
+    batch until it runs under such a scope or, with no other writer
+    alive, ``{table_path}__writer`` is deleted (USAGE.md)."""
     from pyspark.sql import Window
 
     cols = [key, attr, "valid_from", "valid_from_id", "valid_to", "is_current"]

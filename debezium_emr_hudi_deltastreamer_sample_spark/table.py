@@ -16,9 +16,11 @@ publish the snapshot — Hudi's precombine → upsert → table replace
 lifecycle (reference README.md:295-313). ``init``, the first ``upsert``
 (a merge into an empty snapshot) and ``compact_history`` are table
 replaces through it. Its one write, ``_write``, decides the only
-materialization: an in-place overwrite checkpoints its input once; the
-stage-and-swap publish (non-partitioned tables on rename-protocol
-stores) writes the stage straight from the plan.
+materialization: an in-place overwrite checkpoints its input once when
+that input reads the table (a merge, a compaction) or a snapshot will
+re-execute it (``keep_history``); a replace from new content without
+history, and the stage-and-swap publish (non-partitioned tables on
+rename-protocol stores), write straight from the plan.
 
 COW strategy at scale: with ``partition_by`` set an upsert rewrites ONLY
 the partitions containing changed keys (a per-write dynamic partition
@@ -827,12 +829,16 @@ class KeyedTable:
 
         return not self.partition_by and commit_protocol(self.path) == "rename"
 
-    def _write(self, df: DataFrame, parts: DataFrame | None = None) -> DataFrame | None:
+    def _write(
+        self, df: DataFrame, parts: DataFrame | None = None, *, reads_table: bool = False
+    ) -> DataFrame | None:
         """The one COW data write (``_commit`` and ``compact`` land here):
         make ``df`` the table, or — with ``parts``, the partitions a
-        partition-pruned upsert touched — those partitions of it. Returns
-        the table's full content as written, or None when only ``parts``
-        were replaced. The lease is re-checked after the materialization
+        partition-pruned upsert touched — those partitions of it.
+        ``reads_table`` says ``df`` is computed from the table's own files
+        (a merge into the stored snapshot, a compaction). Returns the
+        table's full content as written, or None when only ``parts`` were
+        replaced. The lease is re-checked after the materialization
         (before anything becomes visible) and after the write, so a
         takeover that lands mid-write fences this writer loudly instead of
         letting it keep publishing."""
@@ -854,12 +860,15 @@ class KeyedTable:
             swap_table_dir(self.spark, self.path, stage)
         else:
             # In-place overwrite, the one place that decides to
-            # materialize: df may read the files the write deletes (a
-            # merge, a compaction), and the snapshot publish re-executes
-            # the plan (a nondeterministic input — rand(), an unordered
-            # limit, an equal-ordering precombine tie — must not publish
-            # a snapshot that diverges from the table).
-            df = df.localCheckpoint(eager=True)
+            # materialize, and only when it must: a df that reads the
+            # files the write deletes, or one the snapshot publish
+            # re-executes (a nondeterministic input — rand(), an
+            # unordered limit, an equal-ordering precombine tie — must
+            # not publish a snapshot that diverges from the table). A
+            # replace from new content on a table without history
+            # writes straight from the plan.
+            if reads_table or self.keep_history:
+                df = df.localCheckpoint(eager=True)
             mode = "static"
             if parts is not None:
                 # Dynamic overwrite only replaces partitions PRESENT in
@@ -897,12 +906,15 @@ class KeyedTable:
         self._lease.check()
         return df if parts is None else None
 
-    def _commit(self, df: DataFrame, parts: DataFrame | None = None) -> None:
+    def _commit(
+        self, df: DataFrame, parts: DataFrame | None = None, *, reads_table: bool = False
+    ) -> None:
         """The one table commit: take the lease, widen the schema sidecar,
         write, reset the sidecar, publish the snapshot. Without ``parts``
         it is a table REPLACE — ``init``, the first ``upsert``,
         ``compact_history`` and every non-partitioned upsert; with it, a
         partition-pruned upsert of the ``parts`` partitions.
+        ``reads_table`` is passed on to ``_write``.
 
         Two-phase schema commit: widen the sidecar to union(old, new)
         BEFORE the write, then RESET it to exactly the written schema
@@ -924,7 +936,7 @@ class KeyedTable:
         # widen the sidecar.
         self._ensure_lease()
         self.schema_sidecar.publish(df.schema)
-        full = self._write(df, parts)
+        full = self._write(df, parts, reads_table=reads_table)
         if full is not None:
             self.schema_sidecar.publish(full.schema, reset=True)
         # Publish what was written, never a re-read of a full write: an
@@ -957,7 +969,8 @@ class KeyedTable:
         through an older insert.
         """
         parts = None
-        if not self.exists():
+        exists = self.exists()
+        if not exists:
             current = self._empty_snapshot(changes)
         else:
             current = self.read()
@@ -968,7 +981,7 @@ class KeyedTable:
                 parts = changes.select(*self.partition_by).distinct()
                 current = current.join(F.broadcast(parts), self.partition_by, "left_semi")
         merged = merge_upsert(current, changes, self.keys, self.ordering, self.op_col)
-        self._commit(merged, parts)
+        self._commit(merged, parts, reads_table=exists)
 
     def compact(
         self,
@@ -1012,7 +1025,7 @@ class KeyedTable:
                 raise ValueError("cluster_by supports 1 (sort) or 2 (Z-order) columns")
         else:
             out = current.repartition(n_out)
-        self._write(out)
+        self._write(out, reads_table=True)
 
     def compact_history(self, history: DataFrame) -> None:
         """Bootstrap from a full change history (B13 earliest replay):

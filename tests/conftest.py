@@ -18,7 +18,14 @@ SF_SMALL = "/root/testdata/sf0.01"
 def spark():
     from debezium_emr_hudi_deltastreamer_sample_spark.session import get_spark
 
-    spark = get_spark(app_name="tests", shuffle_partitions=8)
+    # One JVM serves the whole suite: bound its heap (local mode
+    # otherwise caps it at 48 GB, and the heap only grows) so a full run
+    # fits a 16 GB host.
+    spark = get_spark(
+        app_name="tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield spark
 
 

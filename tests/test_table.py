@@ -134,6 +134,45 @@ def test_compact_history_publishes_snapshot(spark, tmp_path, partition_by):
     assert as_of == state(t)
 
 
+@pytest.mark.parametrize("keep_history", [0, 2])
+def test_in_place_write_materializes_only_when_needed(spark, tmp_path, monkeypatch, keep_history):
+    """An in-place (partitioned) write checkpoints its input only when
+    that input reads the table's own files (an upsert into the stored
+    snapshot, a compaction) or a snapshot publish re-executes it
+    (keep_history). A replace from new content without history — init,
+    the first upsert, compact_history — writes straight from the plan."""
+    df_class = type(spark.range(1))
+    calls = []
+    real = df_class.localCheckpoint
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", spy)
+    t = KeyedTable(
+        spark, str(tmp_path / "t"), keys=["id"], ordering=["_lsn"],
+        partition_by=["region"], keep_history=keep_history,
+    )
+    rows = "id int, region string, v int"
+
+    def checkpoints(step):
+        del calls[:]
+        step()
+        return len(calls)
+
+    replace = 1 if keep_history else 0
+    boot = spark.createDataFrame([(1, "eu", 10, "c", 1)], CH_SCHEMA)
+    assert checkpoints(lambda: t.upsert(boot)) == replace
+    assert checkpoints(lambda: t.init(spark.createDataFrame([(2, "us", 20)], rows))) == replace
+    hist = spark.createDataFrame([(3, "eu", 30, "c", 1)], CH_SCHEMA)
+    assert checkpoints(lambda: t.compact_history(hist)) == replace
+    change = spark.createDataFrame([(3, "eu", 31, "u", 2)], CH_SCHEMA)
+    assert checkpoints(lambda: t.upsert(change)) == 1
+    assert checkpoints(lambda: t.compact(target_partitions=1)) == 1
+    assert state(t) == {3: ("eu", 31)}
+
+
 def test_register_makes_table_queryable(spark, tmp_path):
     t = make_table(spark, tmp_path)
     t.upsert(spark.createDataFrame([(1, "eu", 10, "c", 1)], CH_SCHEMA))
@@ -994,6 +1033,47 @@ def test_ivm_partitioned_view_retracts_across_partitions(spark, tmp_path):
     assert {r.fid for r in v.read().collect()} == {10}
 
 
+def test_ivm_partitioned_view_reads_itself_only_to_retract(spark, tmp_path):
+    """A partitioned view fetches stale rows (for their partition values)
+    only on a batch that retracts: an update batch reads the view once,
+    for the merge; a batch that deletes a fact (leaving its partition
+    non-empty) reads it once more."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.streaming.ivm import IncrementalJoinView
+
+    v = IncrementalJoinView(
+        spark, str(tmp_path / "vp"), fact_keys=["fid"], fk="fk",
+        dim_key="did", how="inner", partition_by=["region"],
+    )
+    v.apply_dim_batch(
+        spark.createDataFrame([(1, "a", "u", 1), (2, "b", "u", 1)], DIM_SCHEMA)
+    )
+    fact_schema = "fid int, fk int, region string, amount int, op string, _lsn long"
+    v.apply_fact_batch(
+        spark.createDataFrame(
+            [(10, 1, "eu", 100, "u", 1), (11, 2, "us", 200, "u", 1),
+             (12, 1, "us", 300, "u", 1)],
+            fact_schema,
+        )
+    )
+    reads = []
+    real_read = v.view.read
+
+    def counting_read(*a, **k):
+        reads.append(1)
+        return real_read(*a, **k)
+
+    v.view.read = counting_read
+    v.apply_fact_batch(spark.createDataFrame([(10, 2, "eu", 150, "u", 2)], fact_schema))
+    assert len(reads) == 1
+    del reads[:]
+    v.apply_fact_batch(spark.createDataFrame([(11, 2, "us", None, "d", 3)], fact_schema))
+    assert len(reads) == 2
+    v.view.read = real_read
+    assert {(r.fid, r.region, r.amount, r.name) for r in v.read().collect()} == {
+        (10, "eu", 150, "b"), (12, "us", 300, "a")
+    }
+
+
 def test_ivm_partitioned_left_view_keeps_late_dim_columns(spark, tmp_path):
     """Regression (round-4 review finding): how='left' + partition_by —
     facts land first in TWO partitions, then a dim batch touches only one
@@ -1525,7 +1605,7 @@ def test_schema_sidecar_replace_has_no_narrow_crash_window(spark, tmp_path):
     wide = spark.createDataFrame([(1, "a2", 7)], "id int, name string, bonus int")
     real_write = t._write
 
-    def failing_write(df, mode):
+    def failing_write(*args, **kwargs):
         raise RuntimeError("injected crash during the replace write")
 
     t._write = failing_write

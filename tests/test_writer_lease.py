@@ -91,7 +91,7 @@ def test_post_write_check_detects_mid_commit_takeover(spark, tmp_path):
     w1.upsert(_mk(spark, [(1, "a", "c", 1)]))
 
     class MidCommitTakeover(KeyedTable):
-        def _write(self, df, parts=None):
+        def _write(self, df, parts=None, *, reads_table=False):
             self._lease.ensure(self.take_over)
             df_writer = df.write.mode("overwrite")
             df_writer.parquet(self.path)
