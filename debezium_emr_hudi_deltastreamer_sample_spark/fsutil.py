@@ -441,7 +441,7 @@ class CommitLog:
     ``<prefix><seq:012d>[_<tag>]`` — the one commit loop behind the schema
     sidecar (``v``), the writer lease (``e``), KeyedTable snapshots
     (``s``), MOR base versions (``v…_t<through>``) and rollup commits
-    (``c``, legacy ``c…_b<batch>_<run>``).
+    (``c``).
 
     A publish allocates the seq past every CLAIMED name (never-published
     pointers included), CAS-publishes the stage under it

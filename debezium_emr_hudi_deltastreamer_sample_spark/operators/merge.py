@@ -98,16 +98,22 @@ def merge_upsert(
 
     ``changes`` carries the row columns + ``ordering`` + optionally
     ``op_col``. Steps:
-      1. precombine: newest change per key (intra-batch dedup, B6);
-      2. split upserts vs deletes on ``op_col`` (B8);
-      3. schema-reconcile snapshot ∪ upserts (B11) in BOTH directions:
+      1. precombine: newest change per key (intra-batch dedup, B6); a
+         newest change with a NULL op is dropped, so that key's snapshot
+         row stays;
+      2. schema-reconcile snapshot ∪ changes (B11) in BOTH directions:
          table columns missing from the batch null-fill, and new data
          columns carried by the batch survive the merge (appended after the
          snapshot columns, null for pre-existing rows) — Hudi
          ``reconcile.schema`` add-column semantics. CDC metadata
          (``op_col``, ``ordering``, ``meta_cols``) is never promoted to a
          data column unless the snapshot already has it;
-      4. anti-join deletes.
+      3. one window per key ranks the change over the snapshot row, then
+         keys whose winner is a delete (B8) drop. A delete with a NULL key
+         component deletes nothing (SQL key equality).
+
+    Upserts and deletes ride one ``__pri`` window (snapshot 0, upsert 1,
+    delete 2), so the change batch is planned and scanned once.
     """
     keys = list(keys)
     _reject_reserved(table, "merge_upsert snapshot")
@@ -115,20 +121,20 @@ def merge_upsert(
     row_cols = [c for c in table.columns]
     latest = latest_by_key(changes, keys, ordering)
 
+    pri = F.lit(1)
     if op_col is not None and op_col in latest.columns:
-        deletes = latest.filter(F.col(op_col) == delete_op)
-        upserts = latest.filter(F.col(op_col) != delete_op)
-    else:
-        deletes = latest.limit(0)
-        upserts = latest
+        is_del = F.col(op_col) == delete_op
+        keyed = F.lit(True)
+        for k in keys:
+            keyed = keyed & F.col(k).isNotNull()
+        # A NULL op changes nothing; a delete with a NULL key matches no row.
+        latest = latest.filter((F.col(op_col) != delete_op) | (is_del & keyed))
+        pri = F.when(is_del, F.lit(2)).otherwise(F.lit(1))
 
-    # Changes outrank the snapshot: tag with a priority column and reuse the
-    # same window-dedup (no join needed for the merge itself).
     meta = {op_col, *ordering, *meta_cols} - set(row_cols)
     base = table.select(*row_cols).withColumn("__pri", F.lit(0))
-    ups = upserts.drop(*[c for c in upserts.columns if c in meta]).withColumn(
-        "__pri", F.lit(1)
-    )
-    unioned = base.unionByName(ups, allowMissingColumns=True)
-    merged = latest_by_key(unioned, keys, ["__pri"], _internal=True).drop("__pri")
-    return apply_deletes(merged, deletes, keys)
+    ranked = latest.withColumn("__pri", pri)
+    ranked = ranked.drop(*[c for c in ranked.columns if c in meta])
+    unioned = base.unionByName(ranked, allowMissingColumns=True)
+    merged = latest_by_key(unioned, keys, ["__pri"], _internal=True)
+    return merged.filter(F.col("__pri") < 2).drop("__pri")

@@ -39,7 +39,15 @@ def get_spark(
     core count — on a cluster this should be ~2-3x total executor cores (set
     via ``shuffle_partitions`` or spark-submit conf); AQE coalesces down at
     runtime either way.
+
+    A session already running is returned unchanged: ``getOrCreate``
+    would re-apply every builder conf to it, so an in-process caller
+    (``tools/parity.py main()``) would silently reset another owner's
+    shuffle fan-out.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)

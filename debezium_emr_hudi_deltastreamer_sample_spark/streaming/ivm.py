@@ -28,7 +28,9 @@ partition values: it materializes the desired rows and the affected
 keys left without one, and semi-joins itself only for those keys, so
 only batches that retract rows scan the view. The view write is a
 KeyedTable COW merge, partition-prunable the same way (pass
-``partition_by``). At 100 TB this is the difference between a nightly
+``partition_by``); a dim column the view gains by schema reconciliation
+stays visible in untouched partitions through the view's schema
+sidecar. At 100 TB this is the difference between a nightly
 full re-join and a seconds-latency denormalized serving table.
 
 Restart/replay: every refresh recomputes affected rows FROM CURRENT
@@ -105,11 +107,6 @@ class IncrementalJoinView:
         self.view = KeyedTable(
             spark, f"{path}_view", keys=fact_keys, ordering=(_SEQ,),
             op_col="_op", partition_by=partition_by,
-            # A partitioned view can GAIN dim columns through schema
-            # reconciliation while only affected partitions rewrite —
-            # schema merging keeps the late-added columns visible across
-            # the whole view (see KeyedTable.merge_schema).
-            merge_schema=bool(partition_by),
         )
 
     # -- apply --------------------------------------------------------------

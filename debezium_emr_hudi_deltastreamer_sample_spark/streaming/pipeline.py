@@ -65,7 +65,6 @@ def upsert_batch_processor(
     ordering: Sequence[str] = ("_lsn",),
     partition_by: Sequence[str] = (),
     parser: Callable[[DataFrame], DataFrame] | None = None,
-    merge_schema: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """Per-micro-batch COW upsert (the intended DeltaStreamer lifecycle,
     SURVEY.md §3.2): parse envelope → order by LSN → latest-wins merge with
@@ -79,14 +78,9 @@ def upsert_batch_processor(
     would otherwise survive as stale files — delete resurrection), the
     narrow missing-vs-broken table probe (a transient read failure must
     abort the batch for retry, never bootstrap-overwrite the table down
-    to one micro-batch), and pre-overwrite materialization.
-
-    ``merge_schema``: set when the feed can DRIFT (gain columns, B11) AND
-    the table is partitioned — dynamic overwrite leaves untouched
-    partitions on the old schema, so without parquet schema merging the
-    next read infers from one arbitrary footer and the drifted column
-    nondeterministically vanishes (KeyedTable.merge_schema; the MOR
-    processor has the same knob for the same reason).
+    to one micro-batch), and pre-overwrite materialization. A drifting
+    feed (B11) needs no option: the table's schema sidecar keeps a column
+    that only the rewritten partitions carry.
     """
     def process(df: DataFrame, batch_id: int) -> None:
         from ..table import KeyedTable
@@ -110,7 +104,6 @@ def upsert_batch_processor(
             ordering=list(ordering),
             partition_by=list(partition_by),
             op_col="op",
-            merge_schema=merge_schema,
         ).upsert(changes)
 
     return process
@@ -123,7 +116,6 @@ def mor_batch_processor(
     ordering: Sequence[str] = ("_lsn",),
     auto_compact_deltas: int | None = None,
     async_compact: bool = False,
-    merge_schema: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """Per-micro-batch MERGE_ON_READ ingest (Hudi's other
     ``write.table.type`` next to `upsert_batch_processor`'s COW): parse
@@ -134,7 +126,8 @@ def mor_batch_processor(
     compaction off the ingest thread — Hudi's async table service — so
     micro-batch latency stays O(batch) even on compaction triggers).
     Idempotent under at-least-once replay: a replayed batch overwrites
-    its own ``ingest_batch=<id>`` directory.
+    its own ``ingest_batch=<id>`` directory. A drifting feed (B11) needs
+    no option: the delta log's schema sidecar is the read schema.
 
     This is the write-profile you want when the stream is hot and reads
     are periodic: COW pays a full rewrite per micro-batch (write
@@ -157,7 +150,6 @@ def mor_batch_processor(
             op_col="op",
             auto_compact_deltas=auto_compact_deltas,
             async_compact=async_compact,
-            merge_schema=merge_schema,
         )
         table.append_changes(changes, batch_id)
 

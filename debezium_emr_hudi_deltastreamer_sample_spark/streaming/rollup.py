@@ -18,13 +18,14 @@ same seq collide on the name, whatever batch/run they carry — and the
 applied-batch record rides INSIDE the directory as a small manifest
 (``_applied.json``: every run's high-water batch id) written into the
 stage BEFORE the rename, so there is no separate marker write that could
-diverge from the data. A crash before the publish leaves only staging
-garbage (never visible to readers); after it the batch is durably
-applied. The publish goes through fsutil.CommitLog: atomic directory
-rename on local/HDFS, and on object stores (where directory rename is a
-torn copy+delete) the commit-POINTER protocol — stage immutably, CAS one
-tiny pointer file via conditional create — so the single-rename
-guarantee holds there too.
+diverge from the data. Readers take the applied batches from the tip's
+manifest alone, and a published tip without one is an error, never a
+guess. A crash before the publish leaves only staging garbage (never
+visible to readers); after it the batch is durably applied. The publish
+goes through fsutil.CommitLog: atomic directory rename on local/HDFS,
+and on object stores (where directory rename is a torn copy+delete) the
+commit-POINTER protocol — stage immutably, CAS one tiny pointer file via
+conditional create — so the single-rename guarantee holds there too.
 
 Replay/restart semantics: Structured Streaming batch ids are monotone PER
 CHECKPOINT, so dedup is keyed by (run_id, batch_id) where ``run_id``
@@ -50,17 +51,8 @@ from pyspark.sql import functions as F
 
 from ..fsutil import CommitLog, read_small_file, write_small_file
 
-# Commit naming: seq-only name ``c<seq>`` (true CAS — two writers at the
-# same seq MUST collide on the name, whatever batch/run they carry) with
-# the applied-batch record as a manifest FILE inside the commit. Older
-# commits recorded ONE run each: pre-round-6 in the name itself
-# (``c<seq>_b<batch>_<run>``, which broke the compare-and-swap — two
-# writers of different batches built DIFFERENT names at the SAME seq),
-# later as an empty ``_applied_b<batch>_<run>`` marker file. Both still
-# parse for in-place upgrades.
+#: The applied-batch manifest inside every commit (named ``c<seq>``).
 _MANIFEST = "_applied.json"
-_LEGACY_TAG_RE = re.compile(r"^b(\d{12})_(.+)$")
-_META_RE = re.compile(r"^_applied_b(\d{12})_(.+)$")
 
 
 class IncrementalRollup:
@@ -138,55 +130,46 @@ class IncrementalRollup:
     def _commits_dir(self) -> str:
         return f"{self.path}__commits"
 
-    def _marks(self, c) -> tuple[dict[str, int], bool] | None:
-        """(run → high-water batch id, from a manifest?) recorded in one
-        published commit: its manifest, or the one run of an older marker
-        file or legacy name. Nested crash garbage is healed first
-        (``CommitLog.heal``) before a read or merge trips on it. None when
-        retention retired the commit after the listing."""
-        legacy = _LEGACY_TAG_RE.match(c.tag or "")
-        if legacy:
-            return {legacy.group(2): int(legacy.group(1))}, False
+    def _marks(self, c) -> dict[str, int] | None:
+        """Run → high-water batch id recorded in one published commit's
+        manifest. Nested crash garbage is healed first (``CommitLog.heal``)
+        before a read or merge trips on it. None when retention retired
+        the commit after the listing."""
         members = self._log.heal(c.uri)
         if members is None:
             return None
-        if _MANIFEST in members:
-            fs, hpath = self._hadoop()
-            data = read_small_file(fs, hpath, self.spark, f"{c.uri}/{_MANIFEST}")
-            if data is None:
-                return None
-            return {r: int(b) for r, b in json.loads(data).items()}, True
-        markers = map(_META_RE.match, members)
-        return {m.group(2): int(m.group(1)) for m in markers if m}, False
+        if _MANIFEST not in members:
+            published = [e.name for e in self._log.entries() if e.uri]
+            if published[-1:] != [c.name]:
+                return None  # a retention delete was emptying it: list again
+            raise RuntimeError(
+                f"rollup commit {c.name} at {self._commits_dir()} has no "
+                f"{_MANIFEST}: every commit publishes one, so its applied "
+                "batches are unknown — refusing to guess"
+            )
+        fs, hpath = self._hadoop()
+        data = read_small_file(fs, hpath, self.spark, f"{c.uri}/{_MANIFEST}")
+        if data is None:
+            return None
+        return {r: int(b) for r, b in json.loads(data).items()}
 
     def _state(self, entries=None) -> tuple[str | None, dict[str, int]] | None:
         """(tip content uri, run → applied high-water) for ``entries`` or
         a fresh listing; (None, {}) before the first commit, None when the
         tip was retired after the listing (list again).
 
-        Only the tip's manifest counts: every manifest commit was merged
-        from the tip its writer saw and records that tip's marks plus its
-        own batch, so an entry that lost its CAS below the tip (see
-        ``CommitLog``) can never vouch for a batch the tip lacks. Commits
-        without a manifest come from before it, when retention kept each
-        run's newest commit: their marks are unioned over the listing."""
+        Only the tip's manifest counts: every commit was merged from the
+        tip its writer saw and records that tip's marks plus its own
+        batch, so an entry that lost its CAS below the tip (see
+        ``CommitLog``) can never vouch for a batch the tip lacks."""
         if entries is None:
             entries = self._log.entries()
         published = [c for c in entries if c.uri is not None]
         if not published:
             return None, {}
         tip = published[-1]
-        state = self._marks(tip)
-        if state is None:
-            return None
-        if state[1]:
-            return tip.uri, state[0]
-        applied: dict[str, int] = {}
-        for c in published:
-            marks, _ = self._marks(c) or ({}, False)
-            for r, b in marks.items():
-                applied[r] = max(applied.get(r, -1), b)
-        return tip.uri, applied
+        marks = self._marks(tip)
+        return None if marks is None else (tip.uri, marks)
 
     def _current(self) -> tuple[str | None, dict[str, int]]:
         """``_state`` of a fresh listing, listing again while retention

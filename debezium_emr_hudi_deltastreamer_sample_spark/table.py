@@ -68,13 +68,13 @@ def _union_schema(base: T.StructType, extra: T.StructType) -> T.StructType:
 class SchemaSidecar:
     """The table's authoritative current schema, persisted in the commit
     path — how every commit-log table format (Hudi/Delta/Iceberg) closes
-    the schema-drift footgun this engine had behind the ``merge_schema``
-    knob: a PARTITIONED table that gains a column through reconciliation
-    (B11) rewrites only touched partitions, so untouched partitions keep
-    old-schema footers, and a footer-inferred read picks ONE arbitrary
-    footer — the drifted column nondeterministically vanishes, and the
-    upsert's own ``current = self.read()`` then rewrites partitions
-    WITHOUT it (permanent loss, no error).
+    the schema-drift footgun: a PARTITIONED table that gains a column
+    through reconciliation (B11) rewrites only touched partitions, so
+    untouched partitions keep old-schema footers, and a footer-inferred
+    read picks ONE arbitrary footer — the drifted column
+    nondeterministically vanishes, and the upsert's own
+    ``current = self.read()`` then rewrites partitions WITHOUT it
+    (permanent loss, no error).
 
     Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json),
     one ``fsutil.CommitLog``. Publish is a monotone-union retry loop over
@@ -83,9 +83,10 @@ class SchemaSidecar:
     readers of the previous one stay valid). Readers (``KeyedTable.read``,
     MOR delta reads) apply the sidecar as the explicit parquet read
     schema — per-file missing columns null-fill, column order is stable,
-    and no footer lottery remains. Missing or unreadable sidecar falls
-    back to today's footer inference (+ the ``merge_schema`` knob), so
-    pre-sidecar tables stay readable."""
+    and no footer lottery remains. Every engine commit publishes the
+    sidecar before it writes, so only a directory the engine did not
+    write (adopted external parquet) reads without one: that read merges
+    every footer."""
 
     def __init__(self, spark: SparkSession, table_path: str) -> None:
         self.spark = spark
@@ -116,8 +117,8 @@ class SchemaSidecar:
         return None
 
     def current(self) -> T.StructType | None:
-        """Newest parseable persisted schema, or None (no sidecar — caller
-        falls back to footer inference). Tries the previous version when
+        """Newest parseable persisted schema, or None (no sidecar — the
+        caller merges footers). Tries the previous version when
         the newest fails to read: a concurrent publisher's trim can delete
         a version between the listing and the read, and falling all the
         way back to footer inference would transiently reopen the exact
@@ -178,9 +179,9 @@ def _embedded_commit_schema(spark: SparkSession, uri: str) -> T.StructType | Non
     the STAGE before the commit publishes, so a commit and its schema are
     atomic — historical reads of a drifted table are footer-lottery-free
     exactly like the current read (which uses the sidecar), and a snapshot
-    of an EMPTIED table (zero parquet footers) stays readable. None for
-    commits written before this existed — callers fall back to footer
-    inference."""
+    of an EMPTIED table (zero parquet footers) stays readable. Every
+    commit embeds it before it publishes, so None means retention removed
+    the commit after the listing."""
     import json as _json
 
     from .fsutil import hadoop_fs, read_small_file
@@ -577,7 +578,6 @@ class KeyedTable:
         partition_by: Sequence[str] = (),
         op_col: str | None = "op",
         keep_history: int = 0,
-        merge_schema: bool = False,
         writer_id: str | None = None,
         take_over: bool = False,
         take_over_if_stale: float | None = None,
@@ -599,17 +599,6 @@ class KeyedTable:
         #: fence an owner with no heartbeat for this many seconds — see
         #: WriterLease.ensure. None = manual-takeover-only (the default).
         self.take_over_if_stale = take_over_if_stale
-        #: Legacy fallback knob, superseded by the schema SIDECAR: every
-        #: init/upsert now persists the table's authoritative schema
-        #: (``SchemaSidecar``) and ``read()`` applies it as the explicit
-        #: parquet schema, so a PARTITIONED table that gained columns
-        #: through reconciliation (B11) reads correctly with no knob — the
-        #: old failure was footer-inference picking ONE arbitrary old
-        #: footer and the drifted column vanishing (then being dropped
-        #: permanently by the next partition rewrite). ``merge_schema``
-        #: still governs PRE-SIDECAR tables (written before this existed):
-        #: merge footers instead of inferring from one.
-        self.merge_schema = merge_schema
         self.schema_sidecar = SchemaSidecar(spark, path)
         #: Hudi-timeline analogue (opt-in): with ``keep_history`` > 0 every
         #: init/upsert ALSO publishes an immutable full-snapshot commit
@@ -662,39 +651,29 @@ class KeyedTable:
         the table exactly as of commit ``n`` (0 = the first commit, then
         one per upsert or replace), Hudi time-travel style.
 
-        The current read applies the persisted sidecar schema when present
+        The current read applies the persisted sidecar schema
         (authoritative — stable column set/order regardless of which
         partitions were last rewritten) and resolves a torn swap without
-        repairing it (see ``exists``); time-travel reads apply the
-        schema-as-of EMBEDDED in the snapshot commit (``_schema.json``,
-        written into the stage so commit and schema publish atomically) —
-        pre-embed commits fall back to footer inference, which is safe
-        for them because snapshot dirs are flat single-job writes."""
+        repairing it (see ``exists``); a directory without a sidecar (not
+        written by the engine) merges its footers. Time-travel reads apply
+        the schema-as-of EMBEDDED in the snapshot commit (``_schema.json``,
+        written into the stage so commit and schema publish atomically): a
+        pre-drift snapshot serves exactly its own columns, and a snapshot
+        of an emptied table (no footers) still reads."""
         from .fsutil import resolve_table_swap
 
-        reader = self.spark.read
         if as_of is None:
             path = resolve_table_swap(self.spark, self.path)
             persisted = self.schema_sidecar.current()
             if persisted is not None:
-                return reader.schema(persisted).parquet(path)
-            if self.merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            return reader.parquet(path)
-        if self.merge_schema:
-            reader = reader.option("mergeSchema", "true")
+                return self.spark.read.schema(persisted).parquet(path)
+            return self.spark.read.option("mergeSchema", "true").parquet(path)
         for seq, uri in self.snapshots():
             if seq == as_of:
                 persisted = _embedded_commit_schema(self.spark, uri)
                 if persisted is not None:
-                    # Schema-AS-OF, embedded in the commit itself: a
-                    # pre-drift snapshot serves exactly its own columns
-                    # (the current sidecar would wrongly widen it), and a
-                    # snapshot of an emptied table (no footers) still
-                    # reads. Pre-embed commits fall through to footer
-                    # inference, the historical behavior.
                     return self.spark.read.schema(persisted).parquet(uri)
-                return reader.parquet(uri)
+                break  # retention removed it after the listing
         raise FileNotFoundError(
             f"no snapshot commit {as_of} at {self.path}__snapshots "
             f"(have {[s for s, _ in self.snapshots()]}; retention keeps "
@@ -1081,7 +1060,6 @@ class DeltaLogTable:
         auto_compact_deltas: int | None = None,
         compact_target_files: int | None = None,
         async_compact: bool = False,
-        merge_schema: bool = False,
         writer_id: str | None = None,
         take_over: bool = False,
         take_over_if_stale: float | None = None,
@@ -1104,25 +1082,10 @@ class DeltaLogTable:
         self.auto_compact_deltas = auto_compact_deltas
         self.compact_target_files = compact_target_files
         self.async_compact = async_compact
-        #: Read the DELTA LOG with parquet schema merging — required when
-        #: change batches can gain columns (B11 schema drift): the delta
-        #: dir holds one directory per batch, each with its own footer
-        #: schema, and WITHOUT merging Spark infers the union read's
-        #: schema from ONE arbitrary footer, so a drifted column
-        #: nondeterministically VANISHES from the merge-on-read view (and
-        #: from the next compaction's folded base — permanent loss). The
-        #: COW sibling (KeyedTable.merge_schema) has the same knob for
-        #: the same reason; both default off because the footer-read cost
-        #: is per file and stable-schema feeds shouldn't pay it. The base
-        #: snapshot never needs merging (each version is written by one
-        #: job with one schema); base ∪ delta reconciliation is handled
-        #: by merge_upsert's unionByName.
-        #:
-        #: Like the COW sibling, this knob is now the PRE-SIDECAR fallback:
-        #: ``append_changes`` persists the delta log's authoritative schema
-        #: (union of every appended batch's schema) and delta reads apply
-        #: it explicitly, so drifted columns survive with the knob off.
-        self.merge_schema = merge_schema
+        #: The delta log's schema: the union of every appended batch's
+        #: schema, applied as the explicit read schema, so a drifted column
+        #: (B11) survives reads and compactions whatever footer the scan
+        #: would infer from.
         self.delta_schema_sidecar = SchemaSidecar(spark, f"{path}/delta")
         #: Base versions ``v<seq>_t<through + 1>``, one CommitLog.
         self._base_log = CommitLog(spark, f"{path}/base__commits", "v")
@@ -1132,10 +1095,6 @@ class DeltaLogTable:
         contract as KeyedTable._ensure_lease (see its docstring)."""
         self._lease.ensure(self.take_over, self.take_over_if_stale)
         self.take_over = False
-
-    def _base(self) -> str:
-        # Legacy (pre-MVCC) single-dir base layout; still readable.
-        return f"{self.path}/base"
 
     def _delta(self) -> str:
         return f"{self.path}/delta"
@@ -1160,25 +1119,15 @@ class DeltaLogTable:
         ]
 
     def _latest_base(self) -> tuple[int, int, str] | None:
-        """Newest base version, falling back to the legacy ``base/`` dir
-        (treated as version -1 compacted through every batch id below the
-        smallest live delta — i.e. deltas on disk all apply)."""
+        """Newest base version, or None before the first compaction."""
         versions = self._base_versions()
-        if versions:
-            return versions[-1]
-        fs, hpath = self._fs()
-        try:
-            if fs.exists(hpath(self._base())):
-                return (-1, -1, self._base())
-        except Exception:
-            pass
-        return None
+        return versions[-1] if versions else None
 
     def _delta_read_schema(self) -> T.StructType | None:
         """Explicit read schema for the delta log: the persisted sidecar
         union plus the ``ingest_batch`` partition column (resolved from
-        the directory names). None when no sidecar exists (pre-sidecar
-        table) — callers fall back to footer inference/merging."""
+        the directory names). None when no sidecar exists — the read
+        merges footers."""
         cur = self.delta_schema_sidecar.current()
         if cur is None:
             return None
@@ -1188,11 +1137,7 @@ class DeltaLogTable:
         )
 
     def _read_dir(
-        self,
-        p: str,
-        strict: bool = False,
-        merge: bool = False,
-        schema: T.StructType | None = None,
+        self, p: str, strict: bool = False, schema: T.StructType | None = None
     ) -> DataFrame | None:
         """``strict`` distinguishes MISSING (→ None) from BROKEN (→ raise):
         the compaction path must never treat a transient read failure as
@@ -1200,13 +1145,13 @@ class DeltaLogTable:
         version name claims deltas it silently dropped, and the
         ``ingest_batch > through`` filter would mask those committed rows
         forever (the same missing-vs-broken probe the COW upsert uses).
-        ``schema``: explicit read schema (the sidecar path — authoritative,
-        stable under drift). ``merge``: parquet schema merging, the
-        pre-sidecar fallback for delta-log reads under ``merge_schema``."""
+        ``schema``: explicit read schema (a sidecar or an embedded commit
+        schema — authoritative, stable under drift); without one the read
+        merges footers."""
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        elif merge:
+        else:
             reader = reader.option("mergeSchema", "true")
         if strict:
             fs, hpath = self._fs()
@@ -1406,16 +1351,13 @@ class DeltaLogTable:
         history), mirroring Hudi's cleaner-retained commits."""
         for s, _, uri in self._base_versions():
             if s == seq:
-                # Schema-as-of embedded at compaction time (falls back to
-                # footer inference for pre-embed versions): a pre-drift
-                # version serves exactly its own columns.
-                df = self._read_dir(
-                    uri, schema=_embedded_commit_schema(self.spark, uri)
-                )
+                # Schema-as-of embedded at compaction time: a pre-drift
+                # version serves exactly its own columns. Missing schema
+                # or files: a concurrent compaction's retention deleted
+                # the version after the listing — the window error below.
+                schema = _embedded_commit_schema(self.spark, uri)
+                df = None if schema is None else self._read_dir(uri, schema=schema)
                 if df is None:
-                    # Listed but unreadable: a concurrent compaction's
-                    # retention pass deleted the dir between the listing
-                    # and this read — surface the window error, not None.
                     break
                 return df
         raise FileNotFoundError(
@@ -1442,16 +1384,16 @@ class DeltaLogTable:
         landed since the last ``compact()`` are not visible). The
         dashboard/reporting lane next to the exact snapshot lane."""
         ver = self._latest_base()
-        base = (
-            self._read_dir(
-                ver[2],
-                strict=_strict,
-                schema=_embedded_commit_schema(self.spark, ver[2]),
-            )
-            if ver
-            else None
-        )
-        through = ver[1] if ver else -1
+        base, through = None, -1
+        if ver:
+            through = ver[1]
+            schema = _embedded_commit_schema(self.spark, ver[2])
+            if schema is None:
+                raise FileNotFoundError(
+                    f"base version {ver[0]} at {self.path} was retired "
+                    "during the read (retention keeps the 2 newest)"
+                )
+            base = self._read_dir(ver[2], strict=_strict, schema=schema)
         if optimized:
             if base is None:
                 raise FileNotFoundError(
@@ -1460,10 +1402,7 @@ class DeltaLogTable:
                 )
             return base
         deltas = self._read_dir(
-            self._delta(),
-            strict=_strict,
-            merge=self.merge_schema,
-            schema=self._delta_read_schema(),
+            self._delta(), strict=_strict, schema=self._delta_read_schema()
         )
         if deltas is not None and through >= 0:
             # A version records the batch id it compacted THROUGH; delta
@@ -1509,11 +1448,7 @@ class DeltaLogTable:
         bounded by compaction cadence — compaction retires delta dirs, so
         consumers must keep ``since_batch`` within the uncompacted window
         (exactly Hudi's incremental-read-vs-cleaner contract)."""
-        deltas = self._read_dir(
-            self._delta(),
-            merge=self.merge_schema,
-            schema=self._delta_read_schema(),
-        )
+        deltas = self._read_dir(self._delta(), schema=self._delta_read_schema())
         if deltas is None:
             raise FileNotFoundError(
                 f"no delta log at {self.path} (compacted or empty table)"
@@ -1563,7 +1498,9 @@ class DeltaLogTable:
             except Exception as e:
                 msg = str(e)
                 lost_inputs = (
-                    "FAILED_READ_FILE" in msg or "FileNotFoundException" in msg
+                    isinstance(e, FileNotFoundError)
+                    or "FAILED_READ_FILE" in msg
+                    or "FileNotFoundException" in msg
                 ) and self.path in msg
                 if not lost_inputs or attempt == 2:
                     raise
@@ -1663,8 +1600,3 @@ class DeltaLogTable:
                 fs.delete(hpath(f"{self._delta()}/ingest_batch={b}"), True)
             except Exception:
                 pass
-        # Drop the legacy single-dir base.
-        try:
-            fs.delete(hpath(self._base()), True)
-        except Exception:
-            pass

@@ -18,23 +18,32 @@ from debezium_emr_hudi_deltastreamer_sample_spark.operators.merge import (
 SCHEMA = "id int, name string, salary int, op string, lsn long"
 
 
+def _rows(rows):
+    """Sorted (id, name, salary) tuples; a NULL id sorts first."""
+    return sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0, r[1:]))
+
+
 def replay(events, snapshot=()):
     """Independent oracle: dict replay of latest-wins CDC semantics over
-    a keyed starting snapshot of (id, name, salary) rows."""
+    a keyed starting snapshot of (id, name, salary) rows. The newest
+    event per key decides: a delete drops the key (a NULL key matches no
+    row, so its delete drops nothing), a NULL op leaves the snapshot row,
+    anything else replaces it."""
     state = {row[0]: tuple(row) for row in snapshot}
-    for id_, name, salary, op, _lsn in sorted(events, key=lambda e: e[4]):
-        if op == "d":
+    newest = {e[0]: e for e in sorted(events, key=lambda e: e[4])}
+    for id_, name, salary, op, _lsn in newest.values():
+        if op == "d" and id_ is not None:
             state.pop(id_, None)
-        else:
+        elif op not in ("d", None):
             state[id_] = (id_, name, salary)
-    return sorted(state.values())
+    return _rows(state.values())
 
 
 def engine_result(spark, snapshot, changes):
     table = spark.createDataFrame(snapshot, "id int, name string, salary int")
     ch = spark.createDataFrame(changes, SCHEMA)
     out = merge_upsert(table, ch, keys=["id"], ordering=["lsn"])
-    return sorted(tuple(r) for r in out.select("id", "name", "salary").collect())
+    return _rows(tuple(r) for r in out.select("id", "name", "salary").collect())
 
 
 def test_scripted_insert_update_delete(spark):
@@ -132,23 +141,52 @@ def test_schema_evolution_added_column_survives(spark):
     assert rows == {1: ("a", 10, None), 2: ("b", 20, "NL")}
 
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+def test_merge_plans_the_change_batch_once(spark, tmp_path):
+    """Upserts and deletes share one window: the change batch is scanned
+    once in the merge's plan, not again for a separate delete branch."""
+    path = str(tmp_path / "changes")
+    spark.createDataFrame(
+        [(1, "a", 10, "c", 1), (2, None, None, "d", 2), (3, "z", 1, None, 3)],
+        SCHEMA,
+    ).write.parquet(path)
+    table = spark.createDataFrame(
+        [(2, "b", 20), (3, "y", 3)], "id int, name string, salary int"
+    )
+    out = merge_upsert(table, spark.read.parquet(path), keys=["id"], ordering=["lsn"])
+    # The snapshot is an in-memory scan: every FileScan reads the batch.
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert sorted(map(tuple, out.collect())) == [(1, "a", 10), (3, "y", 3)]
+
+
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 _event = st.tuples(
-    st.integers(0, 5),                      # id (few keys → collisions)
-    st.text("ab", min_size=1, max_size=3),  # name
-    st.integers(0, 99),                     # salary
-    st.sampled_from(["c", "u", "u", "d"]),  # op
+    st.one_of(st.none(), st.integers(0, 5)),      # id (few keys → collisions)
+    st.text("ab", min_size=1, max_size=3),        # name
+    st.integers(0, 99),                           # salary
+    st.sampled_from(["c", "u", "u", "d", None]),  # op
 )
 
 
 @given(
     events=st.lists(_event, min_size=1, max_size=30),
     snapshot=st.dictionaries(
-        st.integers(0, 7),  # overlaps the event ids, and some beyond them
+        # overlaps the event ids, and some beyond them
+        st.one_of(st.none(), st.integers(0, 7)),
         st.tuples(st.text("ab", min_size=1, max_size=3), st.integers(0, 99)),
         max_size=6,
     ),
+)
+# The newest change of key 1 has a NULL op: its snapshot row stays.
+@example(
+    events=[(1, "b", 2, "u"), (1, "c", 3, None), (2, "d", 4, "c")],
+    snapshot={1: ("a", 1)},
+)
+# A delete with a NULL key deletes nothing, not even the NULL-keyed row.
+@example(
+    events=[(None, "x", 1, "d"), (2, "y", 2, "d")],
+    snapshot={None: ("n", 5), 2: ("b", 2)},
 )
 @settings(
     max_examples=8,
@@ -157,7 +195,7 @@ _event = st.tuples(
 )
 def test_merge_property_replay(spark, events, snapshot):
     """Property: for ANY keyed snapshot and insert/update/delete sequence,
-    the distributed merge equals the sequential dict replay (hypothesis
+    the distributed merge equals the dict replay (hypothesis
     shrinks failures to a minimal snapshot and event sequence)."""
     changes = [
         (id_, None if op == "d" else name, None if op == "d" else sal, op, lsn)

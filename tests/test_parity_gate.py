@@ -56,12 +56,16 @@ def test_hostile_toy_query_exits_1(spark, sf_tiny, monkeypatch):
     )
     monkeypatch.setenv("SPARK_GRAFT_PARITY_SF_DIR", sf_tiny)
     monkeypatch.setattr(parity, "SF_DIR", sf_tiny)
-    # main() builds its session with session.get_spark(), whose
-    # getOrCreate re-applies the factory's confs to this shared session —
-    # its shuffle fan-out (the host's core count) would leak into every
-    # later test (it broke test_plans' shuffle-count audit).
+    assert parity.main(["toy_hostile"]) == 1
+
+
+def test_get_spark_leaves_running_session_alone(spark):
+    """An in-process caller of the session factory (``tools/parity.py
+    main()``) gets the running session as it is: its confs are not
+    re-applied over the owner's settings."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.session import get_spark
+
     fan_out = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert parity.main(["toy_hostile"]) == 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", fan_out)
+    assert fan_out != "3"
+    get_spark(shuffle_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == fan_out

@@ -1384,13 +1384,45 @@ def test_scd2_null_attr_versions(spark, tmp_path):
     assert k1[1].is_current is True
 
 
+def test_rollup_tip_without_manifest_raises(spark, tmp_path):
+    """Every rollup commit publishes its applied-batch manifest, so a tip
+    without one is an error that names it: the rollup neither guesses
+    which batches it holds nor applies on top of it."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
+        IncrementalRollup,
+    )
+
+    def mk(v):
+        return spark.createDataFrame(
+            [("a", "2024-01-01 00:00:05", v)], "k string, ts string, v double"
+        ).withColumn("ts", F.to_timestamp("ts"))
+
+    roll = IncrementalRollup(spark, str(tmp_path / "roll"), "ts", "1 minute", ["k"], "v")
+    roll.apply_batch(mk(1.0), 0)
+    roll.apply_batch(mk(2.0), 1)
+    tip = roll._log.entries()[-1]
+    fs, hpath = roll._hadoop()
+    fs.delete(hpath(f"{tip.uri}/_applied.json"), False)
+    with pytest.raises(RuntimeError, match=tip.name):
+        roll.last_applied_batch()
+    with pytest.raises(RuntimeError, match=tip.name):
+        roll.apply_batch(mk(4.0), 2)
+    with pytest.raises(RuntimeError, match=tip.name):
+        roll.read()
+    assert roll._log.entries()[-1].name == tip.name
+
+
 def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     """Round-6 review fix for the rollup commit CAS: commit names are
     seq-only (two writers at the same seq MUST collide on the name,
     whatever batch/run they carry) with the applied-batch manifest inside
-    the commit; pre-fix full-token names and one-run marker files still
-    parse (in-place upgrade). A same-seq squatter forces the retry path
-    and no batch is lost."""
+    the commit. A same-seq squatter forces the retry path and no batch is
+    lost."""
+    import json
+
     from pyspark.sql import functions as F
 
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
@@ -1422,25 +1454,17 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
         roll._partials(mk([("b", "2024-01-01 00:01:10", 5.0)]))
     )
     squat_rows.write.parquet(squat)
-    fs.createNewFile(hpath(f"{squat}/_applied_b000000000099_other"))
+    with open(f"{squat}/_applied.json", "w") as f:
+        json.dump({"r1": 0, "other": 99}, f)
     roll.apply_batch(mk([("a", "2024-01-01 00:00:30", 2.0)]), 1, run_id="r1")
     # The loser retried past the squat: BOTH its batch and the racing
     # writer's rows are in the new tip — nothing lost.
     got = {r.k: (r.n, r.total) for r in roll.read().collect()}
     assert got == {"a": (2, 3.0), "b": (1, 5.0)}
     assert roll._log.entries()[-1].seq == 2
-    # The squat recorded its run the pre-manifest way (one marker file);
-    # the new tip's manifest carries both runs forward.
+    # The new tip's manifest carries the squat's runs forward.
     assert roll._state()[1] == {"r1": 1, "other": 99}
     fs.delete(hpath(squat), True)
-
-    # Legacy full-token name parses alongside (upgrade path).
-    legacy = f"{roll._commits_dir()}/c000000000050_b000000000007_oldrun"
-    fs.mkdirs(hpath(legacy))
-    assert roll._log.entries()[-1].seq == 50
-    assert roll.last_applied_batch("oldrun") == 7
-    assert roll.last_applied_batch("r1") == 1
-    fs.delete(hpath(legacy), True)
 
     # Reserved partials-schema names are refused at the boundary.
     import pytest

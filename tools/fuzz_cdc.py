@@ -8,13 +8,12 @@ lived across rounds:
 - COW lane  — streaming/pipeline.upsert_batch_processor → KeyedTable.upsert
   (bootstrap path, partition-pruned dynamic overwrite, vanished-partition
   static rewrite, schema drift via unionByName + the persisted schema
-  sidecar, MVCC snapshots/time travel). The merge_schema knob is
-  RANDOMIZED mostly-off: with the sidecar the drift×partitioned state must
-  survive regardless of the knob.
+  sidecar, MVCC snapshots/time travel). The sidecar alone carries the
+  drift×partitioned state.
 - MOR lane  — streaming/pipeline.mor_batch_processor → DeltaLogTable
   (delta-log append, merge-on-read precedence (ingest_batch, _lsn), inline +
   async compaction, read-optimized staleness contract, schema drift —
-  knob randomized mostly-off too, same sidecar contract)
+  same sidecar contract)
 - SCD2 lane — streaming/pipeline.scd2_batch_processor (incremental type-2
   fold vs a batch fold over the full event set)
 - ROUTED lane — routed_upsert_processor fan-out (B2/B14), per-table schema
@@ -111,14 +110,10 @@ class CdcGen:
         partitioned = r.random() < 0.30
         # Drift composes with partitioning — THE case the schema sidecar
         # exists for: the dynamic-overwrite upsert leaves untouched
-        # partitions on old-schema footers. merge_knob randomizes the
-        # legacy merge_schema fallback mostly OFF so the sidecar carries
-        # the correctness load; occasionally ON to pin that the fallback
-        # and the sidecar compose.
+        # partitions on old-schema footers.
         drift_at = r.randint(1, n_batches - 1) if (
             n_batches > 1 and r.random() < 0.35
         ) else None
-        merge_knob = r.random() < 0.25
         dept_of = (
             {k: r.choice(DEPTS) for k in range(n_keys)} if partitioned else {}
         )
@@ -159,11 +154,9 @@ class CdcGen:
             "replays": replays,
             "partitioned": partitioned,
             "drift_at": drift_at,
-            "merge_knob": merge_knob,
             # keep_history composes with partitioning (the dynamic
             # partial-overwrite publish path is only reachable that way)
-            # AND, since the schema sidecar landed, with drift: the direct
-            # KeyedTable lane needs no merge_schema choreography anymore.
+            # AND, since the schema sidecar landed, with drift.
             "keep_history": r.random() < 0.25,
         }
 
@@ -254,7 +247,7 @@ def _cow_table_state(spark, path: str, cols) -> dict:
     """Final-state read for the COW lanes THROUGH the table contract:
     ``KeyedTable.read()`` applies the persisted schema sidecar (the
     round-9 structural fix), so drift×partitioned tables verify without
-    per-case mergeSchema choreography — which is the point: this read IS
+    per-case read options — which is the point: this read IS
     the surface users get. MISSING/EMPTY maps to {} (the table's
     EMPTY ≡ MISSING contract: a partitioned table whose rows were all
     deleted has no parquet footers left)."""
@@ -395,7 +388,7 @@ def _cow(spark, seed: int, case_dir: str, wire: str = "json") -> tuple[bool, str
     → upsert_batch_processor (the exact foreachBatch surface) →
     KeyedTable; final table vs dict replay, verified THROUGH
     KeyedTable.read() so the persisted schema sidecar is the surface under
-    test (drift×partitioned with the merge_schema knob mostly OFF). The
+    test (drift×partitioned). The
     keep_history variant drives KeyedTable directly and also checks every
     published MVCC snapshot against the oracle's per-apply history —
     including pre-drift snapshots, compared on their own as-of columns."""
@@ -465,7 +458,6 @@ def _cow(spark, seed: int, case_dir: str, wire: str = "json") -> tuple[bool, str
             ordering=["_lsn"],
             partition_by=partition_by,
             parser=_wire_parser(wire, batch["drift"]) if wire == "avro" else None,
-            merge_schema=sc["merge_knob"],
         )
         reps = 2 if i in sc["replays"] else 1
         for _ in range(reps):
@@ -543,8 +535,8 @@ def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     column on the next rewrite. Invariants: the table stays READABLE
     after every injected crash (no torn unreadable state), and after
     redelivery the final state equals the dict-replay oracle — crashes
-    composed with drift, partitioning, deletes, replays and the
-    merge-knob exactly as the generator deals them."""
+    composed with drift, partitioning, deletes and replays exactly as the
+    generator deals them."""
     from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
         read_parquet_if_present,
     )
@@ -557,7 +549,6 @@ def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     table = KeyedTable(
         spark, path, keys=["id"], ordering=["_lsn"], op_col="op",
         partition_by=["department"] if sc["partitioned"] else [],
-        merge_schema=sc["merge_knob"],
         # keep_history composes the crash axis with the snapshot-publish
         # path — kills land inside _publish_snapshot too (below), driving
         # the embedded schema-as-of commit windows (stage write → embed →
@@ -648,7 +639,7 @@ def _crashmor(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     spark = _case_session(spark)
     table = DeltaLogTable(
         spark, f"{case_dir}/mor", keys=["id"], ordering=["_lsn"],
-        op_col="op", merge_schema=sc["merge_knob"],
+        op_col="op",
     )
     landed_any = False
     for i, batch in enumerate(sc["batches"]):
@@ -730,7 +721,6 @@ def _writers(spark, seed: int, case_dir: str) -> tuple[bool, str]:
         table = KeyedTable(
             spark, path, keys=["id"], ordering=["_lsn"], op_col="op",
             partition_by=["department"] if sc["partitioned"] else [],
-            merge_schema=sc["merge_knob"],
             writer_id=wid, take_over=takeover,
         )
         allowed = owner is None or owner == wid or takeover
@@ -818,7 +808,6 @@ def _stale_writers(spark, seed: int, case_dir: str) -> tuple[bool, str]:
         table = KeyedTable(
             spark, path, keys=["id"], ordering=["_lsn"], op_col="op",
             partition_by=["department"] if sc["partitioned"] else [],
-            merge_schema=sc["merge_knob"],
             writer_id=wid,
             take_over_if_stale=TTL if armed else None,
         )
@@ -877,16 +866,13 @@ def _mor(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     use_async = auto is not None and r.random() < 0.4
     target_files = r.choice([None, 1, 2])
     manual_compact_prob = 0.3 if auto is None else 0.1
-    # Post-sidecar: drift correctness must hold with the legacy knob OFF
-    # (the delta-log schema sidecar carries it); merge_knob occasionally
-    # turns the fallback on to pin that the two compose.
-    knob = sc["merge_knob"]
+    # Drift correctness rests on the delta-log schema sidecar alone.
 
     spark = _case_session(spark)
     path = f"{case_dir}/mor"
     table = DeltaLogTable(
         spark, path, keys=["id"], ordering=["_lsn"], op_col="op",
-        compact_target_files=target_files, merge_schema=knob,
+        compact_target_files=target_files,
     )
     for i, batch in enumerate(sc["batches"]):
         process = mor_batch_processor(
@@ -896,7 +882,6 @@ def _mor(spark, seed: int, case_dir: str) -> tuple[bool, str]:
             ordering=["_lsn"],
             auto_compact_deltas=auto,
             async_compact=use_async,
-            merge_schema=knob,
         )
         reps = 2 if i in sc["replays"] else 1
         for _ in range(reps):
@@ -914,7 +899,7 @@ def _mor(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     if got != want:
         return False, f"mor final mismatch: {_diff(got, want)}"
     ver = table._latest_base()
-    if ver is not None and ver[0] >= 0:
+    if ver is not None:
         through = ver[1]
         # Columns as of the compacted-through prefix (drift may land
         # after the fold).
