@@ -108,7 +108,7 @@ def _window_guard() -> dict:
     ratio = calib / _CALIB_REF_SEC
     return {
         "load_1m": round(load_1m, 2),
-        "cpus": cpus,
+        "host_cpus": cpus,
         "calib_sec": round(calib, 4),
         "calib_ref_sec": _CALIB_REF_SEC,
         "calib_ratio": round(ratio, 3),
@@ -142,18 +142,19 @@ def _run() -> None:
         else None
     )
     spark = get_spark(app_name="bench", extra_conf=extra)
-    # Self-certifying core count (additions only): `guard["cpus"]` is the
-    # HOST cpu count (os.cpu_count) and cannot prove which master ran, so a
-    # SPARK_GRAFT_CPUS=8 run used to print "cpus": 32 and the scaling
-    # harness had to *suspect* the override was ignored. Record the
-    # requested override, the master the session actually runs on, and the
-    # scheduler's defaultParallelism so the bench JSON proves its own core
-    # count.
+    # Self-certifying core count: `guard["cpus"]` is the session's
+    # effective parallelism (defaultParallelism), and the host count
+    # (os.cpu_count, which the contamination rule above uses) is
+    # `guard["host_cpus"]`. Before, "cpus" was the host count, so a
+    # SPARK_GRAFT_CPUS=8 run printed "cpus": 32 and the scaling harness
+    # had to *suspect* the override was ignored. The requested override
+    # and the master the session runs on are recorded beside it.
     guard["requested_cpus"] = int(
         os.environ.get("SPARK_GRAFT_CPUS", "32") or "32"
     )
     guard["spark_master"] = spark.sparkContext.master
     guard["default_parallelism"] = spark.sparkContext.defaultParallelism
+    guard["cpus"] = guard["default_parallelism"]
     qs = all_queries()
 
     # Warm the JVM + parquet footers outside the timed region.

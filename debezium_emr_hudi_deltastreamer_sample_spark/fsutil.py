@@ -1,5 +1,5 @@
 """Filesystem commit primitives shared by the table / rollup publish
-protocols (table.KeyedTable._publish_snapshot, streaming.rollup).
+protocols (table.KeyedTable versions, streaming.rollup).
 
 Every publish is a named-commit CAS — "make this staged directory the
 content of commit NAME, iff NAME is unclaimed" — behind a pluggable
@@ -41,9 +41,12 @@ conditionally create REFUSE the pointer protocol loudly
 (``_require_conditional_create``) instead of silently degrading the
 CAS to exists-check + PUT, where two writers can both "win" a name.
 
-Every versioned directory (schema sidecar, writer lease, snapshots,
-MOR base versions, rollup commits) goes through one ``CommitLog``:
-list, allocate past every claimed name, CAS-publish, verify, retain.
+Every versioned directory (KeyedTable versions, schema sidecar, writer
+lease, MOR base versions, rollup commits) goes through one ``CommitLog``:
+list, allocate past every claimed name, CAS-publish, verify, retain. A
+KeyedTable version is a manifest (schema + data directories); its data
+lives in directories no later commit rewrites (``swap_table_dir``
+publishes a version, ``recover_table_swap`` sweeps unreferenced data).
 
 Protocol selection: ``SPARK_GRAFT_COMMIT_PROTOCOL`` env
 (``rename``/``pointer``) overrides for tests and fuzz lanes; otherwise
@@ -439,7 +442,7 @@ class Commit(NamedTuple):
 class CommitLog:
     """A versioned directory of immutable commits named
     ``<prefix><seq:012d>[_<tag>]`` — the one commit loop behind the schema
-    sidecar (``v``), the writer lease (``e``), KeyedTable snapshots
+    sidecar (``v``), the writer lease (``e``), KeyedTable versions
     (``s``), MOR base versions (``v…_t<through>``) and rollup commits
     (``c``).
 
@@ -464,8 +467,9 @@ class CommitLog:
     and stays as an orphan below the tip until retention trims it. An
     entry a successor built on stays inside, so readers bound to it keep
     the documented window. Callers' rebuilds after such a false loss must
-    be idempotent: the schema union, the lease and snapshot re-claims
-    are, and a rollup finds its batch in the successor's manifest.
+    be idempotent: the schema union and the lease re-claim are, a rollup
+    finds its batch in the successor's manifest, and a KeyedTable raises
+    (its version records its parent, and only the tip's chain is read).
 
     Every FileSystem call resolves ``hadoop_fs``/``list_commits``/
     ``publish_commit`` through this module's globals at call time."""
@@ -568,7 +572,7 @@ class CommitLog:
 
 def hadoop_fs(spark, path: str):
     """Resolve (FileSystem, Path-class) for ``path`` — the one shared
-    getter behind every rename-commit call site (KeyedTable snapshots,
+    getter behind every rename-commit call site (KeyedTable versions,
     DeltaLogTable versions, rollup commits). Resolving PER PATH matters on
     mixed deployments: the scheme (file://, hdfs://, s3a://) picks the
     FileSystem implementation, so a table on object storage and a
@@ -612,9 +616,10 @@ def parquet_data_exists(spark, path: str) -> bool:
     file? One recursive FS listing, short-circuited at the first
     ``*.parquet`` hit — ~5 ms of filesystem calls where the historical
     DataFrame-construction probe (``spark.read.parquet`` + forced
-    analysis) paid ~90 ms of py4j/footer work per call; hot CDC paths
-    (KeyedTable.upsert, the IVM refresh) probe existence once or more per
-    batch, so the old cost was ~2 s of a 24 s five-batch IVM replay.
+    analysis) paid ~90 ms of py4j/footer work per call (~2 s of a 24 s
+    five-batch IVM replay when every upsert probed). A ``KeyedTable``
+    probes only while it has no version: the bootstrap, or adopting a
+    directory of external parquet.
 
     Contract matches the MISSING/EMPTY mapping of
     ``read_parquet_if_present``: a missing directory or one with no
@@ -663,206 +668,41 @@ def parquet_data_exists(spark, path: str) -> bool:
     return False
 
 
-def table_swap_journal(path: str) -> str:
-    """Sibling journal file for the stage-and-swap table publish
-    (``swap_table_dir``): present iff a swap is in flight or was torn by
-    a crash. Kept next to the table dir (like ``__schema``/``__writer``)
-    so renaming the table dir itself never moves it."""
-    return f"{path}__swap.journal"
-
-
-def _swap_journal_entry(fs, hpath, spark, journal: str):
-    """(stage, retire) recorded in a swap journal, or (None, None) when it
-    is unreadable (a crash during the journal write itself)."""
-    import json as _json
-
-    try:
-        data = read_small_file(fs, hpath, spark, journal)
-        if data:
-            j = _json.loads(data.decode("utf-8"))
-            return j["stage"], j["retire"]
-    except Exception:
-        pass
-    return None, None
-
-
-def resolve_table_swap(spark, path: str) -> str:
-    """The directory a READER of table ``path`` should scan, resolved
-    without repairing anything: readers never mutate table state, because
-    a journal is also present during a healthy, in-flight swap, and a
-    reader that healed it would delete or move the writer's stage under
-    it. Between the swap's two renames the table dir is missing and the
-    staged table is complete, so the reader is served the stage (the
-    state the publish, or a writer's heal, rolls forward to); with the
-    stage gone too it is served the retired copy. Every other shape reads
-    ``path`` itself. One fs.exists when no journal is present."""
-    fs, hpath = hadoop_fs(spark, path)
-    journal = table_swap_journal(path)
-    if not fs.exists(hpath(journal)) or fs.exists(hpath(path)):
-        return path
-    for candidate in _swap_journal_entry(fs, hpath, spark, journal):
-        if candidate and fs.exists(hpath(candidate)):
-            return candidate
-    return path
-
-
-def recover_table_swap(spark, path: str) -> None:
-    """Heal a torn stage-and-swap publish left by a process kill. Only
-    the table's writer (the lease holder) may call this; readers use
-    ``resolve_table_swap``.
-
-    Invariant the journal protocol guarantees: the journal is written
-    only AFTER the staged table directory is fully written, and deleted
-    only AFTER the swap is complete (or rolled back). So when a journal
-    exists, exactly one of these crash windows happened, each with one
-    correct repair:
-
-    - table dir + stage both present → crash before any rename: nothing
-      was published; drop the orphan stage and the journal (the caller's
-      at-least-once redelivery re-applies the batch).
-    - table dir missing, stage present → crash between retire and
-      publish: the staged table is COMPLETE — roll the swap forward.
-    - table dir missing, stage missing → the retired copy is the only
-      one: roll back (rename retire → table).
-    - table dir present, stage missing → the swap completed, the crash
-      hit cleanup: just clear the journal and the retired copy.
-
-    A half-written (unparseable) journal can only mean the crash hit the
-    journal write itself — before any rename — so the table is intact and
-    the journal is dropped. The one unrepairable shape (no journal
-    content AND no table dir) raises instead of guessing: silently
-    returning would let ``KeyedTable.upsert`` take its
-    bootstrap-overwrite branch and wipe the table down to one batch.
-
-    No-op (one fs.exists) when no journal is present — the steady state
-    every write pays."""
-    fs, hpath = hadoop_fs(spark, path)
-    journal = table_swap_journal(path)
-    if not fs.exists(hpath(journal)):
-        return
-    stage, retire = _swap_journal_entry(fs, hpath, spark, journal)
-    if stage is None:
-        if fs.exists(hpath(path)):
-            fs.delete(hpath(journal), False)
-            return
-        raise RuntimeError(
-            f"torn table swap at {path}: journal unreadable and the table "
-            f"directory is missing — refusing to guess (look under "
-            f"{path}__retire / {path}__stage)"
-        )
-    have_path = fs.exists(hpath(path))
-    have_stage = fs.exists(hpath(stage))
-    if have_path and have_stage:
-        fs.delete(hpath(stage), True)
-    elif not have_path and have_stage:
-        if not fs.rename(hpath(stage), hpath(path)):
-            raise RuntimeError(
-                f"table swap recovery: roll-forward rename {stage} -> "
-                f"{path} failed"
-            )
-    elif not have_path:
-        if not (
-            retire
-            and fs.exists(hpath(retire))
-            and fs.rename(hpath(retire), hpath(path))
-        ):
-            raise RuntimeError(
-                f"torn table swap at {path}: table, stage and retired copy "
-                "all missing — refusing to let a bootstrap wipe the table"
-            )
-    fs.delete(hpath(journal), False)
-    if retire:
-        try:
-            fs.delete(hpath(retire), True)
-        except Exception:
-            pass
-
-
 def swap_table_dir(
-    spark,
-    path: str,
-    stage: str,
-    _test_after_journal=None,
-    _test_after_retire=None,
-    _test_after_publish=None,
-) -> None:
-    """Publish the fully-written directory ``stage`` AS the table ``path``
-    with two atomic directory renames instead of a second full write —
-    the stage-and-swap COW commit (guide §6): the caller computes the
-    merge ONCE straight into the stage, then this swap makes it the
-    table. Only valid where directory rename is atomic
-    (``commit_protocol(path) == "rename"``); object-store tables keep the
-    in-place overwrite.
+    log: CommitLog, entries: list[Commit], stage: str, manifest: str, keep: int
+) -> bool:
+    """Publish one staged ``KeyedTable`` version as the table's tip: write
+    its manifest into ``stage`` and CAS-publish it on ``entries``, the
+    listing the commit's merge read. False: the tip moved, nothing was
+    published.
 
-    Crash safety: every window is journaled (``table_swap_journal``) and
-    healed by ``recover_table_swap`` — strictly smaller exposure than the
-    in-place Spark overwrite it replaces, whose delete-then-rewrite
-    leaves the table empty/partial for the whole write, with no repair
-    record at all. Single-writer context (the caller holds the
-    WriterLease), so the journal needs no CAS.
+    The name is kept from the layout before versions, when this step
+    swapped a staged table directory into place; the benchmark's tracer
+    looks the publish step up by this name."""
+    fs, hpath = log.fs()
+    write_small_file(fs, hpath, f"{stage}/_version.json", manifest.encode("utf-8"))
+    return log.publish(entries, stage, keep=keep)
 
-    ``_test_after_*`` are crash-injection seams for the deterministic
-    recovery tests; never passed in production code."""
-    import json as _json
 
-    recover_table_swap(spark, path)  # clear any stale torn swap first
-    fs, hpath = hadoop_fs(spark, path)
-    retire = f"{path}__retire/{uuid.uuid4().hex}"
-    journal = table_swap_journal(path)
-    write_small_file(
-        fs,
-        hpath,
-        journal,
-        _json.dumps({"stage": stage, "retire": retire}).encode("utf-8"),
-    )
-    if _test_after_journal is not None:
-        _test_after_journal()
-    if fs.exists(hpath(path)):
-        fs.mkdirs(hpath(f"{path}__retire"))
-        if not fs.rename(hpath(path), hpath(retire)):
-            fs.delete(hpath(journal), False)
-            raise RuntimeError(f"table swap: could not retire {path}")
-    if _test_after_retire is not None:
-        _test_after_retire()
-    if not fs.rename(hpath(stage), hpath(path)):
-        try:
-            if fs.exists(hpath(retire)):
-                fs.rename(hpath(retire), hpath(path))
-        finally:
-            fs.delete(hpath(journal), False)
-        raise RuntimeError(
-            f"table swap: could not publish {stage} as {path}"
-        )
-    base = stage.rstrip("/").rsplit("/", 1)[-1]
-    if fs.exists(hpath(f"{path}/{base}")):
-        # The destination reappeared between retire and publish (an
-        # external writer bypassing the lease): LocalFileSystem's rename
-        # moved the stage INSIDE it. Undo and fail loudly rather than
-        # serve a nested half-table. The journal goes (a recovery would
-        # read "swap completed" and delete the retired copy), so the error
-        # is the one record of where the pre-swap table now lives.
-        fs.delete(hpath(f"{path}/{base}"), True)
-        fs.delete(hpath(journal), False)
-        raise RuntimeError(
-            f"table swap: {path} was recreated mid-swap by a writer "
-            f"outside the lease — publish aborted; the pre-swap table is "
-            f"kept at {retire}"
-        )
-    if _test_after_publish is not None:
-        _test_after_publish()
-    fs.delete(hpath(journal), False)
-    try:
-        fs.delete(hpath(retire), True)
-        # Drop the (now empty) __retire parent; non-recursive delete
-        # refuses a non-empty dir, so a concurrent retire is never touched.
-        fs.delete(hpath(f"{path}__retire"), False)
-    except Exception:
-        pass
+def recover_table_swap(spark, data_root: str, dead: set[str]) -> None:
+    """The writer's sweep after a won ``KeyedTable`` publish: delete the
+    data directories ``dead`` under ``data_root`` — those that existed
+    when the commit began and that no retained version references. That
+    covers directories retention just unreferenced and the orphan a
+    killed commit left. A directory created after the commit began (a
+    concurrent writer's in-flight write) is never among them.
+
+    The name is kept from the layout before versions, when this step
+    repaired a torn table swap; the benchmark's tracer looks the sweep up
+    by this name."""
+    fs, hpath = hadoop_fs(spark, data_root)
+    for name in sorted(dead):
+        fs.delete(hpath(f"{data_root}/{name}"), True)
 
 
 def read_parquet_if_present(spark, path: str):
     """Parquet read with the NARROW missing-vs-broken distinction used by
-    every bootstrap-or-merge decision (KeyedTable.exists, the SCD2 fold):
+    every bootstrap-or-merge decision (``parquet_data_exists``'s fallback):
     returns the DataFrame, or None iff the table is MISSING/EMPTY
     (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA). Any other read failure
     (transient FS error, corrupt footer, permissions) RAISES — treating a

@@ -30,6 +30,7 @@ from ..streaming.pipeline import (
 )
 from ..streaming.sources import file_envelope_source
 from ..streaming.windows import session_counts, tumbling_counts
+from ..table import KeyedTable
 
 from ._registry import make_registry
 
@@ -453,7 +454,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     run_until_drained(q)
-    return spark.read.parquet(table_path).select(
+    return KeyedTable(spark, table_path, keys=["c_custkey"]).read().select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
 
@@ -954,7 +955,7 @@ def stream_avro_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     run_until_drained(q)
-    return spark.read.parquet(table_path).select(
+    return KeyedTable(spark, table_path, keys=["c_custkey"]).read().select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
 
@@ -1173,7 +1174,7 @@ def stream_scd2_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         available_now=True,
     )
     run_until_drained(q)
-    return spark.read.parquet(table_path).select(
+    return KeyedTable(spark, table_path, keys=["user_id"]).read().select(
         "user_id", "event_type", "valid_from", "valid_to", "is_current"
     )
 
@@ -1417,7 +1418,7 @@ def stream_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("dlq_rows")
     )
     return (
-        spark.read.parquet(table_path)
+        KeyedTable(spark, table_path, keys=["c_custkey"]).read()
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),

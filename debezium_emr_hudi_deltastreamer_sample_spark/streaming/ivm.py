@@ -29,8 +29,8 @@ keys left without one, and semi-joins itself only for those keys, so
 only batches that retract rows scan the view. The view write is a
 KeyedTable COW merge, partition-prunable the same way (pass
 ``partition_by``); a dim column the view gains by schema reconciliation
-stays visible in untouched partitions through the view's schema
-sidecar. At 100 TB this is the difference between a nightly
+stays visible in untouched partitions through the schema each view
+version carries. At 100 TB this is the difference between a nightly
 full re-join and a seconds-latency denormalized serving table.
 
 Restart/replay: every refresh recomputes affected rows FROM CURRENT

@@ -11,7 +11,7 @@
    application, LSN-ordered. The reference's own Hudi sink is dead code
    (foreachBatch at README.md:340 overrides format("hudi") — SURVEY.md
    §3.2); here the COW merge is implemented natively via
-   operators.merge.merge_upsert and a partition-overwrite parquet table.
+   operators.merge.merge_upsert into a versioned ``table.KeyedTable``.
 
 Both are ``foreachBatch`` factories (A3) started with a checkpoint (A4); at
 100 TB this is the right shape for CDC — per-key state lives in the table,
@@ -73,14 +73,12 @@ def upsert_batch_processor(
     (latest-wins picks the same rows; deletes stay deleted).
 
     Delegates to ``KeyedTable.upsert`` — ONE implementation of the COW
-    lifecycle: partition-pruned merges under dynamic overwrite, the
-    vanished-partition static rewrite (a partition emptied by deletes
-    would otherwise survive as stale files — delete resurrection), the
-    narrow missing-vs-broken table probe (a transient read failure must
-    abort the batch for retry, never bootstrap-overwrite the table down
-    to one micro-batch), and pre-overwrite materialization. A drifting
-    feed (B11) needs no option: the table's schema sidecar keeps a column
-    that only the rewritten partitions carry.
+    lifecycle: partition-pruned merges whose version carries untouched
+    partitions by reference and drops a partition the deletes emptied,
+    one data write and one version publish per batch, and a publish that
+    raises (so the batch is retried) when the tip moved under the merge.
+    A drifting feed (B11) needs no option: the version's schema keeps a
+    column that only the rewritten partitions carry.
     """
     def process(df: DataFrame, batch_id: int) -> None:
         from ..table import KeyedTable
@@ -355,10 +353,10 @@ def scd2_batch_processor(
     versions, the last one open.
 
     Scale: every step hashes on the key — one exchange per batch over
-    batch-plus-open-rows, never the full history re-sorted; the rewrite is
-    the same portable COW as upsert_batch_processor (a real table format's
-    atomic commit replaces the overwrite; with the table partitioned by
-    key-bucket only touched buckets rewrite).
+    batch-plus-open-rows, never the full history re-sorted. Each batch is
+    one ``KeyedTable`` replace: the fold reads the tip version, writes the
+    new history once and publishes it against that version, so a killed
+    batch leaves the previous version served and redelivery converges.
 
     Each batch runs as the table's single writer (``WriterLease``). Run
     the processor under ``start_pipeline`` (or ``table.
@@ -366,7 +364,8 @@ def scd2_batch_processor(
     re-owns the lease: called directly, the writer id is per process,
     and a restarted process gets ``ConcurrentWriterError`` on every
     batch until it runs under such a scope or, with no other writer
-    alive, ``{table_path}__writer`` is deleted (USAGE.md)."""
+    alive, ``{table_path}__writer`` is deleted (USAGE.md). Read the table
+    through ``KeyedTable(spark, table_path, keys=[key]).read()``."""
     from pyspark.sql import Window
 
     cols = [key, attr, "valid_from", "valid_from_id", "valid_to", "is_current"]
@@ -388,23 +387,14 @@ def scd2_batch_processor(
         changes = b.filter(
             (F.col("_pos") == 1) | ~F.col(attr).eqNullSafe(F.col("_prev"))
         ).drop("_prev", "_pos")
-        # Only a MISSING/EMPTY table means "first batch". Any other read
-        # failure (transient FS error, corrupt footer, permissions) must
-        # abort the batch so foreachBatch retries it — swallowing it
-        # would fold this batch against nothing and the final overwrite
-        # would replace the whole versioned history with it. Heal any
-        # torn stage-and-swap publish from a killed predecessor FIRST —
-        # a torn swap reads as MISSING and would likewise fold this batch
-        # against nothing — and only as the table's writer: the lease
-        # (pipeline-scoped id, see start_pipeline) fences a second writer
-        # whose heal would tear this one's in-flight swap.
-        from ..fsutil import read_parquet_if_present, recover_table_swap
-        from ..table import WriterLease
+        # The fold's base is the tip version (none: the first batch). Its
+        # publish is a CAS on that version, so a fold over a stale history
+        # is never published.
+        from ..table import KeyedTable
 
-        lease = WriterLease(spark, table_path, None)
-        lease.ensure()
-        recover_table_swap(spark, table_path)
-        hist = read_parquet_if_present(spark, table_path)
+        table = KeyedTable(spark, table_path, keys=[key, "valid_from", "valid_from_id"])
+        entries, tip = table._base()
+        hist = None if tip is None else table._read_version(tip)
         if hist is not None:
             open_rows = hist.filter("is_current").select(
                 key,
@@ -481,27 +471,6 @@ def scd2_batch_processor(
             out = closed.unionByName(new_versions.select(*cols))
         else:
             out = new_versions.select(*cols)
-        # The fold reads the same files the write replaces. On
-        # rename-protocol stores, stage-and-swap (one materialization,
-        # journaled atomic publish — same round-13 optimization as
-        # KeyedTable._write); elsewhere the historical materialize-then-
-        # overwrite (two materializations, but object-store rename is
-        # copy+delete so the swap buys nothing there).
-        from ..fsutil import commit_protocol
-
-        if commit_protocol(table_path) == "rename":
-            import uuid as _uuid
-
-            from ..fsutil import swap_table_dir
-
-            stage = f"{table_path}__stage/{_uuid.uuid4().hex}"
-            out.write.mode("overwrite").parquet(stage)
-            lease.check()
-            swap_table_dir(spark, table_path, stage)
-        else:
-            out.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                table_path
-            )
-        lease.check()
+        table._commit(out, entries, tip)
 
     return process

@@ -1,6 +1,6 @@
-"""Keyed, mutable, catalog-registered tables — the reference's table
-abstraction (Hudi COPY_ON_WRITE + Hive sync, /root/reference/README.md:
-295-313) implemented portably over partitioned parquet.
+"""Keyed, catalog-registered tables — the reference's table abstraction
+(Hudi COPY_ON_WRITE + Hive sync, reference README.md:295-313)
+implemented portably over partitioned parquet.
 
 Semantics owned here (reference tier B):
 - B5  upsert: latest-wins merge on a declared key + ordering field
@@ -10,26 +10,24 @@ Semantics owned here (reference tier B):
 - B12 catalog sync: ``register`` ≡ hive_sync (temp view locally; on a real
   cluster ``saveAsTable`` against the metastore)
 
-Every KeyedTable data commit goes through ONE path, ``_commit``: take
-the writer lease, widen the schema sidecar, write, reset the sidecar,
-publish the snapshot — Hudi's precombine → upsert → table replace
-lifecycle (reference README.md:295-313). ``init``, the first ``upsert``
-(a merge into an empty snapshot) and ``compact_history`` are table
-replaces through it. Its one write, ``_write``, decides the only
-materialization: an in-place overwrite checkpoints its input once when
-that input reads the table (a merge, a compaction) or a snapshot will
-re-execute it (``keep_history``); a replace from new content without
-history, and the stage-and-swap publish (non-partitioned tables on
-rename-protocol stores), write straight from the plan.
+A ``KeyedTable`` is a timeline of immutable versions, the shape of Hudi's
+COW timeline. Every commit — ``init``, ``upsert``, ``compact``,
+``compact_history`` and the SCD2 fold (streaming.pipeline) — writes its
+data once, into a new directory, then publishes one version through
+``fsutil.CommitLog``. A version holds the table's schema and the list of
+data directories it reads, so the schema commits atomically with the data.
+With ``partition_by`` an upsert reads and rewrites ONLY the partitions
+holding changed keys and carries the others by reference (the Hudi
+file-group analogue). No file is overwritten in place: readers never need
+a repair, a killed commit leaves only an unreferenced directory, and the
+writer's sweep after its next commit deletes it.
 
-COW strategy at scale: with ``partition_by`` set an upsert rewrites ONLY
-the partitions containing changed keys (a per-write dynamic partition
-overwrite) — the Hudi file-group analogue. The merge shuffles once on the
-key; the unchanged-partition data is never read or written. Replaces
-overwrite statically.
+The publish is a CAS on the name after the version the merge read, so a
+merge built on a tip that has since moved loses and raises
+``ConcurrentWriterError`` instead of overwriting a newer version.
 
-Readers never mutate table state: a torn or in-flight swap is resolved
-read-only (``fsutil.resolve_table_swap``); only the writer heals it.
+``DeltaLogTable`` is the MERGE_ON_READ sibling: a delta log of immutable
+batch directories, folded into ``CommitLog`` base versions.
 
 A real Hudi writer is used if the jar happens to be present
 (``format("hudi")``, README.md:337 intent); this container ships none, so
@@ -39,21 +37,25 @@ probe.
 
 from __future__ import annotations
 
+import json
 import sys
 import threading
+import uuid
 from collections.abc import Sequence
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsutil import CommitLog
+from .fsutil import Commit, CommitLog
 from .operators.merge import cdc_meta_columns, merge_upsert
 
 
 def _union_schema(base: T.StructType, extra: T.StructType) -> T.StructType:
-    """Schema reconciliation for the sidecar: keep ``base``'s column order,
+    """Schema reconciliation for the delta-log sidecar and partitioned
+    upserts: keep ``base``'s column order,
     take ``extra``'s type for matching names (the merge's unionByName has
     already reconciled it — the latest write defines the current type),
     append columns only ``extra`` has. Monotone: a column, once present,
@@ -66,27 +68,24 @@ def _union_schema(base: T.StructType, extra: T.StructType) -> T.StructType:
 
 
 class SchemaSidecar:
-    """The table's authoritative current schema, persisted in the commit
-    path — how every commit-log table format (Hudi/Delta/Iceberg) closes
-    the schema-drift footgun: a PARTITIONED table that gains a column
-    through reconciliation (B11) rewrites only touched partitions, so
-    untouched partitions keep old-schema footers, and a footer-inferred
-    read picks ONE arbitrary footer — the drifted column
-    nondeterministically vanishes, and the upsert's own
-    ``current = self.read()`` then rewrites partitions WITHOUT it
-    (permanent loss, no error).
+    """The MOR delta log's authoritative current schema, persisted in the
+    commit path — how every commit-log table format (Hudi/Delta/Iceberg)
+    closes the schema-drift footgun: delta batches land with their own
+    footers, and a footer-inferred read picks ONE arbitrary footer — a
+    drifted column nondeterministically vanishes from the merge-on-read
+    view and from the next compaction's folded base (permanent loss, no
+    error). ``KeyedTable`` needs no sidecar: each of its versions carries
+    its schema.
 
     Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json),
     one ``fsutil.CommitLog``. Publish is a monotone-union retry loop over
     it, so racing writers can only WIDEN the schema, never clobber each
     other's columns; retention keeps the two newest versions (in-flight
-    readers of the previous one stay valid). Readers (``KeyedTable.read``,
-    MOR delta reads) apply the sidecar as the explicit parquet read
-    schema — per-file missing columns null-fill, column order is stable,
-    and no footer lottery remains. Every engine commit publishes the
-    sidecar before it writes, so only a directory the engine did not
-    write (adopted external parquet) reads without one: that read merges
-    every footer."""
+    readers of the previous one stay valid). MOR delta reads apply the
+    sidecar as the explicit parquet read schema — per-file missing
+    columns null-fill, column order is stable, and no footer lottery
+    remains. Every append publishes the sidecar before it writes, so a
+    delta log without one merges every footer."""
 
     def __init__(self, spark: SparkSession, table_path: str) -> None:
         self.spark = spark
@@ -95,8 +94,6 @@ class SchemaSidecar:
         self._log = CommitLog(spark, self.dir, "v")
 
     def _parse(self, fs, hpath, uri: str | None) -> T.StructType | None:
-        import json as _json
-
         from .fsutil import read_small_file
 
         if uri is None:
@@ -105,7 +102,7 @@ class SchemaSidecar:
             data = read_small_file(fs, hpath, self.spark, f"{uri}/schema.json")
             if data is None:
                 return None
-            return T.StructType.fromJson(_json.loads(data.decode("utf-8")))
+            return T.StructType.fromJson(json.loads(data.decode("utf-8")))
         except Exception:
             return None
 
@@ -135,29 +132,22 @@ class SchemaSidecar:
                 return schema
         return None
 
-    def publish(self, schema: T.StructType, reset: bool = False) -> None:
-        """Record ``schema`` (unioned into the current one; ``reset=True``
-        replaces it exactly — table init/replace). No-ops without a write
-        when nothing changed — the stable-schema hot path pays one listing
-        and one small-file read per commit."""
-        import uuid as _uuid
-
+    def publish(self, schema: T.StructType) -> None:
+        """Record ``schema``, unioned into the current one. No-ops without
+        a write when nothing changed — the stable-schema hot path pays one
+        listing and one small-file read per commit."""
         from .fsutil import write_small_file
 
         fs, hpath = self._log.fs()
         for entries in self._log.attempts():
             # Newest PARSEABLE version — a never-published pointer must not
-            # masquerade as "no sidecar": with reset=False that would skip
-            # the union and narrow the published schema.
+            # masquerade as "no sidecar": that would skip the union and
+            # narrow the published schema.
             cur = self._newest(fs, hpath, [c.uri for c in entries])
-            want = (
-                schema
-                if (reset or cur is None)
-                else _union_schema(cur, schema)
-            )
+            want = schema if cur is None else _union_schema(cur, schema)
             if cur is not None and cur.json() == want.json():
                 return
-            stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
+            stage = f"{self.stage_root}/{uuid.uuid4().hex}"
             fs.mkdirs(hpath(stage))
             write_small_file(
                 fs, hpath, f"{stage}/schema.json", want.json().encode("utf-8")
@@ -174,16 +164,13 @@ class SchemaSidecar:
 
 
 def _embedded_commit_schema(spark: SparkSession, uri: str) -> T.StructType | None:
-    """Schema-as-of embedded in one snapshot/base commit (``_schema.json``,
+    """Schema-as-of embedded in one MOR base commit (``_schema.json``,
     underscore-prefixed so parquet readers ignore the file). Written into
     the STAGE before the commit publishes, so a commit and its schema are
-    atomic — historical reads of a drifted table are footer-lottery-free
-    exactly like the current read (which uses the sidecar), and a snapshot
-    of an EMPTIED table (zero parquet footers) stays readable. Every
-    commit embeds it before it publishes, so None means retention removed
-    the commit after the listing."""
-    import json as _json
-
+    atomic — historical reads of a drifted table are footer-lottery-free,
+    and a base of an EMPTIED table (zero parquet footers) stays readable.
+    Every commit embeds it before it publishes, so None means retention
+    removed the commit after the listing."""
     from .fsutil import hadoop_fs, read_small_file
 
     try:
@@ -191,7 +178,7 @@ def _embedded_commit_schema(spark: SparkSession, uri: str) -> T.StructType | Non
         data = read_small_file(fs, hpath, spark, f"{uri}/_schema.json")
         if not data:
             return None
-        return T.StructType.fromJson(_json.loads(data.decode("utf-8")))
+        return T.StructType.fromJson(json.loads(data.decode("utf-8")))
     except Exception:
         return None
 
@@ -208,9 +195,10 @@ def _embed_commit_schema(spark: SparkSession, stage: str, schema: T.StructType) 
 
 
 class ConcurrentWriterError(RuntimeError):
-    """A second writer attempted a data commit on a single-writer table
-    (or this writer was fenced by a takeover). Raised INSTEAD of letting
-    two read→merge→overwrite cycles interleave as silent lost updates."""
+    """A second writer attempted a data commit on a single-writer table,
+    this writer was fenced by a takeover, or the tip moved past the
+    version a commit's merge read. Raised INSTEAD of letting two
+    read→merge→publish cycles interleave as silent lost updates."""
 
 
 #: One stable writer identity per process: foreachBatch constructs a fresh
@@ -225,9 +213,8 @@ def _process_writer_id() -> str:
     global _PROCESS_WRITER_ID
     if _PROCESS_WRITER_ID is None:
         import os as _os
-        import uuid as _uuid
 
-        _PROCESS_WRITER_ID = f"{_os.getpid()}-{_uuid.uuid4().hex[:12]}"
+        _PROCESS_WRITER_ID = f"{_os.getpid()}-{uuid.uuid4().hex[:12]}"
     return _PROCESS_WRITER_ID
 
 
@@ -318,12 +305,17 @@ class WriterLease:
       same checkpoint — even in a new process — already owns its epoch.
 
     What this does and does not guarantee: every steady-state concurrent
-    writer fails LOUDLY before touching data; the residual window is one
-    in-flight commit racing the takeover itself (ensure passes, takeover
-    lands, the fenced writer's write completes before its post-write
-    ``check()`` raises) — the same single-commit window Hudi's
-    heartbeat-lease expiry has. The post-write check makes even that
-    window loud, after the fact."""
+    writer fails LOUDLY before touching data. The one window the lease
+    alone leaves is an in-flight commit racing the takeover itself
+    (ensure passes, the takeover lands, the fenced writer's write
+    completes) — the single-commit window Hudi's heartbeat-lease expiry
+    has. A ``KeyedTable`` commit closes it with no lost update: the fenced
+    writer re-checks before it publishes, and every publish is a CAS on
+    the name after the version its merge read. Whichever of the two
+    writers publishes second built on a tip that has since moved, so its
+    CAS is lost and it raises ``ConcurrentWriterError``; its stale merge
+    is never published. A MOR append (``_write_delta``) re-checks after
+    its write."""
 
     def __init__(self, spark: SparkSession, table_path: str, writer_id: str | None) -> None:
         self.spark = spark
@@ -361,11 +353,9 @@ class WriterLease:
         retention keeps it plus its newest published predecessor (an
         in-flight check against the old epoch resolves, then fails loudly
         on the newer one at its next ensure)."""
-        import uuid as _uuid
-
         from .fsutil import write_small_file
 
-        stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
+        stage = f"{self.stage_root}/{uuid.uuid4().hex}"
         fs.mkdirs(hpath(stage))
         write_small_file(fs, hpath, f"{stage}/owner", self.writer_id.encode())
         return self._log.publish(epochs, stage)
@@ -560,6 +550,19 @@ def hudi_available(spark: SparkSession) -> bool:
         return False
 
 
+class _Version(NamedTuple):
+    """One published table version: the commit it was published as, the
+    id of the data directory it wrote, its schema, the data directories
+    it reads (relative to ``{path}/_data``) and the ``[name, id]`` of the
+    version it was built on."""
+
+    commit: Commit | None
+    id: str
+    schema: T.StructType
+    dirs: list[str]
+    parent: list[str] | None
+
+
 class KeyedTable:
     """A primary-keyed, upsertable parquet table at a fixed path.
 
@@ -567,6 +570,13 @@ class KeyedTable:
     ...                ordering=["_lsn"], partition_by=["region"])
     >>> t.upsert(change_batch)   # latest-wins + deletes, COW
     >>> t.register("customers")  # queryable by name
+    >>> t.read(as_of=n)          # time travel (keep_history > 0)
+
+    On disk: ``{path}/_versions`` (the version log) and
+    ``{path}/_data/_v=<id>`` (one data directory per commit), plus the
+    writer lease beside the table (``{path}__writer``). Both names under
+    ``path`` start with ``_``, so a bare ``spark.read.parquet(path)`` sees
+    no engine data: read through ``read()``.
     """
 
     def __init__(
@@ -599,14 +609,13 @@ class KeyedTable:
         #: fence an owner with no heartbeat for this many seconds — see
         #: WriterLease.ensure. None = manual-takeover-only (the default).
         self.take_over_if_stale = take_over_if_stale
-        self.schema_sidecar = SchemaSidecar(spark, path)
-        #: Hudi-timeline analogue (opt-in): with ``keep_history`` > 0 every
-        #: init/upsert ALSO publishes an immutable full-snapshot commit
-        #: under ``{path}__snapshots`` (one extra write per batch — the COW
-        #: file-version retention Hudi pays too), and ``read(as_of=n)``
-        #: time-travels to commit n. 0 = current behavior, no extra writes.
+        #: Hudi-timeline time travel: ``read(as_of=n)`` and ``snapshots()``
+        #: serve the newest ``keep_history`` versions on the tip's chain.
+        #: Retention keeps ``max(2, keep_history)`` versions, so a reader
+        #: of the previous version finishes on files that still exist.
         self.keep_history = max(0, keep_history)
-        self._snapshot_log = CommitLog(spark, f"{path}__snapshots", "s")
+        self._log = CommitLog(spark, f"{path}/_versions", "s")
+        self._data = f"{path}/_data"
 
     def _ensure_lease(self) -> None:
         """Assert single-writer ownership, CONSUMING any takeover on the
@@ -622,167 +631,129 @@ class KeyedTable:
         self._lease.ensure(self.take_over, self.take_over_if_stale)
         self.take_over = False
 
+    # -- versions -------------------------------------------------------------
+
+    def _version(self, c: Commit) -> _Version | None:
+        """The manifest of one published commit, or None when retention
+        removed it after the listing."""
+        from .fsutil import read_small_file
+
+        fs, hpath = self._log.fs()
+        try:
+            m = json.loads(read_small_file(fs, hpath, self.spark, f"{c.uri}/_version.json"))
+        except Exception:
+            return None
+        schema = T.StructType.fromJson(m["schema"])
+        return _Version(c, m["id"], schema, m["dirs"], m["parent"])
+
+    def _tip(self) -> tuple[list[Commit], _Version | None]:
+        """The version log's listing and the newest version on it (None:
+        the table has no version). A reader that lists just before two
+        commits land can find the listed tip retired: it lists again."""
+        for _attempt in range(3):
+            entries = self._log.entries()
+            published = [c for c in entries if c.uri is not None]
+            if not published:
+                return entries, None
+            tip = self._version(published[-1])
+            if tip is not None:
+                return entries, tip
+        raise FileNotFoundError(f"the newest version of {self.path} kept vanishing")
+
+    def _chain(self, entries: list[Commit], tip: _Version, limit: int) -> list[_Version]:
+        """Up to ``limit`` versions from ``tip`` back along the parent
+        links, newest first. An entry below the tip that is not on this
+        chain (a lost publish that ``CommitLog`` kept inside its window)
+        is never served."""
+        by_name = {c.name: c for c in entries if c.uri is not None}
+        chain = [tip]
+        while len(chain) < limit and chain[-1].parent:
+            name, vid = chain[-1].parent
+            v = self._version(by_name[name]) if name in by_name else None
+            if v is None or v.id != vid:
+                break
+            chain.append(v)
+        return chain
+
+    def _history(self, entries: list[Commit], tip: _Version | None) -> list[_Version]:
+        """The versions time travel serves: the newest ``keep_history``
+        on the tip's chain, newest first."""
+        return self._chain(entries, tip, self.keep_history) if tip and self.keep_history else []
+
+    def _read_version(self, v: _Version, dirs: Sequence[str] | None = None) -> DataFrame:
+        """``v``'s rows, or only those in ``dirs``, with ``v``'s schema in
+        its column order. An unpartitioned version is one plain directory.
+        Partition directories from several commits are read under one
+        ``basePath``, so every path has the same ``_v=<id>/k=v`` structure;
+        Spark puts the pseudo-column ``_v`` and the partition columns
+        last, so the columns are selected back into order."""
+        dirs = v.dirs if dirs is None else dirs
+        if not dirs:
+            return self.spark.createDataFrame([], v.schema)
+        paths = [f"{self._data}/{d}" for d in dirs]
+        if not any("/" in d for d in dirs):
+            return self.spark.read.schema(v.schema).parquet(*paths)
+        read_schema = T.StructType(v.schema.fields + [T.StructField("_v", T.StringType())])
+        return (
+            self.spark.read.schema(read_schema)
+            .option("basePath", self._data)
+            .parquet(*paths)
+            .select(*[F.col(f"`{n}`") for n in v.schema.fieldNames()])
+        )
+
+    def _read_external(self) -> DataFrame:
+        """A directory of parquet the engine did not write (no version
+        yet): every footer is merged. Its first commit adopts it."""
+        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+
     # -- read ---------------------------------------------------------------
 
     def exists(self) -> bool:
-        """True iff the table has readable data. Only the two MISSING/EMPTY
-        conditions map to False — any other probe failure (transient FS
-        error, permissions) RAISES: callers use this to decide between
-        bootstrap-overwrite and merge, and treating a blip as "missing"
-        would let an upsert wipe the table down to one batch. The probe is
-        one short-circuited FS listing (fsutil.parquet_data_exists) — a
-        corrupt FOOTER therefore surfaces loudly at the subsequent
-        read/merge rather than here, which still can never route a caller
-        to the bootstrap-overwrite branch.
+        """True iff the table has readable data: its tip lists at least
+        one data directory (a partitioned table that deletes emptied
+        lists none), or, before the first version, the directory holds
+        external parquet (fsutil.parquet_data_exists). Any probe failure
+        other than MISSING/EMPTY RAISES: callers use this to decide
+        between bootstrap and merge, and a blip read as "missing" would
+        replace the table with one batch."""
+        from .fsutil import parquet_data_exists
 
-        Read-only, like ``read``: a torn or in-flight stage-and-swap
-        publish resolves to the directory that holds the table
-        (fsutil.resolve_table_swap), so a crash between the swap's two
-        renames still probes True. Only the writer heals, inside its
-        swap."""
-        from .fsutil import parquet_data_exists, resolve_table_swap
-
-        return parquet_data_exists(
-            self.spark, resolve_table_swap(self.spark, self.path)
-        )
+        _, tip = self._tip()
+        if tip is None:
+            return parquet_data_exists(self.spark, self.path)
+        return bool(tip.dirs)
 
     def read(self, as_of: int | None = None) -> DataFrame:
-        """Current snapshot, or — with ``keep_history`` and ``as_of=n`` —
-        the table exactly as of commit ``n`` (0 = the first commit, then
-        one per upsert or replace), Hudi time-travel style.
-
-        The current read applies the persisted sidecar schema
-        (authoritative — stable column set/order regardless of which
-        partitions were last rewritten) and resolves a torn swap without
-        repairing it (see ``exists``); a directory without a sidecar (not
-        written by the engine) merges its footers. Time-travel reads apply
-        the schema-as-of EMBEDDED in the snapshot commit (``_schema.json``,
-        written into the stage so commit and schema publish atomically): a
-        pre-drift snapshot serves exactly its own columns, and a snapshot
-        of an emptied table (no footers) still reads."""
-        from .fsutil import resolve_table_swap
-
+        """The tip version, or — with ``keep_history`` and ``as_of=n`` —
+        version ``n`` (0 = the first commit, then one per commit), Hudi
+        time-travel style. Each version reads with its own schema: a
+        pre-drift version serves exactly its columns, and a version of an
+        emptied table still reads. A directory with no version (external
+        parquet) merges its footers."""
+        entries, tip = self._tip()
         if as_of is None:
-            path = resolve_table_swap(self.spark, self.path)
-            persisted = self.schema_sidecar.current()
-            if persisted is not None:
-                return self.spark.read.schema(persisted).parquet(path)
-            return self.spark.read.option("mergeSchema", "true").parquet(path)
-        for seq, uri in self.snapshots():
-            if seq == as_of:
-                persisted = _embedded_commit_schema(self.spark, uri)
-                if persisted is not None:
-                    return self.spark.read.schema(persisted).parquet(uri)
-                break  # retention removed it after the listing
+            return self._read_external() if tip is None else self._read_version(tip)
+        chain = self._history(entries, tip)
+        for v in chain:
+            if v.commit.seq == as_of:
+                return self._read_version(v)
         raise FileNotFoundError(
-            f"no snapshot commit {as_of} at {self.path}__snapshots "
-            f"(have {[s for s, _ in self.snapshots()]}; retention keeps "
-            f"the last {self.keep_history})"
+            f"no version {as_of} at {self.path} (have "
+            f"{sorted(v.commit.seq for v in chain)}; time travel serves the "
+            f"last {self.keep_history})"
         )
 
     def snapshots(self) -> list[tuple[int, str]]:
-        """Available (commit_seq, uri) snapshots, oldest first. Each one's
-        nested crash garbage is healed first (``CommitLog.heal``; one
-        member listing per retained snapshot, keep_history bounds the
-        count) before a time-travel read trips on it."""
-        log = self._snapshot_log
-        return [
-            (c.seq, c.uri)
-            for c in log.entries()
-            if c.uri is not None and log.heal(c.uri) is not None
-        ]
-
-    def _publish_snapshot(self, df: DataFrame | None) -> None:
-        """One immutable snapshot commit per table commit (only when
-        ``keep_history`` > 0): stage, embed the schema-as-of, publish into
-        the timeline keeping the newest ``keep_history`` commits — same
-        CommitLog protocol as streaming.rollup.
-
-        ``df`` is the table's CURRENT full content as just written, or
-        None after a partition-pruned write (it holds only the touched
-        partitions), which re-reads the table. On the staged-swap path the
-        stage is HARD-LINKED from the just-published table's immutable
-        parquet files — O(file count) metadata ops instead of a second
-        full write per commit — and ``df`` contributes only its schema.
-        Elsewhere (partitioned tables, object stores) the stage is written
-        from ``df``, which ``_write`` materialized, so the snapshot holds
-        exactly the rows the table does."""
+        """The (seq, uri) of the versions ``read(as_of=…)`` serves, oldest
+        first: the newest ``keep_history`` on the tip's chain. Each one's
+        nested crash garbage is healed first (``CommitLog.heal``)."""
         if not self.keep_history:
-            return
-        import uuid as _uuid
-
-        from .fsutil import hadoop_fs
-
-        if df is None:
-            df = self.read()
-        linked = self._staged_swap()
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        for existing in self._snapshot_log.attempts():
-            stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
-            if linked:
-                self._stage_snapshot_links(stage)
-            else:
-                df.write.mode("overwrite").parquet(stage)
-            # Schema-as-of rides INSIDE the commit (after the populate —
-            # overwrite staging clears the dir): read(as_of=n) serves
-            # commit n with commit n's own schema, not the current
-            # sidecar's.
-            _embed_commit_schema(self.spark, stage, df.schema)
-            if self._snapshot_log.publish(
-                existing, stage, keep=self.keep_history
-            ):
-                break
-            # A concurrent writer took this seq: the publish released the
-            # stage, so re-stage and retry on a fresh listing rather than
-            # silently losing the commit.
-        else:
-            raise RuntimeError(
-                f"could not publish snapshot commit at {self.path}__snapshots "
-                "after 5 attempts"
-            )
-        # The staged dir was renamed away; drop its (now empty) parent.
-        # Non-recursive delete refuses a non-empty dir, so a concurrent
-        # writer's in-flight stage is never touched.
-        try:
-            fs.delete(hpath(f"{self.path}__stage"), False)
-        except Exception:
-            pass
-
-    def _stage_snapshot_links(self, stage: str) -> None:
-        """Populate one snapshot stage with hard links to the table's
-        current visible files. Safe because data files are immutable: a
-        later upsert RETIRES the whole table dir (unlinking its names)
-        and publishes fresh uuid-staged files — the snapshot's links keep
-        the old bytes alive, and retention's recursive delete only drops
-        link counts. Only reached via ``_staged_swap`` (non-partitioned →
-        the table dir is flat, matching the flat-snapshot contract that
-        ``CommitLog.heal`` enforces). Stores without link(2) fall back
-        to an FS-level copy — still no plan re-execution."""
-        import os as _os
-
-        from .fsutil import _fs_is_local, _local_os_path, hadoop_fs
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        fs.mkdirs(hpath(stage))
-        src_os = _local_os_path(self.path) if _fs_is_local(fs) else None
-        dst_os = _local_os_path(stage) if src_os is not None else None
-        for st in fs.listStatus(hpath(self.path)):
-            name = st.getPath().getName()
-            if st.isDirectory() or name[:1] in ("_", "."):
-                continue
-            if src_os is not None and dst_os is not None:
-                _os.link(
-                    _os.path.join(src_os, name), _os.path.join(dst_os, name)
-                )
-            else:
-                self.spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
-                    fs,
-                    st.getPath(),
-                    fs,
-                    hpath(f"{stage}/{name}"),
-                    False,
-                    self.spark._jsc.hadoopConfiguration(),
-                )
+            return []
+        return [
+            (v.commit.seq, v.commit.uri)
+            for v in reversed(self._history(*self._tip()))
+            if self._log.heal(v.commit.uri) is not None
+        ]
 
     def register(self, name: str) -> None:
         """Catalog sync (B12). Locally a temp view; on a cluster this is
@@ -791,137 +762,136 @@ class KeyedTable:
 
     # -- write --------------------------------------------------------------
 
-    def _staged_swap(self) -> bool:
-        """True iff full-table rewrites go through the stage-and-swap
-        publish (write the merge ONCE into a staged dir, two atomic
-        renames) instead of checkpoint + in-place overwrite (TWO full
-        materializations per batch — the round-12 verdict's top remaining
-        structural cost). Applicability:
+    def _base(self) -> tuple[list[Commit], _Version | None]:
+        """Take the lease, then the listing and tip a commit builds on."""
+        self._ensure_lease()
+        return self._tip()
 
-        - non-partitioned only: the swap's atomicity unit is the whole
-          table dir; partitioned tables keep the partition-pruned dynamic
-          overwrite, whose whole point is NOT rewriting the full table.
-        - rename commit protocol only (HDFS/local): object stores fake
-          directory rename as copy+delete — there the in-place overwrite
-          is no worse and the swap buys nothing."""
-        from .fsutil import commit_protocol
+    def _write_data(self, df: DataFrame, data_dir: str) -> None:
+        """The commit's one data write, into a directory no version
+        references yet (a crash-injection seam)."""
+        writer = df.write
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        writer.parquet(data_dir)
 
-        return not self.partition_by and commit_protocol(self.path) == "rename"
+    def _written_dirs(self, vid: str) -> list[str]:
+        """The data directories one write produced: ``_v=<id>`` itself,
+        or one per partition it wrote (none for an empty write)."""
+        from .fsutil import hadoop_fs
 
-    def _write(
-        self, df: DataFrame, parts: DataFrame | None = None, *, reads_table: bool = False
-    ) -> DataFrame | None:
-        """The one COW data write (``_commit`` and ``compact`` land here):
-        make ``df`` the table, or — with ``parts``, the partitions a
-        partition-pruned upsert touched — those partitions of it.
-        ``reads_table`` says ``df`` is computed from the table's own files
-        (a merge into the stored snapshot, a compaction). Returns the
-        table's full content as written, or None when only ``parts`` were
-        replaced. The lease is re-checked after the materialization
-        (before anything becomes visible) and after the write, so a
-        takeover that lands mid-write fences this writer loudly instead of
-        letting it keep publishing."""
-        if self._staged_swap():
-            # Stage-and-swap: compute df straight into a staged dir (ONE
-            # materialization — df may read the very files the swap
-            # replaces, since they are untouched until the rename), then
-            # publish with two atomic renames (fsutil.swap_table_dir;
-            # crash windows journaled, and a torn swap left by a killed
-            # writer is healed there, by the lease holder, before the new
-            # one starts).
-            import uuid as _uuid
+        dirs = [f"_v={vid}"]
+        if not self.partition_by:
+            return dirs
+        fs, hpath = hadoop_fs(self.spark, self._data)
+        for _level in self.partition_by:
+            below = []
+            for d in dirs:
+                try:
+                    listed = fs.listStatus(hpath(f"{self._data}/{d}"))
+                except Exception:  # an empty write may leave no directory
+                    listed = []
+                below += [
+                    f"{d}/{st.getPath().getName()}"
+                    for st in listed
+                    if st.isDirectory() and "=" in st.getPath().getName()
+                ]
+            dirs = below
+        return sorted(dirs)
 
-            from .fsutil import swap_table_dir
-
-            stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
-            df.write.mode("overwrite").parquet(stage)
-            self._lease.check()
-            swap_table_dir(self.spark, self.path, stage)
-        else:
-            # In-place overwrite, the one place that decides to
-            # materialize, and only when it must: a df that reads the
-            # files the write deletes, or one the snapshot publish
-            # re-executes (a nondeterministic input — rand(), an
-            # unordered limit, an equal-ordering precombine tie — must
-            # not publish a snapshot that diverges from the table). A
-            # replace from new content on a table without history
-            # writes straight from the plan.
-            if reads_table or self.keep_history:
-                df = df.localCheckpoint(eager=True)
-            mode = "static"
-            if parts is not None:
-                # Dynamic overwrite only replaces partitions PRESENT in
-                # the output: a touched partition whose rows were all
-                # deleted would survive as stale files. Detect with ONE
-                # distributed anti-join over the materialized batch and
-                # rewrite the whole table for that (rare) batch.
-                vanished = parts.join(
-                    df.select(*self.partition_by).distinct(),
-                    self.partition_by,
-                    "left_anti",
-                )
-                if vanished.isEmpty():
-                    mode = "dynamic"
-                else:
-                    untouched = self.read().join(
-                        F.broadcast(parts), self.partition_by, "left_anti"
-                    )
-                    # allowMissingColumns: when the batch that emptied a
-                    # partition ALSO carries schema drift, df has the new
-                    # column but the untouched partitions do not (found
-                    # by tools/fuzz_cdc.py); old rows null-fill, matching
-                    # merge_upsert's own B11 reconciliation.
-                    df = untouched.unionByName(
-                        df, allowMissingColumns=True
-                    ).localCheckpoint(eager=True)
-                    parts = None
-            writer = df.write.mode("overwrite")
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by).option(
-                    "partitionOverwriteMode", mode
-                )
-            self._lease.check()
-            writer.parquet(self.path)
-        self._lease.check()
-        return df if parts is None else None
+    def _touched(self, changes: DataFrame) -> set[str]:
+        """The partition paths (``k=v[/k2=v2]``) holding changed keys, as
+        Spark's writer names them (one small collect)."""
+        cat = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        default = cat.DEFAULT_PARTITION_NAME()
+        rows = changes.select(
+            *[F.col(c).cast("string") for c in self.partition_by]
+        ).distinct().collect()
+        return {
+            "/".join(
+                f"{cat.escapePathName(c)}="
+                f"{default if v in (None, '') else cat.escapePathName(v)}"
+                for c, v in zip(self.partition_by, row)
+            )
+            for row in rows
+        }
 
     def _commit(
-        self, df: DataFrame, parts: DataFrame | None = None, *, reads_table: bool = False
+        self,
+        df: DataFrame,
+        entries: list[Commit],
+        tip: _Version | None,
+        touched: set[str] | None = None,
     ) -> None:
-        """The one table commit: take the lease, widen the schema sidecar,
-        write, reset the sidecar, publish the snapshot. Without ``parts``
-        it is a table REPLACE — ``init``, the first ``upsert``,
-        ``compact_history`` and every non-partitioned upsert; with it, a
-        partition-pruned upsert of the ``parts`` partitions.
-        ``reads_table`` is passed on to ``_write``.
+        """The one table commit: write ``df`` once into a new data
+        directory, then publish one version on ``tip`` — the version the
+        merge read, with ``entries`` the listing it came from. Without
+        ``touched`` the version replaces the table (its schema is exactly
+        ``df``'s); with it, ``df`` is the new content of those partitions:
+        the others are carried by reference, a touched partition the merge
+        emptied is dropped, and the schema widens monotonically (untouched
+        partitions keep their columns; missing ones null-fill).
 
-        Two-phase schema commit: widen the sidecar to union(old, new)
-        BEFORE the write, then RESET it to exactly the written schema
-        after a full write. Both crash windows are then harmless-wide
-        (phantom columns null-fill): a crash before the write leaves the
-        old data under a wider sidecar; a crash after it leaves the new
-        data under the union. A single reset-after-write had a
-        stale-NARROW window — a crash between write and publish on a
-        WIDENING replace served the new data through the old sidecar,
-        projecting the new column out, and the next rewrite made the loss
-        permanent. The reset also retires phantom-wide columns a crashed
-        NARROWING replace left behind. A partition-pruned write cannot
-        reset (untouched partitions keep their columns, and narrowing the
-        sidecar would reopen the vanishing-column hole), so on a
-        PARTITIONED table a crashed narrowing replace leaves its dropped
-        column as a permanent all-NULL phantom: accepted, over silent
-        data loss."""
-        # Refuse up front (single-writer): a fenced writer must not even
-        # widen the sidecar.
-        self._ensure_lease()
-        self.schema_sidecar.publish(df.schema)
-        full = self._write(df, parts, reads_table=reads_table)
-        if full is not None:
-            self.schema_sidecar.publish(full.schema, reset=True)
-        # Publish what was written, never a re-read of a full write: an
-        # EMPTY partitioned write leaves a footer-less dir that read()
-        # cannot infer a schema from (found by tools/fuzz_cdc.py).
-        self._publish_snapshot(full)
+        The publish is a CAS on the name after ``tip``. If the tip moved
+        since the merge read it, the CAS is lost and this raises
+        ``ConcurrentWriterError``; the stale merge is never re-published.
+        After a won publish the writer sweeps the data directories that
+        existed when it began and that no retained version references
+        (``fsutil.recover_table_swap``)."""
+        from .fsutil import hadoop_fs
+
+        fs, hpath = hadoop_fs(self.spark, self._data)
+        try:
+            before = {st.getPath().getName() for st in fs.listStatus(hpath(self._data))}
+        except Exception:  # the table's first commit: no data dir yet
+            before = set()
+        vid = uuid.uuid4().hex
+        self._write_data(df, f"{self._data}/_v={vid}")
+        dirs = self._written_dirs(vid)
+        schema = df.schema
+        if touched is not None:
+            dirs = [d for d in tip.dirs if d.partition("/")[2] not in touched] + dirs
+            schema = _union_schema(tip.schema, schema)
+        parent = [tip.commit.name, tip.id] if tip else None
+        version = _Version(None, vid, schema, dirs, parent)
+        # A takeover that landed during the write fences this writer
+        # before anything becomes visible.
+        self._lease.check()
+        self._publish(entries, version)
+        # A retained version references the dirs it reads and its own
+        # dir, which holds its manifest under the pointer protocol.
+        kept = [version] + (self._chain(entries, tip, self._keep() - 1) if tip else [])
+        live = {d.partition("/")[0] for v in kept for d in v.dirs}
+        live |= {f"_v={v.id}" for v in kept}
+        self._sweep({n for n in before if n.startswith("_v=") and n not in live})
+
+    def _keep(self) -> int:
+        return max(2, self.keep_history)
+
+    def _publish(self, entries: list[Commit], version: _Version) -> None:
+        """Stage ``version``'s manifest beside its data and CAS-publish it
+        on ``entries`` (``fsutil.swap_table_dir``); a lost CAS raises."""
+        from . import fsutil
+
+        manifest = json.dumps(
+            {"id": version.id, "schema": version.schema.jsonValue(),
+             "dirs": version.dirs, "parent": version.parent}
+        )
+        stage = f"{self._data}/_v={version.id}/_version_{version.id}"
+        if not fsutil.swap_table_dir(self._log, entries, stage, manifest, self._keep()):
+            raise ConcurrentWriterError(
+                f"the tip of {self.path} moved past the version this commit "
+                "read (a concurrent writer published); nothing was published "
+                "— re-run the batch on the new tip"
+            )
+
+    def _sweep(self, dead: set[str]) -> None:
+        """Delete the unreferenced data dirs ``dead``
+        (``fsutil.recover_table_swap``); like ``_publish``, a step the
+        crash lane of tools/fuzz_cdc.py kills."""
+        from . import fsutil
+
+        fsutil.recover_table_swap(self.spark, self._data, dead)
 
     def _empty_snapshot(self, changes: DataFrame) -> DataFrame:
         """An empty table with the data columns of ``changes`` (CDC
@@ -932,35 +902,40 @@ class KeyedTable:
 
     def init(self, df: DataFrame) -> None:
         """Create/replace the table from a snapshot."""
-        self._commit(df)
+        self._commit(df, *self._base())
 
     def upsert(self, changes: DataFrame) -> None:
         """Apply a CDC change batch (B5/B6/B8/B11).
 
         Without partitioning: full COW rewrite. With partitioning: only the
-        partitions that contain changed keys are re-merged and rewritten
-        (dynamic partition overwrite) — the rest of the table is untouched,
-        which is the property that makes this viable at 100 TB. Like Hudi's
-        non-global index, a key's partition value is assumed immutable.
-        The first batch merges into an empty snapshot and replaces the
-        table: the merge's precombine runs BEFORE deletes drop, so a key
-        whose newest change in that batch is a delete cannot resurrect
-        through an older insert.
+        partitions that contain changed keys are read, merged and written;
+        the new version carries the rest of the table by reference — the
+        property that makes this viable at 100 TB. Like Hudi's non-global
+        index, a key's partition value is assumed immutable. A table with
+        no data yet (no version, or an emptied one) merges the batch into
+        an empty snapshot and is replaced: the merge's precombine runs
+        BEFORE deletes drop, so a key whose newest change in that batch is
+        a delete cannot resurrect through an older insert. A directory of
+        external parquet is merged into and adopted as the first version.
         """
-        parts = None
-        exists = self.exists()
-        if not exists:
-            current = self._empty_snapshot(changes)
-        else:
-            current = self.read()
+        from .fsutil import parquet_data_exists
+
+        entries, tip = self._base()
+        touched = None
+        if tip is not None and tip.dirs:
             if self.partition_by:
-                # Partition-pruned COW: merge only partitions holding
-                # changed keys. The semi-join broadcast is small (distinct
-                # partition values of the change batch).
-                parts = changes.select(*self.partition_by).distinct()
-                current = current.join(F.broadcast(parts), self.partition_by, "left_semi")
+                touched = self._touched(changes)
+                current = self._read_version(
+                    tip, [d for d in tip.dirs if d.partition("/")[2] in touched]
+                )
+            else:
+                current = self._read_version(tip)
+        elif tip is None and parquet_data_exists(self.spark, self.path):
+            current = self._read_external()
+        else:
+            current = self._empty_snapshot(changes)
         merged = merge_upsert(current, changes, self.keys, self.ordering, self.op_col)
-        self._commit(merged, parts, reads_table=exists)
+        self._commit(merged, entries, tip, touched)
 
     def compact(
         self,
@@ -977,9 +952,10 @@ class KeyedTable:
         hoodie.clustering layout-optimize strategy), giving narrow
         row-group min/max stats in BOTH dimensions at once. Bits are
         sized from the column maxima so large keys keep their locality
-        (fixed-width slices silently collapse the curve)."""
-        self._ensure_lease()
-        current = self.read()
+        (fixed-width slices silently collapse the curve). Commits one
+        version, like every write."""
+        entries, tip = self._base()
+        current = self._read_external() if tip is None else self._read_version(tip)
         n_out = target_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions")
         )
@@ -1004,14 +980,15 @@ class KeyedTable:
                 raise ValueError("cluster_by supports 1 (sort) or 2 (Z-order) columns")
         else:
             out = current.repartition(n_out)
-        self._write(out, reads_table=True)
+        self._commit(out, entries, tip)
 
     def compact_history(self, history: DataFrame) -> None:
         """Bootstrap from a full change history (B13 earliest replay):
         one global latest-wins pass instead of per-batch merges; a table
         replace like ``init``."""
         empty = self._empty_snapshot(history)
-        self._commit(merge_upsert(empty, history, self.keys, self.ordering, self.op_col))
+        merged = merge_upsert(empty, history, self.keys, self.ordering, self.op_col)
+        self._commit(merged, *self._base())
 
 
 class DeltaLogTable:
@@ -1508,8 +1485,6 @@ class DeltaLogTable:
 
     def _compact_once(self) -> None:
         """One compaction attempt — see ``compact`` for the contract."""
-        import uuid as _uuid
-
         # The fail-safe story below leans on strict scans RAISING when a
         # racing (out-of-process) compaction retires a file between this
         # listing and the stage write. spark.sql.files.ignoreMissingFiles
@@ -1564,7 +1539,7 @@ class DeltaLogTable:
         merged = self.read(_upper_batch=through, _strict=True)
         if self.compact_target_files:
             merged = merged.coalesce(self.compact_target_files)
-        stage = f"{self.path}/__stage/{_uuid.uuid4().hex}"
+        stage = f"{self.path}/__stage/{uuid.uuid4().hex}"
         try:
             merged.write.mode("overwrite").parquet(stage)
             # Schema-as-of rides inside the version commit (read_version

@@ -124,7 +124,7 @@ def test_publish_commit_dispatches_by_env(spark, tmp_path, monkeypatch):
 
 
 def test_sidecar_burned_newest_does_not_narrow(spark, tmp_path, monkeypatch):
-    """publish(reset=False) must union against the newest PARSEABLE
+    """publish must union against the newest PARSEABLE
     version — treating a burned pointer as 'no sidecar' would skip the
     union and narrow the published schema (the vanishing-column hole)."""
     from pyspark.sql import types as T
@@ -159,7 +159,7 @@ def test_keyed_table_time_travel_with_burned_snapshot_name(spark, tmp_path, monk
     t.init(df1)
     # Burn s1 (crash between claim and fill).
     fs, hpath = hadoop_fs(spark, str(tmp_path))
-    fs.createNewFile(hpath(f"{tmp_path}/t__snapshots/s000000000001.commit"))
+    fs.createNewFile(hpath(f"{tmp_path}/t/_versions/s000000000001.commit"))
     t.upsert(spark.createDataFrame([(2, "b", 2)], "id int, v string, _lsn long"))
     seqs = [s for s, _ in t.snapshots()]
     assert seqs == [0, 2]  # burned s1 skipped, allocation moved past it

@@ -90,7 +90,7 @@ def test_checkpointed_restart_survives_lease_across_processes(tmp_path):
 
 
 @pytest.mark.slow
-def test_adhoc_second_process_writer_raises_first_keeps_working(tmp_path):
+def test_adhoc_second_process_writer_raises_first_keeps_working(spark, tmp_path):
     """Two ad-hoc drivers on one table: the second process's writer raises
     ConcurrentWriterError (reported from ITS process), the first keeps
     committing, and the table equals the winner's batches."""
@@ -108,7 +108,14 @@ def test_adhoc_second_process_writer_raises_first_keeps_working(tmp_path):
 
     import duckdb
 
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
+
+    # An outside reader reads the tip version's files.
+    files = [
+        f.removeprefix("file:")
+        for f in KeyedTable(spark, table, keys=["id"]).read().inputFiles()
+    ]
     got = duckdb.sql(
-        f"SELECT id, v FROM read_parquet('{table}/*.parquet') ORDER BY id"
+        f"SELECT id, v FROM read_parquet({files!r}) ORDER BY id"
     ).fetchall()
     assert got == [(1, "a"), (2, "b")]

@@ -259,7 +259,7 @@ def test_snapshot_retention_burned_name_does_not_displace_history(
     )
     t.init(spark.createDataFrame([(1, "a", 1)], "id int, v string, _lsn long"))
     fs, hpath = hadoop_fs(spark, str(tmp_path))
-    burned = f"{tmp_path}/t__snapshots/s000000000001.commit"
+    burned = f"{tmp_path}/t/_versions/s000000000001.commit"
     fs.createNewFile(hpath(burned))
     t.upsert(spark.createDataFrame([(2, "b", 2)], "id int, v string, _lsn long"))
     # Two READABLE snapshots retained; the burned pointer name was GC'd.

@@ -29,6 +29,14 @@ from debezium_emr_hudi_deltastreamer_sample_spark.streaming.windows import (
 )
 
 
+def _read_table(spark, path):
+    """A KeyedTable's current rows (its data is visible only through
+    ``read()``)."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
+
+    return KeyedTable(spark, str(path), keys=["id"]).read()
+
+
 def envelope_record(op, after=None, before=None, lsn=0, offset=0):
     value = json.dumps(
         {
@@ -124,7 +132,7 @@ def test_upsert_pipeline_applies_cdc_across_batches(spark, tmp_path):
 
     final = {
         r.id: (r.full_name, r.salary)
-        for r in spark.read.parquet(table).collect()
+        for r in _read_table(spark, table).collect()
     }
     # Dict replay: 1 updated, 2 deleted, 3 untouched, 4 inserted.
     assert final == {1: ("a2", 11), 3: ("c", 30), 4: ("d", 40)}
@@ -150,10 +158,10 @@ def test_upsert_pipeline_restart_resumes_from_checkpoint(spark, tmp_path):
         run_until_drained(q)
 
     run_once()
-    assert spark.read.parquet(table).count() == 3
+    assert _read_table(spark, table).count() == 3
     (src / "batch_1.json").write_text("\n".join(json.dumps(r) for r in BATCH2))
     run_once()
-    final = {r.id: r.full_name for r in spark.read.parquet(table).collect()}
+    final = {r.id: r.full_name for r in _read_table(spark, table).collect()}
     assert final == {1: "a2", 3: "c", 4: "d"}
 
 
@@ -441,8 +449,8 @@ def test_multi_table_topic_routing(spark, tmp_path):
     )
     run_until_drained(q)
 
-    emps = spark.read.parquet(str(tmp_path / "t_emp")).collect()
-    depts = spark.read.parquet(str(tmp_path / "t_dept")).collect()
+    emps = _read_table(spark, str(tmp_path / "t_emp")).collect()
+    depts = _read_table(spark, str(tmp_path / "t_dept")).collect()
     assert [(r.id, r.full_name) for r in emps] == [(1, "a")]
     assert [(r.id, r.dept_name) for r in depts] == [(7, "IT")]
 
@@ -703,7 +711,7 @@ def test_snapshot_timeline_heals_nested_crash_garbage(spark, tmp_path):
     snaps = t.snapshots()
     assert snaps
     # Resolve through the protocol: under the pointer protocol the commit
-    # content lives in __stage, not under the commit name.
+    # content lives beside the version's data, not under the commit name.
     import pathlib
 
     commit_dir = pathlib.Path(snaps[-1][1].removeprefix("file:"))
@@ -712,7 +720,7 @@ def test_snapshot_timeline_heals_nested_crash_garbage(spark, tmp_path):
     (garbage / "part-00000.parquet").write_bytes(b"junk")
     snaps2 = t.snapshots()  # the listing heals
     assert not garbage.exists()
-    assert [r.id for r in spark.read.parquet(snaps2[-1][1]).collect()] == [1]
+    assert [r.id for r in t.read(as_of=snaps2[-1][0]).collect()] == [1]
 
 
 def test_rollup_new_run_not_skipped(spark, tmp_path):
@@ -1186,20 +1194,20 @@ def test_scd2_fold_replay_idempotent(spark, tmp_path):
     path = str(tmp_path / "scd2")
     proc = scd2_batch_processor(path)
     proc(b1, 0)
-    after_b1 = sorted(map(tuple, spark.read.parquet(path).collect()))
+    after_b1 = sorted(map(tuple, _read_table(spark, path).collect()))
     proc(b1, 0)  # full replay of batch 1 — must be a no-op
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == after_b1
+    assert sorted(map(tuple, _read_table(spark, path).collect())) == after_b1
 
     proc(b2, 1)
-    after_b2 = sorted(map(tuple, spark.read.parquet(path).collect()))
+    after_b2 = sorted(map(tuple, _read_table(spark, path).collect()))
     proc(b2, 1)  # replay of batch 2 — no-op again
-    got = sorted(map(tuple, spark.read.parquet(path).collect()))
+    got = sorted(map(tuple, _read_table(spark, path).collect()))
     assert got == after_b2
 
     # Version stream: user 1 view→click→buy (click at id 3 not re-opened
     # by the id-5 click within b2 — suppressed as a no-op), user 2
     # view→click.
-    rows = spark.read.parquet(path).orderBy("user_id", "valid_from").collect()
+    rows = _read_table(spark, path).orderBy("user_id", "valid_from").collect()
     u1 = [(r.event_type, r.is_current) for r in rows if r.user_id == 1]
     u2 = [(r.event_type, r.is_current) for r in rows if r.user_id == 2]
     assert u1 == [("view", False), ("click", False), ("buy", True)]
@@ -1213,7 +1221,7 @@ def test_scd2_fold_replay_idempotent(spark, tmp_path):
     proc(b3, 2)
     u3 = [
         (r.event_type, r.is_current)
-        for r in spark.read.parquet(path).orderBy("valid_from").collect()
+        for r in _read_table(spark, path).orderBy("valid_from").collect()
         if r.user_id == 3
     ]
     assert u3 == [("view", False), ("buy", True)]
@@ -1269,10 +1277,10 @@ def test_scd2_stream_restart_resumes_from_checkpoint(spark, tmp_path):
         run_until_drained(q)
 
     run_once()
-    assert spark.read.parquet(table).count() == 3  # view, click, view
+    assert _read_table(spark, table).count() == 3  # view, click, view
     (src / "b1.json").write_text("\n".join(_json.dumps(r) for r in b2))
     run_once()
-    rows = spark.read.parquet(table).collect()
+    rows = _read_table(spark, table).collect()
     versions = sorted(
         (r.user_id, r.event_type, r.is_current) for r in rows
     )
@@ -1372,7 +1380,7 @@ def test_scd2_null_attr_versions(spark, tmp_path):
         ),
         1,
     )
-    rows = spark.read.parquet(path).collect()
+    rows = _read_table(spark, path).collect()
     by_key = {}
     for r in rows:
         by_key.setdefault(r.user_id, []).append(r)

@@ -48,13 +48,17 @@ def test_partitioned_cow_rewrites_only_touched_partition(spark, tmp_path):
             [(1, "eu", 10), (2, "us", 20), (3, "ap", 30)], "id int, region string, v int"
         )
     )
-    eu_files_before = set(os.listdir(tmp_path / "t" / "region=eu"))
-    ap_files_before = set(os.listdir(tmp_path / "t" / "region=ap"))
+    def files(part):
+        return {f for f in t.read().inputFiles() if f"/{part}/" in f}
+
+    eu_files_before = files("region=eu")
+    ap_files_before = files("region=ap")
     t.upsert(spark.createDataFrame([(1, "eu", 11, "u", 5)], CH_SCHEMA))
     assert state(t) == {1: ("eu", 11), 2: ("us", 20), 3: ("ap", 30)}
-    # eu rewritten, ap untouched (the COW file-group property).
-    assert set(os.listdir(tmp_path / "t" / "region=eu")) != eu_files_before
-    assert set(os.listdir(tmp_path / "t" / "region=ap")) == ap_files_before
+    # eu rewritten, ap untouched (the COW file-group property): the new
+    # version reads ap's files by reference.
+    assert files("region=eu") and files("region=eu") != eu_files_before
+    assert files("region=ap") == ap_files_before
 
 
 def test_delete_whole_partition_not_stale(spark, tmp_path):
@@ -136,11 +140,11 @@ def test_compact_history_publishes_snapshot(spark, tmp_path, partition_by):
 
 @pytest.mark.parametrize("keep_history", [0, 2])
 def test_in_place_write_materializes_only_when_needed(spark, tmp_path, monkeypatch, keep_history):
-    """An in-place (partitioned) write checkpoints its input only when
-    that input reads the table's own files (an upsert into the stored
-    snapshot, a compaction) or a snapshot publish re-executes it
-    (keep_history). A replace from new content without history — init,
-    the first upsert, compact_history — writes straight from the plan."""
+    """No commit materializes its input: every write lands in a new data
+    directory, so a merge may read the files of the version it replaces,
+    and time travel reads older versions instead of re-executing the
+    plan. Replaces, upserts and compactions all write straight from the
+    plan, with or without history."""
     df_class = type(spark.range(1))
     calls = []
     real = df_class.localCheckpoint
@@ -161,15 +165,14 @@ def test_in_place_write_materializes_only_when_needed(spark, tmp_path, monkeypat
         step()
         return len(calls)
 
-    replace = 1 if keep_history else 0
     boot = spark.createDataFrame([(1, "eu", 10, "c", 1)], CH_SCHEMA)
-    assert checkpoints(lambda: t.upsert(boot)) == replace
-    assert checkpoints(lambda: t.init(spark.createDataFrame([(2, "us", 20)], rows))) == replace
+    assert checkpoints(lambda: t.upsert(boot)) == 0
+    assert checkpoints(lambda: t.init(spark.createDataFrame([(2, "us", 20)], rows))) == 0
     hist = spark.createDataFrame([(3, "eu", 30, "c", 1)], CH_SCHEMA)
-    assert checkpoints(lambda: t.compact_history(hist)) == replace
+    assert checkpoints(lambda: t.compact_history(hist)) == 0
     change = spark.createDataFrame([(3, "eu", 31, "u", 2)], CH_SCHEMA)
-    assert checkpoints(lambda: t.upsert(change)) == 1
-    assert checkpoints(lambda: t.compact(target_partitions=1)) == 1
+    assert checkpoints(lambda: t.upsert(change)) == 0
+    assert checkpoints(lambda: t.compact(target_partitions=1)) == 0
     assert state(t) == {3: ("eu", 31)}
 
 
@@ -230,14 +233,10 @@ def test_compact_reduces_files_preserves_state(spark, tmp_path):
             [(i, "eu", i * 10) for i in range(8)], "id int, region string, v int"
         ).repartition(4)
     )
-    before_files = [
-        f for f in os.listdir(tmp_path / "t") if f.endswith(".parquet")
-    ]
+    before_files = t.read().inputFiles()
     before_state = state(t)
     t.compact(target_partitions=1)
-    after_files = [
-        f for f in os.listdir(tmp_path / "t") if f.endswith(".parquet")
-    ]
+    after_files = t.read().inputFiles()
     assert state(t) == before_state
     assert len(after_files) < len(before_files)
     assert len(after_files) == 1
@@ -781,15 +780,13 @@ def test_compact_with_zorder_clustering(spark, tmp_path):
         "id", f"cast(id % {side} as long) AS x", f"cast(id div {side} as long) AS y"
     )
     t = KeyedTable(spark, path, keys=["id"], op_col=None)
-    df.write.mode("overwrite").parquet(path)
+    df.write.mode("overwrite").parquet(path)  # adopted by the first commit
 
-    def spread(p):
+    def spread():
         # mean per-file bounding-box area over both cluster dims
         areas = []
-        for f in os.listdir(p):
-            if not f.endswith(".parquet"):
-                continue
-            part = spark.read.parquet(os.path.join(p, f))
+        for f in t.read().inputFiles():
+            part = spark.read.parquet(f)
             r = part.selectExpr(
                 "max(x) - min(x) AS dx", "max(y) - min(y) AS dy"
             ).first()
@@ -797,10 +794,10 @@ def test_compact_with_zorder_clustering(spark, tmp_path):
         return sum(areas) / len(areas)
 
     t.compact(target_partitions=16)          # unclustered baseline
-    base = spread(path)
+    base = spread()
     t.compact(target_partitions=16, cluster_by=["x", "y"])
-    clustered = spread(path)
-    assert spark.read.parquet(path).count() == n  # content invariant
+    clustered = spread()
+    assert t.read().count() == n  # content invariant
     assert clustered < base / 2  # Z-order tightens per-file 2-D footprints
 
     import pytest as _pytest
@@ -859,7 +856,7 @@ def test_zorder_key_int_columns_and_empty_table(spark, tmp_path):
     spark.createDataFrame([], "id long, x long, y long").write.parquet(path)
     t = KeyedTable(spark, path, keys=["id"], op_col=None)
     t.compact(target_partitions=2, cluster_by=["x", "y"])  # must not raise
-    assert spark.read.parquet(path).count() == 0
+    assert t.read().count() == 0
 
 
 # -- IncrementalJoinView (streaming/ivm.py) ---------------------------------
@@ -1035,9 +1032,10 @@ def test_ivm_partitioned_view_retracts_across_partitions(spark, tmp_path):
 
 def test_ivm_partitioned_view_reads_itself_only_to_retract(spark, tmp_path):
     """A partitioned view fetches stale rows (for their partition values)
-    only on a batch that retracts: an update batch reads the view once,
-    for the merge; a batch that deletes a fact (leaving its partition
-    non-empty) reads it once more."""
+    only on a batch that retracts: an update batch never calls
+    ``view.read()`` (the view merge reads its base version's touched
+    partitions itself); a batch that deletes a fact (leaving its
+    partition non-empty) reads it once."""
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.ivm import IncrementalJoinView
 
     v = IncrementalJoinView(
@@ -1064,10 +1062,9 @@ def test_ivm_partitioned_view_reads_itself_only_to_retract(spark, tmp_path):
 
     v.view.read = counting_read
     v.apply_fact_batch(spark.createDataFrame([(10, 2, "eu", 150, "u", 2)], fact_schema))
-    assert len(reads) == 1
-    del reads[:]
+    assert len(reads) == 0
     v.apply_fact_batch(spark.createDataFrame([(11, 2, "us", None, "d", 3)], fact_schema))
-    assert len(reads) == 2
+    assert len(reads) == 1
     v.view.read = real_read
     assert {(r.fid, r.region, r.amount, r.name) for r in v.read().collect()} == {
         (10, "eu", 150, "b"), (12, "us", 300, "a")
@@ -1582,14 +1579,12 @@ def test_schema_sidecar_closes_drift_partitioned_loss(spark, tmp_path):
 
 
 def test_schema_sidecar_replace_has_no_narrow_crash_window(spark, tmp_path):
-    """Round-9 review finding: a table REPLACE (init / re-bootstrap /
-    compact_history) must commit the schema in TWO phases — widen to
-    union(old, new) BEFORE the data write, reset to exactly-new after —
-    so a crash between write and publish on a WIDENING replace cannot
-    serve the new data through the stale-narrow sidecar (which would
-    project the new column out, and the next rewrite would drop it
-    permanently). Simulated by failing the write itself: at that point
-    the sidecar must ALREADY carry the union."""
+    """A table REPLACE (init / re-bootstrap / compact_history) commits its
+    schema atomically with its data: the version carries both. A crash
+    during a WIDENING replace's write leaves the previous version — its
+    data and its narrow schema — served unchanged, with no phantom
+    column; the completed replace serves the new column; a NARROWING
+    replace resets the schema exactly."""
     import pytest
 
     from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
@@ -1597,38 +1592,34 @@ def test_schema_sidecar_replace_has_no_narrow_crash_window(spark, tmp_path):
     path = str(tmp_path / "t")
     t = KeyedTable(spark, path, keys=["id"], ordering=["_lsn"], op_col="op")
     t.init(spark.createDataFrame([(1, "a")], "id int, name string"))
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name"]
+    assert t.read().columns == ["id", "name"]
 
     wide = spark.createDataFrame([(1, "a2", 7)], "id int, name string, bonus int")
-    real_write = t._write
 
     def failing_write(*args, **kwargs):
         raise RuntimeError("injected crash during the replace write")
 
-    t._write = failing_write
+    t._write_data = failing_write
     with pytest.raises(RuntimeError, match="injected crash"):
         t.init(wide)
-    # Crash window state: old data on disk, sidecar already WIDENED —
-    # wide-over-narrow is harmless (phantom column null-fills) ...
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name", "bonus"]
-    assert {r["id"]: r["bonus"] for r in t.read().collect()} == {1: None}
-    # ... and had the crash landed AFTER the write instead, the same
-    # widened sidecar serves the new data with its new column intact.
-    t._write = real_write
+    # Crash window state: the old version, exactly.
+    assert t.read().columns == ["id", "name"]
+    assert {r["id"]: r["name"] for r in t.read().collect()} == {1: "a"}
+    # The redelivered replace serves the new data with its new column.
+    del t._write_data
     t.init(wide)
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name", "bonus"]
+    assert t.read().columns == ["id", "name", "bonus"]
     assert {r["bonus"] for r in t.read().collect()} == {7}
-    # Completed replace in the NARROWING direction still resets exactly.
+    # Completed replace in the NARROWING direction resets exactly.
     t.init(spark.createDataFrame([(1, "z")], "id int, name string"))
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name"]
+    assert t.read().columns == ["id", "name"]
 
 
 def test_schema_sidecar_reset_and_fallback(spark, tmp_path):
-    """Sidecar lifecycle: init RESETS the persisted schema (table
-    replace); a table whose sidecar is gone still reads (its footers are
-    merged); publish is monotone-union for upserts."""
-    import shutil
-
+    """Version-schema lifecycle: init RESETS the schema (table replace);
+    an upsert widens it monotonically; a directory of external parquet
+    with no version reads by merging its footers, and its first commit
+    adopts it with the merged schema."""
     from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
 
     path = str(tmp_path / "t")
@@ -1639,10 +1630,10 @@ def test_schema_sidecar_reset_and_fallback(spark, tmp_path):
             "id int, name string, bonus int, op string, _lsn long",
         )
     )
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name", "bonus"]
-    # init = replace: the sidecar resets to exactly the new schema.
+    assert t.read().columns == ["id", "name", "bonus"]
+    # init = replace: the schema resets to exactly the new one.
     t.init(spark.createDataFrame([(1, "x")], "id int, name string"))
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name"]
+    assert t.read().columns == ["id", "name"]
     # Upsert widens monotonically (union keeps existing order, appends).
     t.upsert(
         spark.createDataFrame(
@@ -1650,11 +1641,22 @@ def test_schema_sidecar_reset_and_fallback(spark, tmp_path):
             "id int, name string, extra int, op string, _lsn long",
         )
     )
-    assert t.schema_sidecar.current().fieldNames() == ["id", "name", "extra"]
-    # A table whose sidecar is gone reads by merging its footers.
-    shutil.rmtree(f"{path}__schema")
-    assert t.schema_sidecar.current() is None
-    assert {r["id"] for r in t.read().collect()} == {1, 2}
+    assert t.read().columns == ["id", "name", "extra"]
+    # External parquet (no version): its footers are merged on read.
+    ext = str(tmp_path / "ext")
+    spark.createDataFrame([(1, "x")], "id int, name string").write.parquet(ext)
+    spark.createDataFrame([(2, "y", 3)], "id int, name string, extra int").write.mode(
+        "append"
+    ).parquet(ext)
+    e = KeyedTable(spark, ext, keys=["id"], ordering=["_lsn"], op_col="op")
+    assert {r["id"]: r["extra"] for r in e.read().collect()} == {1: None, 2: 3}
+    e.upsert(
+        spark.createDataFrame(
+            [(3, "z", 4, "c", 1)],
+            "id int, name string, extra int, op string, _lsn long",
+        )
+    )
+    assert {r["id"]: r["extra"] for r in e.read().collect()} == {1: None, 2: 3, 3: 4}
 
 
 def test_external_parquet_dir_reads_every_footer(spark, tmp_path):
@@ -1681,7 +1683,6 @@ def test_external_parquet_dir_reads_every_footer(spark, tmp_path):
         str(path / "part-00001-b.parquet"),
     )
     t = KeyedTable(spark, str(path), keys=["id"])
-    assert t.schema_sidecar.current() is None
     df = t.read()
     assert set(df.columns) == {"id", "name", "bonus"}
     got = {r["id"]: (r["name"], r["bonus"]) for r in df.collect()}

@@ -1,35 +1,32 @@
-"""Stage-and-swap COW publish (round-13 optimization): deterministic
-crash-window coverage for ``fsutil.swap_table_dir`` / ``recover_table_swap``
-and the hard-linked snapshot timeline it enables.
+"""Crash windows of a KeyedTable commit, deterministic and thread-free.
 
-The swap replaces checkpoint + in-place overwrite (two full-table
-materializations per upsert) with ONE staged write and two atomic renames.
-Every crash window between the journal write and the final cleanup is
-injected here through the ``_test_after_*`` seams and must heal — roll
-FORWARD when the staged table is complete, roll BACK when only the retired
-copy survives — with the final state after at-least-once redelivery equal
-to the no-crash replay (the same invariant tools/fuzz_cdc.py's crash lane
-checks at whole-call granularity)."""
+A commit writes its data once into a new directory
+(``{path}/_data/_v=<id>``), stages its version manifest, publishes the
+version with one CAS (``fsutil.swap_table_dir``, a name kept from the
+stage-and-swap layout this replaced) and then sweeps the data
+directories no retained version references (``fsutil.recover_table_swap``).
+Kills are injected at each step, under both commit protocols: the
+served table is always one whole version, and at-least-once redelivery
+converges on the no-crash state (the invariant tools/fuzz_cdc.py's
+crash lane checks at whole-call granularity)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from debezium_emr_hudi_deltastreamer_sample_spark import fsutil
-from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
-    recover_table_swap,
-    swap_table_dir,
-    table_swap_journal,
+from debezium_emr_hudi_deltastreamer_sample_spark.table import (
+    ConcurrentWriterError,
+    KeyedTable,
 )
-from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
+
+PROTOCOLS = ["rename", "pointer"]
 
 
 class _Kill(RuntimeError):
-    """Simulated process death inside the swap."""
+    """Simulated process death inside the commit."""
 
 
 def _table(spark, path, **kw):
@@ -46,197 +43,206 @@ def _state(t):
     return sorted((r.id, r.v) for r in t.read().select("id", "v").collect())
 
 
-def _swap_killed_at(monkeypatch, seam: str):
-    """Route KeyedTable._write's swap through a seam that dies at ``seam``,
-    leaving the torn on-disk state a real kill would."""
-
-    def boom():
-        raise _Kill(seam)
-
-    real = fsutil.swap_table_dir
-
-    def wrapper(spark, path, stage, **kw):
-        return real(spark, path, stage, **{seam: boom})
-
-    monkeypatch.setattr(fsutil, "swap_table_dir", wrapper)
+def _data_dirs(path):
+    data = f"{path}/_data"
+    return set(os.listdir(data)) if os.path.isdir(data) else set()
 
 
+def _kill_in(monkeypatch, name, after=False):
+    """Make ``fsutil.<name>`` die, before its work or after it."""
+    real = getattr(fsutil, name)
+
+    def boom(*args, **kwargs):
+        if after:
+            real(*args, **kwargs)
+        raise _Kill(name)
+
+    monkeypatch.setattr(fsutil, name, boom)
+
+
+def _kill_before_cas(monkeypatch):
+    """Die inside the publish after the manifest is staged, before the
+    CAS: the version log never sees the commit."""
+    real_publish = fsutil.CommitLog.publish
+
+    def boom(self, *args, **kwargs):
+        if self.dir.endswith("/_versions"):
+            raise _Kill("before the CAS")
+        return real_publish(self, *args, **kwargs)
+
+    monkeypatch.setattr(fsutil.CommitLog, "publish", boom)
+
+
+B1 = [(1, "a", 1, "u"), (2, "b", 2, "u")]
+B2 = [(2, "B", 3, "u"), (3, "c", 4, "u")]
+AFTER_B2 = [(1, "a"), (2, "B"), (3, "c")]
+
+#: The three kill points, under the ids of the swap windows they replace:
+#: after the data write (the old journal point: the new data is complete
+#: and nothing is visible), after the manifest is staged and before the
+#: CAS (the old point between the two renames), and after the publish
+#: and before the sweep (the old point before the swap's cleanup).
 SEAMS = ["_test_after_journal", "_test_after_retire", "_test_after_publish"]
 
 
 @pytest.mark.parametrize("seam", SEAMS)
-def test_swap_crash_heals_and_redelivery_converges(
-    spark, tmp_path, monkeypatch, seam
-):
-    path = tmp_path / "t"
-    t = _table(spark, path)
-    t.upsert(_batch(spark, [(1, "a", 1, "u"), (2, "b", 2, "u")]))
-    before = _state(t)
-
-    b2 = _batch(spark, [(2, "B", 3, "u"), (3, "c", 4, "u")])
-    _swap_killed_at(monkeypatch, seam)
-    with pytest.raises(_Kill):
-        t.upsert(b2)
-    monkeypatch.undo()
-
-    # A fresh process (new KeyedTable) reads the torn state READ-ONLY:
-    # after-journal serves the OLD table, after-retire the complete stage,
-    # after-publish the new table — in every case the table is readable,
-    # and the journal is left for the writer. Redelivery (the writer)
-    # heals it and converges on the no-crash state.
-    t2 = _table(spark, path)
-    assert t2.exists()
-    healed = _state(t2)
-    assert healed in (before, [(1, "a"), (2, "B"), (3, "c")])
-    assert os.path.exists(table_swap_journal(str(path)))
-    t2.upsert(b2)  # at-least-once redelivery
-    assert not os.path.exists(table_swap_journal(str(path)))
-    assert _state(t2) == [(1, "a"), (2, "B"), (3, "c")]
-    # No retired copies or orphan stages leak past recovery + next publish.
-    retire = f"{path}__retire"
-    assert not os.path.exists(retire) or os.listdir(retire) == []
-
-
-def test_swap_crash_between_renames_rolls_forward(spark, tmp_path, monkeypatch):
-    """The wipe-hazard window: table dir MISSING, staged table complete.
-    exists() must come back True (roll-forward), never route the next
-    upsert to bootstrap-overwrite."""
-    path = tmp_path / "t"
-    t = _table(spark, path)
-    t.upsert(_batch(spark, [(1, "a", 1, "u")]))
-    _swap_killed_at(monkeypatch, "_test_after_retire")
-    with pytest.raises(_Kill):
-        t.upsert(_batch(spark, [(2, "b", 2, "u")]))
-    monkeypatch.undo()
-    assert not os.path.exists(path)  # genuinely torn
-    t2 = _table(spark, path)
-    assert t2.exists() is True
-    assert _state(t2) == [(1, "a"), (2, "b")]
+def test_swap_crash_heals_and_redelivery_converges(spark, tmp_path, seam):
+    """Under both protocols: a kill before the publish serves the old
+    version and leaves one orphan data dir, which the redelivered commit's
+    sweep deletes; a kill after the publish serves the new version, and
+    the next commit sweeps what the killed one left. No retired copy or
+    journal exists to heal, and readers repair nothing."""
+    for protocol in PROTOCOLS:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+            path = tmp_path / protocol
+            t = _table(spark, path)
+            t.upsert(_batch(spark, B1))
+            before, before_dirs = _state(t), _data_dirs(path)
+            with pytest.MonkeyPatch.context() as kill:
+                if seam == "_test_after_journal":
+                    _kill_in(kill, "swap_table_dir")
+                elif seam == "_test_after_retire":
+                    _kill_before_cas(kill)
+                else:
+                    _kill_in(kill, "recover_table_swap")
+                with pytest.raises(_Kill):
+                    t.upsert(_batch(spark, B2))
+            t2 = _table(spark, path)  # a fresh process
+            assert t2.exists()
+            left = _data_dirs(path) - before_dirs
+            assert len(left) == 1
+            if seam == "_test_after_publish":
+                assert _state(t2) == AFTER_B2
+                t2.upsert(_batch(spark, [(4, "d", 5, "u")]))
+                assert _state(t2) == AFTER_B2 + [(4, "d")]
+                # Retention keeps two versions: the killed commit's and the
+                # new one; the sweep removed the first version's data.
+                assert len(_data_dirs(path)) == 2 and left <= _data_dirs(path)
+            else:
+                assert _state(t2) == before
+                t2.upsert(_batch(spark, B2))  # at-least-once redelivery
+                assert _state(t2) == AFTER_B2
+                assert not left & _data_dirs(path)  # the orphan was swept
+                assert len(_data_dirs(path)) == 2
 
 
-@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+@pytest.mark.parametrize("protocol", PROTOCOLS)
 def test_reader_between_swap_renames_never_mutates(
     spark, tmp_path, monkeypatch, protocol
 ):
-    """Readers never mutate table state: a reader that runs between a
-    healthy swap's two renames (table dir retired, stage complete,
-    journal present) reads the staged table and leaves the writer's
-    stage and journal alone. The writer's publish then completes with no
-    nested dir and exactly the staged rows. The swap is driven directly
-    so the pointer protocol (whose tables never swap) still proves its
-    readers resolve a torn swap without repairing it."""
+    """Readers never mutate table state: a reader that runs while a
+    commit is in flight (its data written, its version not yet
+    published) reads the previous version, and every data directory —
+    the writer's new one included — is left alone. The commit then
+    publishes exactly its rows."""
     monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
     path = str(tmp_path / "t")
-    t = _table(spark, path)
-    t.init(spark.createDataFrame([(1, "a")], "id int, v string"))
-    stage = f"{path}__stage/feedface"
-    spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string").write.parquet(
-        stage
-    )
-    journal = table_swap_journal(path)
     seen = {}
 
-    def reader():
-        r = _table(spark, path)
-        seen["exists"] = r.exists()
-        seen["rows"] = _state(r)
-        seen["stage"] = os.path.isdir(stage)
-        seen["journal"] = os.path.exists(journal)
-        seen["table"] = os.path.exists(path)
+    class Watched(KeyedTable):
+        def _write_data(self, df, data_dir):
+            super()._write_data(df, data_dir)
+            if not os.path.isdir(f"{path}/_versions"):
+                return  # the first commit: nothing to read yet
+            dirs = _data_dirs(path)
+            r = _table(spark, path, keep_history=5)
+            seen["exists"] = r.exists()
+            seen["rows"] = _state(r)
+            seen["snapshots"] = [s for s, _ in r.snapshots()]
+            seen["untouched"] = _data_dirs(path) == dirs
 
-    swap_table_dir(spark, path, stage, _test_after_retire=reader)
+    t = Watched(spark, path, keys=["id"], ordering=["_lsn"], op_col="op")
+    t.init(spark.createDataFrame([(1, "a")], "id int, v string"))
+    t.upsert(_batch(spark, [(2, "b", 1, "u")]))
     assert seen == {
-        "exists": True, "rows": [(1, "a"), (2, "b")], "stage": True,
-        "journal": True, "table": False,
+        "exists": True, "rows": [(1, "a")], "snapshots": [0], "untouched": True,
     }
-    assert not os.path.exists(journal)
-    assert not [d for d in os.listdir(path) if os.path.isdir(f"{path}/{d}")]
     assert _state(_table(spark, path)) == [(1, "a"), (2, "b")]
 
 
-def test_recover_rolls_back_when_only_retire_survives(spark, tmp_path):
-    """Pathological shape (stage lost after the retire rename): recovery
-    must restore the retired copy rather than leave no table."""
-    path = str(tmp_path / "t")
-    spark.range(3).selectExpr("id", "'x' v").write.parquet(path)
-    retire = f"{path}__retire/deadbeef"
-    os.makedirs(f"{path}__retire")
-    os.rename(path, retire)
-    with open(table_swap_journal(path), "w") as fh:
-        json.dump({"stage": f"{path}__stage/gone", "retire": retire}, fh)
-    recover_table_swap(spark, path)
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == [0, 1, 2]
-    assert not os.path.exists(table_swap_journal(path))
-
-
-def test_recover_unparseable_journal(spark, tmp_path):
-    """Half-written journal (crash mid-journal-write): no rename ever
-    happened — the table is intact and the journal is dropped. With the
-    table MISSING too, recovery refuses to guess."""
-    path = str(tmp_path / "t")
-    spark.range(2).write.parquet(path)
-    with open(table_swap_journal(path), "w") as fh:
-        fh.write('{"stage": "/tru')  # torn
-    recover_table_swap(spark, path)
-    assert not os.path.exists(table_swap_journal(path))
-    assert spark.read.parquet(path).count() == 2
-
-    gone = str(tmp_path / "gone")
-    with open(table_swap_journal(gone), "w") as fh:
-        fh.write("garbage")
-    with pytest.raises(RuntimeError, match="torn table swap"):
-        recover_table_swap(spark, gone)
-
-
 def test_swap_refuses_externally_recreated_target(spark, tmp_path):
-    """A writer outside the lease recreating the table dir (non-empty)
-    mid-swap must abort the publish loudly — LocalFileSystem would
-    otherwise nest the stage INSIDE the recreated dir and serve a
-    half-table. (An EMPTY recreated dir is replaced by POSIX rename(2) —
-    the swap wins cleanly; only the non-empty case is a conflict.)"""
+    """A publish whose base version is stale raises and leaves the tip
+    unchanged: here another commit lands on the table between this
+    commit's merge (which read version 0) and its publish, claiming the
+    name this publish targets. The stale merge is never published, and
+    no later version references its data dir (a commit that began after
+    that dir was written sweeps it)."""
     path = str(tmp_path / "t")
-    spark.range(2).write.parquet(path)
-    stage = f"{path}__stage/abc123"
-    spark.range(5).write.parquet(stage)
+    _table(spark, path).upsert(_batch(spark, B1))
+    fired = []
 
-    def recreate():
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "intruder.parquet"), "w") as fh:
-            fh.write("x")
+    class Raced(KeyedTable):
+        def _write_data(self, df, data_dir):
+            super()._write_data(df, data_dir)
+            if not fired:
+                fired.append(data_dir)
+                _table(spark, path).upsert(_batch(spark, [(1, "A", 9, "u")]))
 
-    with pytest.raises(RuntimeError, match="outside the lease") as err:
-        swap_table_dir(spark, path, stage, _test_after_retire=recreate)
-    # The recreated dir must not contain the nested stage.
-    assert not os.path.exists(f"{path}/abc123")
-    # The journal is gone, so the error is the only pointer to the retired
-    # pre-swap table — which must still exist and hold the pre-swap rows.
-    retire = str(err.value).rsplit("kept at ", 1)[1]
-    assert retire.startswith(f"{path}__retire/") and os.path.isdir(retire)
-    assert sorted(r.id for r in spark.read.parquet(retire).collect()) == [0, 1]
+    stale = Raced(spark, path, keys=["id"], ordering=["_lsn"], op_col="op")
+    with pytest.raises(ConcurrentWriterError, match="moved past the version"):
+        stale.upsert(_batch(spark, B2))
+    t = _table(spark, path, keep_history=5)
+    assert _state(t) == [(1, "A"), (2, "b")]
+    assert [s for s, _ in t.snapshots()] == [0, 1]
+    orphan = fired[0].rsplit("/", 1)[1]
+    t.upsert(_batch(spark, B2))  # redelivery on the new tip
+    assert _state(t) == [(1, "A"), (2, "B"), (3, "c")]
+    assert orphan not in _data_dirs(path)
+
+
+@pytest.mark.parametrize("protocol", PROTOCOLS)
+def test_snapshots_skip_an_entry_off_the_tip_chain(spark, tmp_path, monkeypatch, protocol):
+    """Time travel follows the parent chain. A stale publish whose name
+    was free (retention removed a never-published claim) wins the CAS
+    below the tip; ``CommitLog`` reports it lost but keeps it inside its
+    ``keep`` window. It is not on the tip's chain, so ``snapshots()``
+    skips it and ``read(as_of=…)`` refuses it."""
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    path = str(tmp_path / "t")
+    t = _table(spark, path, keep_history=5)
+    t.upsert(_batch(spark, B1))  # version 0
+    fs, hpath = fsutil.hadoop_fs(spark, path)
+    fs.createNewFile(hpath(f"{path}/_versions/s000000000001.commit"))  # burned
+    t.upsert(_batch(spark, B2))  # version 2, parent 0; retention drops s1
+    v0 = t._log.entries()[0]
+    orphan = {
+        "id": "feedface", "schema": t.read().schema.jsonValue(),
+        "dirs": t._tip()[1].dirs, "parent": [v0.name, t._version(v0).id],
+    }
+    import json
+
+    stage = f"{path}/_data/_v=feedface/_version_feedface"
+    assert not fsutil.swap_table_dir(t._log, [v0], stage, json.dumps(orphan), 5)
+    assert [c.seq for c in t._log.entries() if c.uri] == [0, 1, 2]
+    assert [s for s, _ in t.snapshots()] == [0, 2]
+    with pytest.raises(FileNotFoundError):
+        t.read(as_of=1)
+    assert sorted((r.id, r.v) for r in t.read(as_of=2).collect()) == AFTER_B2
 
 
 def test_linked_snapshots_survive_rewrites_and_retention(spark, tmp_path):
-    """keep_history snapshots are hard links to the table's immutable
-    files: later upserts retire/unlink the table dir, compaction rewrites
-    it, retention drops old commits — every surviving as-of read must
-    still serve exactly its commit's rows."""
+    """Time travel across rewrites: every upsert and the compaction
+    publish a version, retention keeps the newest ``keep_history``, and
+    each surviving as-of read serves exactly its commit's rows (the files
+    of older versions are never rewritten)."""
     path = tmp_path / "t"
     t = _table(spark, path, keep_history=2)
     t.upsert(_batch(spark, [(1, "a", 1, "u"), (2, "b", 2, "u")]))
     t.upsert(_batch(spark, [(2, "B", 3, "u")]))
     t.upsert(_batch(spark, [(1, None, 4, "d"), (3, "c", 5, "u")]))
-    t.compact(target_partitions=1)
-    assert [s for s, _ in t.snapshots()] == [1, 2]  # retention dropped s0
-    as_of_1 = sorted(
-        (r.id, r.v) for r in t.read(as_of=1).select("id", "v").collect()
-    )
-    assert as_of_1 == [(1, "a"), (2, "B")]
     as_of_2 = sorted(
         (r.id, r.v) for r in t.read(as_of=2).select("id", "v").collect()
     )
+    t.compact(target_partitions=1)
+    assert [s for s, _ in t.snapshots()] == [2, 3]  # retention dropped 0, 1
     assert as_of_2 == [(2, "B"), (3, "c")]
+    for seq in (2, 3):
+        assert sorted(
+            (r.id, r.v) for r in t.read(as_of=seq).select("id", "v").collect()
+        ) == as_of_2
     with pytest.raises(FileNotFoundError):
-        t.read(as_of=0)
+        t.read(as_of=1)
 
 
 def test_parquet_data_exists_external_suffixless_files(spark, tmp_path):

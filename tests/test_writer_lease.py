@@ -84,24 +84,24 @@ def test_mor_append_guarded_compact_is_not(spark, tmp_path):
 
 def test_post_write_check_detects_mid_commit_takeover(spark, tmp_path):
     """A takeover landing while the old writer's commit is in flight: the
-    post-write fencing probe raises, so the fenced pipeline dies loudly
-    instead of continuing to publish over the new owner."""
+    fencing probe between the data write and the publish raises, so the
+    fenced pipeline dies loudly and publishes nothing over the new
+    owner."""
     path = str(tmp_path / "t")
     w1 = KeyedTable(spark, path, keys=["id"], writer_id="w1")
     w1.upsert(_mk(spark, [(1, "a", "c", 1)]))
 
     class MidCommitTakeover(KeyedTable):
-        def _write(self, df, parts=None, *, reads_table=False):
-            self._lease.ensure(self.take_over)
-            df_writer = df.write.mode("overwrite")
-            df_writer.parquet(self.path)
-            # Takeover lands between the data write and the post-check.
+        def _write_data(self, df, data_dir):
+            super()._write_data(df, data_dir)
+            # Takeover lands between the data write and the publish.
             WriterLease(self.spark, self.path, "usurper").ensure(take_over=True)
-            self._lease.check()
 
     victim = MidCommitTakeover(spark, path, keys=["id"], writer_id="w1")
     with pytest.raises(ConcurrentWriterError, match="fenced during a commit"):
         victim.upsert(_mk(spark, [(1, "b", "u", 2)]))
+    # The fenced commit published nothing.
+    assert {(r.id, r.v) for r in w1.read().select("id", "v").collect()} == {(1, "a")}
 
 
 def test_lease_survives_protocol_pointer(spark, tmp_path, monkeypatch):

@@ -245,20 +245,16 @@ def _spark_state(df, cols) -> dict:
 
 def _cow_table_state(spark, path: str, cols) -> dict:
     """Final-state read for the COW lanes THROUGH the table contract:
-    ``KeyedTable.read()`` applies the persisted schema sidecar (the
-    round-9 structural fix), so drift×partitioned tables verify without
-    per-case read options — which is the point: this read IS
-    the surface users get. MISSING/EMPTY maps to {} (the table's
-    EMPTY ≡ MISSING contract: a partitioned table whose rows were all
-    deleted has no parquet footers left)."""
-    from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
-        read_parquet_if_present,
-    )
+    ``KeyedTable.read()`` applies the tip version's schema, so
+    drift×partitioned tables verify without per-case read options —
+    which is the point: this read IS the surface users get. A table that
+    does not exist maps to {}, and so does one whose partitions deletes
+    emptied (the table's EMPTY ≡ MISSING contract)."""
     from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
 
-    if read_parquet_if_present(spark, path) is None:
-        return {}
     table = KeyedTable(spark, path, keys=["id"], ordering=["_lsn"])
+    if not table.exists():
+        return {}
     return _spark_state(table.read(), cols)
 
 
@@ -525,21 +521,17 @@ class _CrashArm:
 def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     """CRASH-INJECTION lane: the COW scenario space driven straight at
     ``KeyedTable.upsert`` (the hist variant's direct-drive shape), with a
-    simulated process kill at a random point in the commit path — the
-    schema-sidecar publish or the parquet write, before OR after the call
+    simulated process kill at a random step of the commit — the data
+    write, the version publish or the sweep, before OR after the step
     completes — followed by foreachBatch's redelivery of the same batch.
-    This is the torn-commit class the clean lanes never reach: the
-    round-9 two-phase schema commit exists precisely because a crash
-    between a widening table-replace write and its publish used to serve
-    the new data through the stale-narrow sidecar and lose the drifted
-    column on the next rewrite. Invariants: the table stays READABLE
+    This is the torn-commit class the clean lanes never reach: a kill
+    after the data write and before the publish must leave the previous
+    version (its data and its schema) served, and a kill after the
+    publish must serve the new one. Invariants: the table stays READABLE
     after every injected crash (no torn unreadable state), and after
     redelivery the final state equals the dict-replay oracle — crashes
     composed with drift, partitioning, deletes and replays exactly as the
     generator deals them."""
-    from debezium_emr_hudi_deltastreamer_sample_spark.fsutil import (
-        read_parquet_if_present,
-    )
     from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
 
     sc = CdcGen(seed).scenario()
@@ -549,10 +541,8 @@ def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     table = KeyedTable(
         spark, path, keys=["id"], ordering=["_lsn"], op_col="op",
         partition_by=["department"] if sc["partitioned"] else [],
-        # keep_history composes the crash axis with the snapshot-publish
-        # path — kills land inside _publish_snapshot too (below), driving
-        # the embedded schema-as-of commit windows (stage write → embed →
-        # publish) under redelivery.
+        # keep_history composes the crash axis with time travel: every
+        # surviving version must stay readable with its own schema.
         keep_history=24 if sc["keep_history"] else 0,
     )
     for i, batch in enumerate(sc["batches"]):
@@ -566,11 +556,7 @@ def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
             # First delivery dies mid-commit; kth may exceed the path's
             # call count (then no crash fires — the rng explores both).
             arm = _CrashArm(
-                [
-                    (table, "_write"),
-                    (table.schema_sidecar, "publish"),
-                    (table, "_publish_snapshot"),
-                ],
+                [(table, "_write_data"), (table, "_publish"), (table, "_sweep")],
                 kth=r.randint(1, 4),
                 after=r.random() < 0.5,
             )
@@ -580,7 +566,6 @@ def _crash(spark, seed: int, case_dir: str) -> tuple[bool, str]:
                 except _InjectedCrash:
                     pass
             try:
-                read_parquet_if_present(spark, path)
                 if table.exists():
                     table.read().collect()
             except Exception as exc:  # noqa: BLE001 — any read crash is the bug
@@ -993,6 +978,7 @@ def _scd2(spark, seed: int, case_dir: str) -> tuple[bool, str]:
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.pipeline import (
         scd2_batch_processor,
     )
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
 
     sc = gen_scd2(seed)
     spark = _case_session(spark)
@@ -1021,7 +1007,7 @@ def _scd2(spark, seed: int, case_dir: str) -> tuple[bool, str]:
             r["k"], r["a"], r["valid_from"], r["valid_from_id"],
             r["valid_to"], r["is_current"],
         )
-        for r in spark.read.parquet(path).collect()
+        for r in KeyedTable(spark, path, keys=["k"]).read().collect()
     }
     if got != want:
         missing = sorted(want - got, key=repr)[:3]

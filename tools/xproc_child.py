@@ -44,6 +44,9 @@ Modes (argv[1]):
     process (the Hudi offline-compactor shape — deliberately NOT
     lease-guarded). Prints ``COMPACT <i> <epoch_ms_done>`` per round.
 
+``read <table>``
+    Print ``RESULT <sorted (id, v) json>`` of a KeyedTable's tip version.
+
 ``morread <table>``
     Print ``RESULT <sorted (id, v) json>`` of the merged MOR view.
 """
@@ -97,9 +100,10 @@ def _pipeline(workdir: str, ckpt_name: str) -> int:
             spark.stop()
             return 3
         raise
-    rows = sorted(
-        (r.id, r.v) for r in spark.read.parquet(f"{workdir}/table").collect()
-    )
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
+
+    table = KeyedTable(spark, f"{workdir}/table", keys=["id"])
+    rows = sorted((r.id, r.v) for r in table.read().collect())
     print("RESULT " + json.dumps(rows), flush=True)
     spark.stop()
     return 0
@@ -213,6 +217,17 @@ def _morcompact(table_path: str, rounds: int, jitter_ms: int) -> int:
     return 0
 
 
+def _read(table_path: str) -> int:
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import KeyedTable
+
+    spark = _spark(f"xproc-read-{os.getpid()}", os.path.dirname(table_path))
+    t = KeyedTable(spark, table_path, keys=["id"])
+    rows = sorted((r.id, r.v) for r in t.read().select("id", "v").collect())
+    print("RESULT " + json.dumps(rows), flush=True)
+    spark.stop()
+    return 0
+
+
 def _morread(table_path: str) -> int:
     from debezium_emr_hudi_deltastreamer_sample_spark.table import DeltaLogTable
 
@@ -259,6 +274,8 @@ def main() -> int:
             int(sys.argv[3]),
             int(sys.argv[4]) if len(sys.argv) > 4 else 0,
         )
+    if mode == "read":
+        return _read(sys.argv[2])
     if mode == "morread":
         return _morread(sys.argv[2])
     raise SystemExit(f"unknown mode {mode!r}")
