@@ -33,10 +33,13 @@ atomically) — so there is NO visible-but-unresolved window: an
 incremental publisher that merges from the newest resolved commit can
 never observe a claimed-newer-but-empty tip from a LIVE writer and
 build past it (that was a silent lost update; see pointer_commit).
-An empty or unreadable pointer therefore has one meaning: NEVER
-PUBLISHED (a crashed claim from an older two-step writer, or an external
-tool). Readers skip it, name allocation counts it, retention removes it,
-and nothing waits on it. Stores that can neither hard-link nor
+An empty pointer therefore has one meaning: NEVER PUBLISHED (a crashed
+claim from an older two-step writer, or an external tool). Readers skip
+it, name allocation counts it, retention removes it, and nothing waits
+on it. A pointer that exists but cannot be read is NOT taken for one:
+it may be the tip, and a publisher that skipped it would build on the
+version below and win the next name — so the listing raises, as it does
+for any listing failure other than not-found. Stores that can neither hard-link nor
 conditionally create REFUSE the pointer protocol loudly
 (``_require_conditional_create``) instead of silently degrading the
 CAS to exists-check + PUT, where two writers can both "win" a name.
@@ -373,20 +376,31 @@ def publish_commit(fs, hpath, stage: str, target: str) -> bool:
     return rename_commit(fs, hpath, stage, target)
 
 
+def is_not_found(e: BaseException) -> bool:
+    """Is ``e`` a FileSystem not-found, raised in Python or through py4j?"""
+    return "FileNotFound" in type(e).__name__ or "FileNotFound" in str(e)
+
+
 def list_commits(fs, hpath, spark, dir_path: str) -> list[tuple[str, str | None]]:
     """Commits under ``dir_path`` as (name, content_uri) pairs, unsorted —
     callers filter by their name pattern and sort. Directory members are
     rename-protocol commits (content = the directory itself); ``*.commit``
     files are pointers (content = the staged dir they name, or None for a
-    pointer that was never published — callers skip None for reads but
-    still treat the NAME as allocated). One listing plus one small-file
-    read per pointer; rename-protocol tables pay no extra I/O."""
+    pointer that was never published or that retention removed after the
+    listing — callers skip None for reads but still treat the NAME as
+    allocated). One listing plus one small-file read per pointer;
+    rename-protocol tables pay no extra I/O.
+
+    A missing directory lists as empty; any other failure RAISES. A short
+    listing, or an unreadable pointer taken for never published, would
+    let a publisher build on an older commit and win the name past the
+    one it missed: a lost update with no error."""
     try:
-        if not fs.exists(hpath(dir_path)):
-            return []
         listed = fs.listStatus(hpath(dir_path))
-    except Exception:
-        return []
+    except Exception as e:  # noqa: BLE001 — map only not-found to empty
+        if is_not_found(e):
+            return []
+        raise
     dirs: dict[str, str] = {}
     ptrs: dict[str, str | None] = {}
     for st in listed:
@@ -394,11 +408,8 @@ def list_commits(fs, hpath, spark, dir_path: str) -> list[tuple[str, str | None]
         if st.isDirectory():
             dirs[name] = str(st.getPath())
         elif name.endswith(".commit"):
-            try:
-                data = read_small_file(fs, hpath, spark, str(st.getPath()))
-                content = data.decode("utf-8").strip() if data else None
-            except Exception:
-                content = None
+            data = read_small_file(fs, hpath, spark, str(st.getPath()))
+            content = data.decode("utf-8").strip() if data else None
             if content and not fs.exists(hpath(content)):
                 content = None  # retention deleted the content first: torn
             ptrs[name[: -len(".commit")]] = content or None
@@ -597,12 +608,14 @@ def write_small_file(fs, hpath, path: str, data: bytes) -> None:
 
 
 def read_small_file(fs, hpath, spark, path: str) -> bytes | None:
-    """Read one small file fully, or None when missing. Corrupt/unreadable
-    content raises at the caller's json/schema parse — callers treat that
-    as 'no sidecar' and fall back to footer inference."""
-    if not fs.exists(hpath(path)):
-        return None
-    stream = fs.open(hpath(path))
+    """Read one small file fully, or None when it is missing (including
+    deleted between a listing and this read). Any other failure raises."""
+    try:
+        stream = fs.open(hpath(path))
+    except Exception as e:  # noqa: BLE001 — map only not-found to None
+        if is_not_found(e):
+            return None
+        raise
     try:
         return bytes(
             spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
@@ -653,7 +666,7 @@ def parquet_data_exists(spark, path: str) -> bool:
                 return True
             saw_visible = True
     except Exception as e:  # noqa: BLE001 — map only not-found to False
-        if "FileNotFound" in type(e).__name__ or "FileNotFound" in str(e):
+        if is_not_found(e):
             return False
         raise
     if saw_visible:

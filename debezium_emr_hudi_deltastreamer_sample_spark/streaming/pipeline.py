@@ -354,9 +354,11 @@ def scd2_batch_processor(
 
     Scale: every step hashes on the key — one exchange per batch over
     batch-plus-open-rows, never the full history re-sorted. Each batch is
-    one ``KeyedTable`` replace: the fold reads the tip version, writes the
-    new history once and publishes it against that version, so a killed
-    batch leaves the previous version served and redelivery converges.
+    one ``KeyedTable.replace``: the fold reads the tip version (before the
+    first one, the parquet an earlier writer left at the path, which it
+    adopts), writes the new history once and publishes it against that
+    version, so a killed batch leaves the previous version served and
+    redelivery converges.
 
     Each batch runs as the table's single writer (``WriterLease``). Run
     the processor under ``start_pipeline`` (or ``table.
@@ -387,90 +389,91 @@ def scd2_batch_processor(
         changes = b.filter(
             (F.col("_pos") == 1) | ~F.col(attr).eqNullSafe(F.col("_prev"))
         ).drop("_prev", "_pos")
-        # The fold's base is the tip version (none: the first batch). Its
-        # publish is a CAS on that version, so a fold over a stale history
-        # is never published.
         from ..table import KeyedTable
 
-        table = KeyedTable(spark, table_path, keys=[key, "valid_from", "valid_from_id"])
-        entries, tip = table._base()
-        hist = None if tip is None else table._read_version(tip)
-        if hist is not None:
-            open_rows = hist.filter("is_current").select(
-                key,
-                F.col(attr).alias("_open_attr"),
-                F.col("valid_from").alias("_open_from"),
-                F.col("valid_from_id").alias("_open_fid"),
-            )
-            changes = (
-                changes.join(open_rows, key, "left")
-                .filter(
-                    F.col("_open_from").isNull()
-                    | (F.col(ts_col) > F.col("_open_from"))
-                    | (
-                        (F.col(ts_col) == F.col("_open_from"))
-                        & (F.col(tiebreak) > F.col("_open_fid"))
+        def fold(hist: DataFrame | None) -> DataFrame | None:
+            # ``hist`` is the current history: the tip version, parquet an
+            # earlier writer left at the path, or None before the first
+            # batch. The replace publishes against the version it came
+            # from, so a fold over a stale history is never published.
+            fresh = changes
+            if hist is not None:
+                open_rows = hist.filter("is_current").select(
+                    key,
+                    F.col(attr).alias("_open_attr"),
+                    F.col("valid_from").alias("_open_from"),
+                    F.col("valid_from_id").alias("_open_fid"),
+                )
+                fresh = (
+                    fresh.join(open_rows, key, "left")
+                    .filter(
+                        F.col("_open_from").isNull()
+                        | (F.col(ts_col) > F.col("_open_from"))
+                        | (
+                            (F.col(ts_col) == F.col("_open_from"))
+                            & (F.col(tiebreak) > F.col("_open_fid"))
+                        )
                     )
-                )
-                .withColumn("_rn", F.row_number().over(w))
-                # Suppress the no-op first change ONLY for keys that have
-                # an open row (_open_from IS NOT NULL): eqNullSafe keeps
-                # plain =='s three-valued logic from dropping first
-                # versions, but alone it over-matches the OTHER way — a
-                # key first seen with a NULL attr has NULL _open_attr, and
-                # eqNullSafe(NULL, NULL) is TRUE, so that key's first
-                # version vanished while the first-ever-batch branch
-                # recorded it (behavior diverged on identical input).
-                .filter(
-                    ~(
-                        (F.col("_rn") == 1)
-                        & F.col("_open_from").isNotNull()
-                        & F.col(attr).eqNullSafe(F.col("_open_attr"))
+                    .withColumn("_rn", F.row_number().over(w))
+                    # Suppress the no-op first change ONLY for keys that
+                    # have an open row (_open_from IS NOT NULL): eqNullSafe
+                    # keeps plain =='s three-valued logic from dropping
+                    # first versions, but alone it over-matches the OTHER
+                    # way — a key first seen with a NULL attr has NULL
+                    # _open_attr, and eqNullSafe(NULL, NULL) is TRUE, so
+                    # that key's first version vanished while the
+                    # first-ever-batch branch recorded it (behavior
+                    # diverged on identical input).
+                    .filter(
+                        ~(
+                            (F.col("_rn") == 1)
+                            & F.col("_open_from").isNotNull()
+                            & F.col(attr).eqNullSafe(F.col("_open_attr"))
+                        )
                     )
+                    .drop("_rn", "_open_attr", "_open_from", "_open_fid")
                 )
-                .drop("_rn", "_open_attr", "_open_from", "_open_fid")
-            )
-        if not changes.head(1):
-            return
-        new_versions = (
-            changes.select(
-                key,
-                attr,
-                F.col(ts_col).alias("valid_from"),
-                F.col(tiebreak).alias("valid_from_id"),
-            )
-            .withColumn(
-                "valid_to",
-                F.lead("valid_from").over(
-                    Window.partitionBy(key).orderBy("valid_from", "valid_from_id")
-                ),
-            )
-            .withColumn("is_current", F.col("valid_to").isNull())
-        )
-        if hist is not None:
-            firsts = new_versions.groupBy(key).agg(
-                F.min(F.struct("valid_from", "valid_from_id"))["valid_from"].alias(
-                    "_first_from"
+            if not fresh.head(1):
+                return None
+            new_versions = (
+                fresh.select(
+                    key,
+                    attr,
+                    F.col(ts_col).alias("valid_from"),
+                    F.col(tiebreak).alias("valid_from_id"),
                 )
-            )
-            closed = (
-                hist.join(firsts, key, "left")
                 .withColumn(
                     "valid_to",
-                    F.when(
-                        F.col("is_current") & F.col("_first_from").isNotNull(),
-                        F.col("_first_from"),
-                    ).otherwise(F.col("valid_to")),
+                    F.lead("valid_from").over(
+                        Window.partitionBy(key).orderBy("valid_from", "valid_from_id")
+                    ),
                 )
-                .withColumn(
-                    "is_current",
-                    F.col("is_current") & F.col("_first_from").isNull(),
-                )
-                .select(*cols)
+                .withColumn("is_current", F.col("valid_to").isNull())
             )
-            out = closed.unionByName(new_versions.select(*cols))
-        else:
-            out = new_versions.select(*cols)
-        table._commit(out, entries, tip)
+            if hist is not None:
+                firsts = new_versions.groupBy(key).agg(
+                    F.min(F.struct("valid_from", "valid_from_id"))["valid_from"].alias(
+                        "_first_from"
+                    )
+                )
+                closed = (
+                    hist.join(firsts, key, "left")
+                    .withColumn(
+                        "valid_to",
+                        F.when(
+                            F.col("is_current") & F.col("_first_from").isNotNull(),
+                            F.col("_first_from"),
+                        ).otherwise(F.col("valid_to")),
+                    )
+                    .withColumn(
+                        "is_current",
+                        F.col("is_current") & F.col("_first_from").isNull(),
+                    )
+                    .select(*cols)
+                )
+                return closed.unionByName(new_versions.select(*cols))
+            return new_versions.select(*cols)
+
+        KeyedTable(spark, table_path, keys=[key, "valid_from", "valid_from_id"]).replace(fold)
 
     return process

@@ -41,7 +41,7 @@ import json
 import sys
 import threading
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from typing import NamedTuple
 
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsutil import Commit, CommitLog
+from .fsutil import Commit, CommitLog, is_not_found
 from .operators.merge import cdc_meta_columns, merge_upsert
 
 
@@ -553,14 +553,16 @@ def hudi_available(spark: SparkSession) -> bool:
 class _Version(NamedTuple):
     """One published table version: the commit it was published as, the
     id of the data directory it wrote, its schema, the data directories
-    it reads (relative to ``{path}/_data``) and the ``[name, id]`` of the
-    version it was built on."""
+    it reads (relative to ``{path}/_data``), the ``[name, id]`` of the
+    version it was built on, and the ``_v=<id>`` roots whose every
+    partition it reads (read as one path each)."""
 
     commit: Commit | None
     id: str
     schema: T.StructType
     dirs: list[str]
     parent: list[str] | None
+    whole: list[str]
 
 
 class KeyedTable:
@@ -635,16 +637,18 @@ class KeyedTable:
 
     def _version(self, c: Commit) -> _Version | None:
         """The manifest of one published commit, or None when retention
-        removed it after the listing."""
+        removed it after the listing. A manifest that exists but cannot
+        be read raises: taken for retired, the tip's would make the
+        version below it the base of the next commit."""
         from .fsutil import read_small_file
 
         fs, hpath = self._log.fs()
-        try:
-            m = json.loads(read_small_file(fs, hpath, self.spark, f"{c.uri}/_version.json"))
-        except Exception:
+        data = read_small_file(fs, hpath, self.spark, f"{c.uri}/_version.json")
+        if data is None:
             return None
+        m = json.loads(data)
         schema = T.StructType.fromJson(m["schema"])
-        return _Version(c, m["id"], schema, m["dirs"], m["parent"])
+        return _Version(c, m["id"], schema, m["dirs"], m["parent"], m["whole"])
 
     def _tip(self) -> tuple[list[Commit], _Version | None]:
         """The version log's listing and the newest version on it (None:
@@ -684,21 +688,25 @@ class KeyedTable:
         """``v``'s rows, or only those in ``dirs``, with ``v``'s schema in
         its column order. An unpartitioned version is one plain directory.
         Partition directories from several commits are read under one
-        ``basePath``, so every path has the same ``_v=<id>/k=v`` structure;
-        Spark puts the pseudo-column ``_v`` and the partition columns
-        last, so the columns are selected back into order."""
-        dirs = v.dirs if dirs is None else dirs
+        ``basePath``, so every path has the same ``_v=<id>/k=v`` structure
+        below it; a root the version reads whole is one path, which saves
+        Spark a listing per partition. Spark puts the pseudo-column ``_v``
+        and the partition columns last, so the columns are selected back
+        into order."""
+        if dirs is None:
+            whole = set(v.whole)
+            dirs = sorted(whole) + [d for d in v.dirs if d.partition("/")[0] not in whole]
         if not dirs:
             return self.spark.createDataFrame([], v.schema)
         paths = [f"{self._data}/{d}" for d in dirs]
-        if not any("/" in d for d in dirs):
+        if not any("/" in d for d in v.dirs):
             return self.spark.read.schema(v.schema).parquet(*paths)
         read_schema = T.StructType(v.schema.fields + [T.StructField("_v", T.StringType())])
         return (
             self.spark.read.schema(read_schema)
             .option("basePath", self._data)
             .parquet(*paths)
-            .select(*[F.col(f"`{n}`") for n in v.schema.fieldNames()])
+            .selectExpr(*[f"`{n}`" for n in v.schema.fieldNames()])
         )
 
     def _read_external(self) -> DataFrame:
@@ -789,7 +797,9 @@ class KeyedTable:
             for d in dirs:
                 try:
                     listed = fs.listStatus(hpath(f"{self._data}/{d}"))
-                except Exception:  # an empty write may leave no directory
+                except Exception as e:  # an empty write may leave no directory
+                    if not is_not_found(e):
+                        raise
                     listed = []
                 below += [
                     f"{d}/{st.getPath().getName()}"
@@ -843,17 +853,22 @@ class KeyedTable:
         fs, hpath = hadoop_fs(self.spark, self._data)
         try:
             before = {st.getPath().getName() for st in fs.listStatus(hpath(self._data))}
-        except Exception:  # the table's first commit: no data dir yet
+        except Exception as e:  # the table's first commit: no data dir yet
+            if not is_not_found(e):
+                raise
             before = set()
         vid = uuid.uuid4().hex
         self._write_data(df, f"{self._data}/_v={vid}")
         dirs = self._written_dirs(vid)
+        whole = [f"_v={vid}"] if dirs else []
         schema = df.schema
         if touched is not None:
+            cut = {d.partition("/")[0] for d in tip.dirs if d.partition("/")[2] in touched}
+            whole += [r for r in tip.whole if r not in cut]
             dirs = [d for d in tip.dirs if d.partition("/")[2] not in touched] + dirs
             schema = _union_schema(tip.schema, schema)
         parent = [tip.commit.name, tip.id] if tip else None
-        version = _Version(None, vid, schema, dirs, parent)
+        version = _Version(None, vid, schema, dirs, parent, whole)
         # A takeover that landed during the write fences this writer
         # before anything becomes visible.
         self._lease.check()
@@ -875,7 +890,7 @@ class KeyedTable:
 
         manifest = json.dumps(
             {"id": version.id, "schema": version.schema.jsonValue(),
-             "dirs": version.dirs, "parent": version.parent}
+             "dirs": version.dirs, "parent": version.parent, "whole": version.whole}
         )
         stage = f"{self._data}/_v={version.id}/_version_{version.id}"
         if not fsutil.swap_table_dir(self._log, entries, stage, manifest, self._keep()):
@@ -903,6 +918,26 @@ class KeyedTable:
     def init(self, df: DataFrame) -> None:
         """Create/replace the table from a snapshot."""
         self._commit(df, *self._base())
+
+    def replace(self, fn: Callable[[DataFrame | None], DataFrame | None]) -> None:
+        """Replace the table with ``fn(current)`` in one commit, where
+        ``current`` is the tip's rows, the external parquet a directory
+        with no version holds (adopted, as by ``upsert``), or None. ``fn``
+        returning None commits nothing. The publish is a CAS on the
+        version ``current`` came from: a lost one raises
+        ``ConcurrentWriterError``, so stale rows are never published."""
+        from .fsutil import parquet_data_exists
+
+        entries, tip = self._base()
+        if tip is not None:
+            current = self._read_version(tip)
+        elif parquet_data_exists(self.spark, self.path):
+            current = self._read_external()
+        else:
+            current = None
+        out = fn(current)
+        if out is not None:
+            self._commit(out, entries, tip)
 
     def upsert(self, changes: DataFrame) -> None:
         """Apply a CDC change batch (B5/B6/B8/B11).
@@ -1239,11 +1274,10 @@ class DeltaLogTable:
         # Refuse up front (single-writer ingest): a fenced writer must not
         # even widen the delta sidecar; _write_delta re-checks.
         self._ensure_lease()
-        # Widen the sidecar BEFORE the append (same crash-ordering
-        # rationale as KeyedTable.upsert's publish-before-write): a
-        # drifted batch on disk under a stale-narrow sidecar would vanish
-        # the new column from the merge-on-read view — and from the next
-        # compaction's folded base, permanently.
+        # Widen the sidecar BEFORE the append: a drifted batch on disk
+        # under a stale-narrow sidecar would vanish the new column from the
+        # merge-on-read view — and from the next compaction's folded base,
+        # permanently.
         self.delta_schema_sidecar.publish(changes.schema)
         self._write_delta(changes, batch_id)
         if self.auto_compact_deltas:

@@ -1227,6 +1227,43 @@ def test_scd2_fold_replay_idempotent(spark, tmp_path):
     assert u3 == [("view", False), ("buy", True)]
 
 
+def test_scd2_fold_adopts_a_plain_parquet_history(spark, tmp_path):
+    """A history written as plain parquet at the path (by an earlier
+    writer, before the table had versions) is the fold's base: the next
+    batch closes its open version and appends, and no row of the old
+    history is lost."""
+    import datetime as dt
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.streaming.pipeline import (
+        scd2_batch_processor,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    at = lambda m: t0 + dt.timedelta(minutes=m)  # noqa: E731
+    path = str(tmp_path / "scd2")
+    spark.createDataFrame(
+        [(1, "view", at(0), 1, at(5), False), (1, "click", at(5), 2, None, True),
+         (2, "view", at(0), 3, None, True)],
+        "user_id bigint, event_type string, valid_from timestamp, "
+        "valid_from_id bigint, valid_to timestamp, is_current boolean",
+    ).write.parquet(path)
+    batch = spark.createDataFrame(
+        [(4, at(10), 1, "buy"), (5, at(10), 2, "view")],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string",
+    )
+    scd2_batch_processor(path)(batch, 0)
+    got = sorted(
+        (r.user_id, r.event_type, r.valid_from_id, r.valid_to, r.is_current)
+        for r in _read_table(spark, path).collect()
+    )
+    assert got == [
+        (1, "buy", 4, None, True),
+        (1, "click", 2, at(10), False),
+        (1, "view", 1, at(5), False),
+        (2, "view", 3, None, True),  # user 2's view is a no-op: suppressed
+    ]
+
+
 def test_scd2_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     """Checkpointed SCD2 maintenance across process restarts: fold batch 1,
     stop, add batch 2, restart on the SAME checkpoint — batch 1 must not

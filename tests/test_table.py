@@ -57,8 +57,9 @@ def test_partitioned_cow_rewrites_only_touched_partition(spark, tmp_path):
     assert state(t) == {1: ("eu", 11), 2: ("us", 20), 3: ("ap", 30)}
     # eu rewritten, ap untouched (the COW file-group property): the new
     # version reads ap's files by reference.
-    assert files("region=eu") and files("region=eu") != eu_files_before
+    assert files("region=eu") and not files("region=eu") & eu_files_before
     assert files("region=ap") == ap_files_before
+    assert t.read().count() == 3
 
 
 def test_delete_whole_partition_not_stale(spark, tmp_path):

@@ -208,7 +208,7 @@ def test_snapshots_skip_an_entry_off_the_tip_chain(spark, tmp_path, monkeypatch,
     v0 = t._log.entries()[0]
     orphan = {
         "id": "feedface", "schema": t.read().schema.jsonValue(),
-        "dirs": t._tip()[1].dirs, "parent": [v0.name, t._version(v0).id],
+        "dirs": t._tip()[1].dirs, "parent": [v0.name, t._version(v0).id], "whole": [],
     }
     import json
 
@@ -219,6 +219,68 @@ def test_snapshots_skip_an_entry_off_the_tip_chain(spark, tmp_path, monkeypatch,
     with pytest.raises(FileNotFoundError):
         t.read(as_of=1)
     assert sorted((r.id, r.v) for r in t.read(as_of=2).collect()) == AFTER_B2
+
+
+class _Blip(OSError):
+    """An injected FileSystem failure that is not a not-found."""
+
+
+class _BlipFs:
+    """A FileSystem whose ``op`` fails on every path ``hit`` matches."""
+
+    def __init__(self, fs, op, hit):
+        self._fs, self._op, self._hit = fs, op, hit
+
+    def __getattr__(self, name):
+        real = getattr(self._fs, name)
+        if name != self._op:
+            return real
+
+        def call(p, *args):
+            if self._hit(str(p)):
+                raise _Blip(f"injected {name} failure on {p}")
+            return real(p, *args)
+
+        return call
+
+
+@pytest.mark.parametrize("fault", ["read-tip", "list-log"])
+@pytest.mark.parametrize("protocol", PROTOCOLS)
+def test_unreadable_version_log_refuses_the_commit(spark, tmp_path, monkeypatch, protocol, fault):
+    """A version log that cannot be read is never taken for a shorter
+    one. With the tip's pointer (pointer) or manifest (rename) unreadable,
+    or the log's listing failing, ``upsert`` and ``exists()`` raise; the
+    commit writes, publishes and deletes nothing, and once the store
+    recovers the tip is intact and the batch applies on it. Read as "no
+    tip", the commit would merge on the version below, win the next name
+    and sweep the skipped version's data."""
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    path = str(tmp_path / "t")
+    t = _table(spark, path)
+    t.upsert(_batch(spark, B1))
+    t.upsert(_batch(spark, B2))  # the tip: s000000000001
+    names, dirs = [c.name for c in t._log.entries()], _data_dirs(path)
+    if fault == "read-tip":
+        op, hit = "open", lambda p: "/_versions/s000000000001" in p
+    else:
+        op, hit = "listStatus", lambda p: p.endswith("/_versions")
+    real = fsutil.hadoop_fs
+
+    def blipping(spark_, p):
+        fs, hpath = real(spark_, p)
+        return _BlipFs(fs, op, hit), hpath
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fsutil, "hadoop_fs", blipping)
+        with pytest.raises(_Blip):
+            t.exists()
+        with pytest.raises(_Blip):
+            t.upsert(_batch(spark, [(1, "X", 9, "u")]))
+    assert [c.name for c in t._log.entries()] == names
+    assert _data_dirs(path) == dirs
+    assert _state(t) == AFTER_B2
+    t.upsert(_batch(spark, [(1, "X", 9, "u")]))
+    assert _state(t) == [(1, "X"), (2, "B"), (3, "c")]
 
 
 def test_linked_snapshots_survive_rewrites_and_retention(spark, tmp_path):
