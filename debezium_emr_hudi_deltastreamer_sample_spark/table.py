@@ -714,6 +714,19 @@ class KeyedTable:
         yet): every footer is merged. Its first commit adopts it."""
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
+    def _current(self, tip: _Version | None) -> DataFrame | None:
+        """The rows a commit on ``tip`` builds on: the tip's, or with no
+        version the external parquet the directory holds; None when the
+        directory holds neither. ``upsert`` and ``replace`` decide this
+        here, so they agree on what an unversioned directory holds."""
+        from .fsutil import parquet_data_exists
+
+        if tip is not None:
+            return self._read_version(tip)
+        if parquet_data_exists(self.spark, self.path):
+            return self._read_external()
+        return None
+
     # -- read ---------------------------------------------------------------
 
     def exists(self) -> bool:
@@ -926,16 +939,8 @@ class KeyedTable:
         returning None commits nothing. The publish is a CAS on the
         version ``current`` came from: a lost one raises
         ``ConcurrentWriterError``, so stale rows are never published."""
-        from .fsutil import parquet_data_exists
-
         entries, tip = self._base()
-        if tip is not None:
-            current = self._read_version(tip)
-        elif parquet_data_exists(self.spark, self.path):
-            current = self._read_external()
-        else:
-            current = None
-        out = fn(current)
+        out = fn(self._current(tip))
         if out is not None:
             self._commit(out, entries, tip)
 
@@ -953,21 +958,16 @@ class KeyedTable:
         a delete cannot resurrect through an older insert. A directory of
         external parquet is merged into and adopted as the first version.
         """
-        from .fsutil import parquet_data_exists
-
         entries, tip = self._base()
-        touched = None
-        if tip is not None and tip.dirs:
-            if self.partition_by:
-                touched = self._touched(changes)
-                current = self._read_version(
-                    tip, [d for d in tip.dirs if d.partition("/")[2] in touched]
-                )
-            else:
-                current = self._read_version(tip)
-        elif tip is None and parquet_data_exists(self.spark, self.path):
-            current = self._read_external()
-        else:
+        touched, current = None, None
+        if tip is not None and tip.dirs and self.partition_by:
+            touched = self._touched(changes)
+            current = self._read_version(
+                tip, [d for d in tip.dirs if d.partition("/")[2] in touched]
+            )
+        elif tip is None or tip.dirs:
+            current = self._current(tip)
+        if current is None:
             current = self._empty_snapshot(changes)
         merged = merge_upsert(current, changes, self.keys, self.ordering, self.op_col)
         self._commit(merged, entries, tip, touched)
