@@ -381,6 +381,17 @@ def is_not_found(e: BaseException) -> bool:
     return "FileNotFound" in type(e).__name__ or "FileNotFound" in str(e)
 
 
+def is_lost_input(e: BaseException, path: str) -> bool:
+    """Did a read under ``path`` fail because its files vanished after the
+    caller listed them — a concurrent commit's retention retired the
+    version it planned against? Such a caller rebuilds on the new tip;
+    any other failure is its own and raises."""
+    msg = str(e)
+    return path in msg and (
+        is_not_found(e) or "FAILED_READ_FILE" in msg or "PATH_NOT_FOUND" in msg
+    )
+
+
 def list_commits(fs, hpath, spark, dir_path: str) -> list[tuple[str, str | None]]:
     """Commits under ``dir_path`` as (name, content_uri) pairs, unsorted —
     callers filter by their name pattern and sort. Directory members are
@@ -713,19 +724,21 @@ def recover_table_swap(spark, data_root: str, dead: set[str]) -> None:
         fs.delete(hpath(f"{data_root}/{name}"), True)
 
 
-def read_parquet_if_present(spark, path: str):
+def read_parquet_if_present(spark, path: str, reader=None):
     """Parquet read with the NARROW missing-vs-broken distinction used by
-    every bootstrap-or-merge decision (``parquet_data_exists``'s fallback):
-    returns the DataFrame, or None iff the table is MISSING/EMPTY
-    (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA). Any other read failure
-    (transient FS error, corrupt footer, permissions) RAISES — treating a
-    blip as "missing" would let the caller's bootstrap-overwrite wipe the
-    table down to one batch. One definition so a Spark upgrade that
-    renames a condition is fixed in one place."""
+    every bootstrap-or-merge decision (``parquet_data_exists``'s fallback)
+    and by the MOR table's base and delta reads: returns the DataFrame, or
+    None iff the table is MISSING/EMPTY (PATH_NOT_FOUND /
+    UNABLE_TO_INFER_SCHEMA). Any other read failure (transient FS error,
+    corrupt footer, permissions) RAISES — treating a blip as "missing"
+    would let the caller's bootstrap-overwrite wipe the table down to one
+    batch. One definition so a Spark upgrade that renames a condition is
+    fixed in one place. ``reader``: a configured ``DataFrameReader``
+    (schema, options); default ``spark.read``."""
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.parquet(path)
+        df = (reader or spark.read).parquet(path)
         df.schema  # force analysis so the probe happens HERE, not later
         return df
     except AnalysisException as e:

@@ -16,9 +16,11 @@ README.md:305), which makes upsert a no-op append; the engine defaults to the
 source PK with LSN ordering — the *intent* of the config — and keeps both
 configurable.
 
-Scale: one shuffle on the key per merge (the window dedup), then a key-joined
-merge. At 100 TB the base table should be written partitioned (io.sinks) so
-the COW rewrite touches only affected partitions, mirroring Hudi file groups.
+Scale: a merge is two key-partitioned windows and no join: the precombine
+shuffles the change batch, then one ``__pri`` window ranks snapshot ∪
+changes, which shuffles the snapshot once. At 100 TB the table should be
+partitioned (``KeyedTable(partition_by=...)``) so that the COW rewrite reads
+and writes only the partitions a batch touches, as Hudi file groups do.
 """
 
 from __future__ import annotations

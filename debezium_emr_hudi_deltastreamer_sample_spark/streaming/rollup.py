@@ -49,7 +49,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import CommitLog, read_small_file, write_small_file
+from ..fsutil import CommitLog, is_lost_input, read_small_file, write_small_file
 
 #: The applied-batch manifest inside every commit (named ``c<seq>``).
 _MANIFEST = "_applied.json"
@@ -229,32 +229,21 @@ class IncrementalRollup:
             if batch_id <= applied.get(run, -1):
                 return
             applied[run] = batch_id
-            partial = self._partials(df)
-            if tip is not None:
-                current = self.spark.read.parquet(tip)
-                merged = (
-                    current.unionByName(partial)
-                    .groupBy("bucket_start", *self.keys)
-                    .agg(
-                        F.sum("n").alias("n"),
-                        F.sum("total").alias("total"),
-                        F.min("vmin").alias("vmin"),
-                        F.max("vmax").alias("vmax"),
-                    )
-                )
-            else:
-                merged = partial
             stage = f"{self.path}__stage/{uuid.uuid4().hex}"
             # The staged write executes the merge plan exactly once (the
             # plan reads the PREVIOUS commit, the stage is fresh — no
             # read-under-overwrite), so no checkpoint materialization is
-            # needed; retention keeps the read commit alive through the
-            # write (keep_commits >= 2).
+            # needed. Retention keeps the read commit alive through the
+            # write (keep_commits >= 2) unless other runs land keep_commits
+            # commits meanwhile and retire it: that lost input is their
+            # progress, so this writer rebuilds on the new tip, as
+            # DeltaLogTable.compact does.
             # Any failure after staging deletes the stage (same
             # BaseException contract as DeltaLogTable.compact) — a
             # deterministically failing batch must not leak one uuid dir
             # per foreachBatch retry forever.
             try:
+                merged = self._merge(tip, self._partials(df))
                 merged.write.mode("overwrite").parquet(stage)
                 # The manifest goes INSIDE the stage, before the atomic
                 # publish — data and applied-batch record publish together
@@ -268,8 +257,10 @@ class IncrementalRollup:
                 committed = self._log.publish(
                     entries, stage, keep=self.keep_commits
                 )
-            except BaseException:
+            except BaseException as e:
                 fs.delete(hpath(stage), True)
+                if tip is not None and is_lost_input(e, self.path):
+                    continue
                 raise
             if committed:
                 return
@@ -283,6 +274,22 @@ class IncrementalRollup:
         raise RuntimeError(
             f"could not publish rollup commit for batch {batch_id} (run {run}) "
             f"after 5 attempts — persistent rename failures at {self._commits_dir()}"
+        )
+
+    def _merge(self, tip: str | None, partial: DataFrame) -> DataFrame:
+        """The rollup at ``tip`` (None: no commit yet) plus ``partial``."""
+        if tip is None:
+            return partial
+        return (
+            self.spark.read.parquet(tip)
+            .unionByName(partial)
+            .groupBy("bucket_start", *self.keys)
+            .agg(
+                F.sum("n").alias("n"),
+                F.sum("total").alias("total"),
+                F.min("vmin").alias("vmin"),
+                F.max("vmax").alias("vmax"),
+            )
         )
 
     def processor(self, run_id: str = "default"):

@@ -49,7 +49,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fsutil import Commit, CommitLog, is_not_found
+from .fsutil import (
+    Commit,
+    CommitLog,
+    is_lost_input,
+    is_not_found,
+    read_parquet_if_present,
+)
 from .operators.merge import cdc_meta_columns, merge_upsert
 
 
@@ -1149,14 +1155,14 @@ class DeltaLogTable:
         )
 
     def _read_dir(
-        self, p: str, strict: bool = False, schema: T.StructType | None = None
+        self, p: str, schema: T.StructType | None = None
     ) -> DataFrame | None:
-        """``strict`` distinguishes MISSING (→ None) from BROKEN (→ raise):
-        the compaction path must never treat a transient read failure as
-        an empty directory — swallowing it would publish a base whose
-        version name claims deltas it silently dropped, and the
-        ``ingest_batch > through`` filter would mask those committed rows
-        forever (the same missing-vs-broken probe the COW upsert uses).
+        """The parquet directory ``p``, or None when it is MISSING or holds
+        no data file. Any other failure RAISES: a read that took a
+        transient store error for "no deltas" would serve the compacted
+        base alone, and a compaction would publish a base whose version
+        name claims deltas it silently dropped (the ``ingest_batch >
+        through`` filter would then mask those committed rows forever).
         ``schema``: explicit read schema (a sidecar or an embedded commit
         schema — authoritative, stable under drift); without one the read
         merges footers."""
@@ -1165,15 +1171,7 @@ class DeltaLogTable:
             reader = reader.schema(schema)
         else:
             reader = reader.option("mergeSchema", "true")
-        if strict:
-            fs, hpath = self._fs()
-            if not fs.exists(hpath(p)):
-                return None
-            return reader.parquet(p)
-        try:
-            return reader.parquet(p)
-        except Exception:
-            return None
+        return read_parquet_if_present(self.spark, p, reader)
 
     def _fs(self):
         from .fsutil import hadoop_fs
@@ -1197,8 +1195,10 @@ class DeltaLogTable:
         fs, hpath = self._fs()
         try:
             listed = fs.listStatus(hpath(self._delta()))
-        except Exception:
-            return []
+        except Exception as e:  # noqa: BLE001 — map only not-found to empty
+            if is_not_found(e):
+                return []
+            raise
         all_ids, committed = [], []
         for s in listed:
             name = s.getPath().getName()
@@ -1380,7 +1380,6 @@ class DeltaLogTable:
         self,
         optimized: bool = False,
         _upper_batch: int | None = None,
-        _strict: bool = False,
     ) -> DataFrame:
         """Merge-on-read snapshot: base patched with the delta log.
 
@@ -1404,7 +1403,7 @@ class DeltaLogTable:
                     f"base version {ver[0]} at {self.path} was retired "
                     "during the read (retention keeps the 2 newest)"
                 )
-            base = self._read_dir(ver[2], strict=_strict, schema=schema)
+            base = self._read_dir(ver[2], schema=schema)
         if optimized:
             if base is None:
                 raise FileNotFoundError(
@@ -1412,9 +1411,7 @@ class DeltaLogTable:
                     "base (run compact() first)"
                 )
             return base
-        deltas = self._read_dir(
-            self._delta(), strict=_strict, schema=self._delta_read_schema()
-        )
+        deltas = self._read_dir(self._delta(), schema=self._delta_read_schema())
         if deltas is not None and through >= 0:
             # A version records the batch id it compacted THROUGH; delta
             # dirs at or below it are already folded into this base (they
@@ -1495,7 +1492,7 @@ class DeltaLogTable:
         two-process hunt): TWO compaction services on one table advance
         the version timeline twice as fast, so one service's in-flight
         merge can scan a delta dir the other's NEXT cycle just retired —
-        the strict read then fails with FAILED_READ_FILE (never a
+        the read then fails with FAILED_READ_FILE (never a
         silently row-short snapshot; see the ignoreMissingFiles pin
         below). That failure means the OTHER compactor folded those very
         deltas into a newer published version — progress, not damage — so
@@ -1507,19 +1504,13 @@ class DeltaLogTable:
             try:
                 return self._compact_once()
             except Exception as e:
-                msg = str(e)
-                lost_inputs = (
-                    isinstance(e, FileNotFoundError)
-                    or "FAILED_READ_FILE" in msg
-                    or "FileNotFoundException" in msg
-                ) and self.path in msg
-                if not lost_inputs or attempt == 2:
+                if not is_lost_input(e, self.path) or attempt == 2:
                     raise
         return None
 
     def _compact_once(self) -> None:
         """One compaction attempt — see ``compact`` for the contract."""
-        # The fail-safe story below leans on strict scans RAISING when a
+        # The fail-safe story below leans on scans RAISING when a
         # racing (out-of-process) compaction retires a file between this
         # listing and the stage write. spark.sql.files.ignoreMissingFiles
         # =true would turn that raise into a silently row-short published
@@ -1567,10 +1558,10 @@ class DeltaLogTable:
         # racing compaction's retention keeps the base version this plan
         # reads (two-newest rule). The former eager localCheckpoint here
         # computed the whole merge twice per compaction.
-        # _strict: a transient read failure must RAISE (async service
-        # retries next trigger), never collapse to "no base"/"no deltas" —
+        # A transient read failure RAISES in read() (async service retries
+        # next trigger), never collapses to "no base"/"no deltas" —
         # publishing from a silently-partial read is permanent data loss.
-        merged = self.read(_upper_batch=through, _strict=True)
+        merged = self.read(_upper_batch=through)
         if self.compact_target_files:
             merged = merged.coalesce(self.compact_target_files)
         stage = f"{self.path}/__stage/{uuid.uuid4().hex}"

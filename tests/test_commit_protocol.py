@@ -541,3 +541,100 @@ def test_rollup_false_loss_keeps_entry_and_applies_once(
     assert a._state()[1] == {"a": 0, "b": 0, "d": 0}
     [row] = a.read().collect()
     assert (row.n, row.total) == (3, 7.0)
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+@pytest.mark.parametrize("when", ["plan", "scan"])
+def test_rollup_rebuilds_when_its_tip_is_retired(
+    spark, tmp_path, monkeypatch, protocol, when
+):
+    """A lists tip c0; before A's merge is planned ("plan") or while its
+    planned scan is about to run ("scan"), run B commits c1 and c2, and
+    retention (keep_commits=2) retires c0. A's read of c0 fails; A must
+    rebuild on the new tip c2, not raise, and apply its batch once."""
+    from pyspark.sql import DataFrameWriter
+
+    roll, ev = _rollups(spark, tmp_path, monkeypatch, protocol)
+    a, b = roll(), roll()
+    a.apply_batch(ev(1.0), batch_id=0, run_id="b")  # c0
+
+    def rival():
+        for i, v in ((1, 2.0), (2, 4.0)):
+            b.apply_batch(ev(v), batch_id=i, run_id="b")
+
+    pending = [rival]
+    if when == "plan":
+        real_partials = a._partials
+
+        def partials(df):
+            if pending:
+                pending.pop()()
+            return real_partials(df)
+
+        a._partials = partials
+    else:
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            if pending:
+                pending.pop()()
+            return real_parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    a.apply_batch(ev(16.0), batch_id=0, run_id="a")
+    assert not pending  # the rival ran inside A's apply
+    assert [c.seq for c in a._log.entries()] == [2, 3]  # A built on c2
+    assert a._state()[1] == {"a": 0, "b": 2}
+    [row] = a.read().collect()
+    assert (row.n, row.total) == (4, 23.0)
+
+
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_mor_read_raises_a_delta_read_error(spark, tmp_path, monkeypatch, protocol):
+    """A store error on the delta log must reach the MOR reader. Taken for
+    "no deltas", it made ``read()`` serve the compacted base alone and
+    ``read_incremental`` report an empty log; only a missing directory is
+    empty."""
+    from pyspark.sql import DataFrameReader
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import DeltaLogTable
+
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "id int, v string, op string, _lsn long"
+    )
+    t = DeltaLogTable(spark, str(tmp_path / "mor"), keys=["id"])
+    t.append_changes(mk([(1, "b", "c", 1), (2, "x", "c", 2)]), 0)
+    t.compact()  # base {1:b, 2:x}
+    t.append_changes(mk([(1, "z", "u", 3), (3, "new", "c", 4)]), 1)
+    rows = lambda df: {(r.id, r.v) for r in df.select("id", "v").collect()}  # noqa: E731
+    assert rows(t.read()) == {(1, "z"), (2, "x"), (3, "new")}
+
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **kwargs):
+        if any(str(p).rstrip("/").endswith("/mor/delta") for p in paths):
+            raise OSError("injected delta read failure")
+        return real_parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    with pytest.raises(OSError, match="injected delta read failure"):
+        t.read()
+    with pytest.raises(OSError, match="injected delta read failure"):
+        t.read_incremental(0)
+    assert rows(t.read(optimized=True)) == {(1, "b"), (2, "x")}  # base only
+
+    class BrokenListing:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def listStatus(self, p):
+            raise OSError("injected listing failure")
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+    fs, hpath = t._fs()
+    monkeypatch.setattr(t, "_fs", lambda: (BrokenListing(fs), hpath))
+    with pytest.raises(OSError, match="injected listing failure"):
+        t.delta_batches()

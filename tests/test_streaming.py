@@ -1628,3 +1628,24 @@ def test_session_default_parse_guard():
     assert _session_default(_Session("200")) == 200
     assert _session_default(_Session("auto")) is None
     assert _session_default(_Session(None)) is None
+
+
+def test_streaming_modules_do_not_load_pandas():
+    """pandas is imported inside the two pandas-UDF bodies that use it,
+    so a process that only maintains tables through ``streaming`` (the
+    pipeline, IVM, rollup) never loads it: 61 MB of RSS on a bare import."""
+    import os
+    import subprocess
+    import sys
+
+    pkg = "debezium_emr_hudi_deltastreamer_sample_spark.streaming"
+    code = (
+        f"import sys, {pkg}.pipeline, {pkg}.ivm, {pkg}.rollup; "
+        "print('pandas' in sys.modules)"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip() == "False"

@@ -522,7 +522,7 @@ def test_mor_async_failure_recorded_and_stage_cleaned(spark, tmp_path):
         rows, "id int, v string, op string, _lsn long"
     )
     t.append_changes(mk([(1, "a", "c", 1)]), 0)
-    # (a) Corrupt the committed batch's data file: strict read raises.
+    # (a) Corrupt the committed batch's data file: the read raises.
     bdir = tmp_path / "mor_asyncfail" / "delta" / "ingest_batch=0"
     datafile = next(f for f in os.listdir(bdir) if f.endswith(".parquet"))
     with open(bdir / datafile, "rb") as f:
@@ -542,10 +542,8 @@ def test_mor_async_failure_recorded_and_stage_cleaned(spark, tmp_path):
     # execution, so the stage parquet job starts and dies — the cleanup
     # block must remove the partial stage dir and surface the error.
     class StageFailTable(DeltaLogTable):
-        def read(self, optimized=False, _upper_batch=None, _strict=False):
-            df = super().read(
-                optimized=optimized, _upper_batch=_upper_batch, _strict=_strict
-            )
+        def read(self, optimized=False, _upper_batch=None):
+            df = super().read(optimized=optimized, _upper_batch=_upper_batch)
             return df.withColumn(
                 "_boom", SF.assert_true(SF.lit(False), SF.lit("injected"))
             )
@@ -925,6 +923,48 @@ def test_ivm_repeated_refresh_compiles_no_new_classes(spark, tmp_path):
     # stray compilation by another test's background thread.
     assert min(added) == 0, added
     assert view_state(v) == {10: (1, 6, "a"), 11: (2, 6, "b")}
+
+
+def test_warm_upsert_tasks_allocate_small_pages(spark, tmp_path):
+    """A micro-batch task's execution memory is sized for its KB of data,
+    not for the heap: with session.PAGE_SIZE (2 MB) pages, every task of
+    a warm upsert of a few rows peaks at a few MB. Spark's heap-derived
+    default (32 MB pages on the test session's 6 GB heap) made a sorting
+    task of such an upsert allocate 64 MB, in humongous G1 objects."""
+    sc = spark.sparkContext
+    t = make_table(spark, tmp_path)
+    t.upsert(
+        spark.createDataFrame(
+            [(i, "eu" if i % 2 else "us", i, "c", i) for i in range(100)], CH_SCHEMA
+        )
+    )
+    batch = [(1, "eu", 7, "u", 200), (2, "us", None, "d", 201), (500, "us", 5, "c", 202)]
+    t.upsert(spark.createDataFrame(batch, CH_SCHEMA))  # warm the plans
+    group = f"warm-upsert-{os.getpid()}-{id(t)}"
+    sc.setJobGroup(group, "warm upsert")
+    try:
+        t.upsert(spark.createDataFrame(
+            [(k, r, v, op, lsn + 100) for k, r, v, op, lsn in batch], CH_SCHEMA
+        ))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    peaks = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            tasks = store.taskList(sid, info.currentAttemptId, 1 << 20)
+            for i in range(tasks.size()):
+                metrics = tasks.apply(i).taskMetrics()
+                if metrics.isDefined():
+                    peaks.append(metrics.get().peakExecutionMemory())
+    assert peaks, "the upsert ran no task in its job group"
+    # The busiest task holds two pages plus their pointer arrays: 4.1 MB
+    # measured with 2 MB pages, 64 MB with the default 32 MB ones.
+    assert max(peaks) <= 5 * 1024 * 1024, sorted(peaks)[-3:]
+    got = state(t)
+    assert (got[1], got[500], 2 in got, len(got)) == (("eu", 7), ("us", 5), False, 100)
 
 
 def test_ivm_dim_delete_retracts_inner_join_rows(spark, tmp_path):
